@@ -65,6 +65,11 @@ class FeatureConfig:
                        as-of merge path (skew handling).
     hot_key_threshold  a conv_id is "hot" when its row share exceeds this
                        fraction of the total (triggers salting).
+    merge_rows_per_bucket
+                       target rows per time-salt bucket in the as-of merge
+                       path: a conversation of n rows splits into
+                       ceil(n / merge_rows_per_bucket) time-range buckets
+                       (one bucket and no replicated rows when n fits).
     """
 
     window_size_s: int = 300

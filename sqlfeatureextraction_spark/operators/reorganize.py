@@ -425,10 +425,13 @@ def linearize_conversation_tree(
     (conv, node), broadcast-able when the remaining frontier is
     small, and rounds are bounded by the tree height (≤ max_depth,
     enforced: leftover pending pointers after max_depth rounds raise
-    rather than silently truncate).  Early exit when a round leaves
-    no pending rows — the driver-side loop does a bounded count per
-    round, the engine's accepted pattern for iterative closure
-    (reorganize_sessions' hop map, semdedup's Lloyd rounds).
+    rather than silently truncate; a cycle or a dangling parent pointer
+    never resolves, so it trips the same guard, and the error names up
+    to 5 offending leaves with their pending parent ids).  Early exit
+    when a round leaves no pending rows — the driver-side loop does a
+    bounded count per round, the engine's accepted pattern for
+    iterative closure (reorganize_sessions' hop map, semdedup's Lloyd
+    rounds).
 
     Output: (conv_col, leaf_id, depth = path length, path
     array<node> root-first).
@@ -540,10 +543,18 @@ def linearize_conversation_tree(
     bad = work.where(
         F.col("pending").isNotNull() | (F.col("_nsteps") > int(max_depth))
     )
-    if bad.take(1):
+    offenders = bad.select("_c", "leaf_id", "pending").take(5)
+    if offenders:
+        offenders.sort(key=lambda r: (str(r["_c"]), r["leaf_id"]))
+        named = ", ".join(
+            f"{conv_col}={r['_c']!r} leaf_id={r['leaf_id']}"
+            f" pending={r['pending']}"
+            for r in offenders
+        )
         raise ValueError(
-            f"conversation tree deeper than max_depth={max_depth} "
-            "(or a parent pointer cycle)"
+            f"conversation tree deeper than max_depth={max_depth}, a parent "
+            "pointer cycle, or a dangling parent pointer (a parent id with "
+            f"no node row); offending leaves (up to 5): {named}"
         )
     done = done.unionByName(work.select("_c", "leaf_id", "path", "pending"))
     return done.select(

@@ -10,26 +10,28 @@ turn here and reused by every downstream window).
 
 Spark-first restatement:
   * day-of-week / hour / lag computed by JVM built-ins
-    (``dayofweek``, ``hour``, ``lag().over(window)``) — codegen'd;
-  * the scatter into the fixed-width vector is ONE Arrow-vectorized
-    pandas UDF whose body is numpy column ops (``np.add.at``,
-    ``Series.explode().map``) — no per-row Python loop;
-  * the vocabulary rides inside the UDF closure — Spark pickles it once
+    (``weekday``, ``hour``, ``lag().over(window)``) — codegen'd;
+  * ONE cell builder (``_cell_builder``) maps a batch's Arrow columns
+    to the turn vectors' canonical cell set (row, col, val): the
+    role/tool/token → bit lookups are vectorized C++ ``pyarrow``
+    ``index_in`` calls and the rest is numpy segment ops — no per-row
+    Python objects anywhere;
+  * ONE fingerprint (``_fingerprint``) over those cells defines
+    ``vec_hash``, the window dedupe key, for every encoder;
+  * both encoders are thin Arrow shells over the two:
+    ``with_turn_features`` (one scalar Arrow UDF → dense array or
+    sparse struct<idx,val>) and ``with_turn_scalars`` (one
+    ``mapInArrow`` pass → per-segment sums);
+  * the vocabulary rides inside the closure — Spark pickles it once
     per task (equivalent to a broadcast for a dict this small).
-
-Output columns appended: ts_sec:long, lag_sec:long(null first turn),
-features:array<float> (layout width; float32 — elements are 0/1 bits
-and small counts, exact below 2^24, and the narrower dtype halves the
-dominant memory/shuffle traffic), cost:long, vec_hash:long.
 """
 
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa  # module-level: Arrow-UDF type hints resolve here
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 from sqlfeatureextraction_spark.config import FeatureConfig
 from sqlfeatureextraction_spark.functions.text import tokenize_col
@@ -39,210 +41,88 @@ from sqlfeatureextraction_spark.vocab import Vocabulary
 TURN_ORDER = ["ts", "turn_idx"]  # stable secondary sort (north rule)
 
 
-def _scatter_udf(vocab: Vocabulary, cfg: FeatureConfig):
+def _np(arr) -> np.ndarray:
+    return arr.to_numpy(zero_copy_only=False)
+
+
+def _cell_builder(vocab: Vocabulary, cfg: FeatureConfig):
+    """Returns (layout, cells): ``cells(dow, hour, role, tool, toks,
+    lag_sec)`` maps one batch's Arrow columns to the canonical cell set
+    of its turn vectors — (row, col, val) arrays, row-major, col
+    strictly ascending within a row, duplicate bow cells merged, val
+    float32 (0/1 bits and small token counts, exact below 2^24).
+
+    Segments: time one-hot 7 dow ‖ 24 hour
+    (enc/APMFragmentIntent.java:752-777); role / tool one-hot, where
+    vocabulary misses leave bits unset (the reference swallows lookup
+    misses, enc/APMFragmentIntent.java:303-305); bag-of-token presence
+    or counts; lag bit i iff lag >= gran_i, every bit when the lag is
+    null (enc/APMFragmentIntent.java:791-802) — elementwise, so any
+    granularity ordering is encoded correctly."""
+    import pyarrow.compute as pc
+
     layout = vocab.layout(n_grans=len(cfg.granularities_s))
-    width = layout.width
-    t_off = layout.seg("time").offset
-    r_off, r_w = layout.seg("role").offset, layout.seg("role").width
-    o_off, o_w = layout.seg("tool").offset, layout.seg("tool").width
-    b_off = layout.seg("bow").offset
-    l_off = layout.seg("lag").offset
+    off = {s.name: s.offset for s in layout.segments}
     grans = np.asarray(cfg.granularities_s, dtype=np.int64)
-    roles = dict(vocab.roles)
-    tools = dict(vocab.tools)
-    tokens = dict(vocab.tokens)
-    binary = cfg.binary_bow
-
-    @F.pandas_udf(T.ArrayType(T.FloatType()))
-    def encode(
-        dow: pd.Series,
-        hour: pd.Series,
-        role: pd.Series,
-        tool: pd.Series,
-        toks: pd.Series,
-        lag_sec: pd.Series,
-    ) -> pd.Series:
-        n = len(dow)
-        # float32: every element is a 0/1 bit or a small token count —
-        # exact below 2^24 — and the vector columns dominate cache /
-        # shuffle / Arrow bytes, so halving the element width halves
-        # the pipeline's memory-bus traffic (the scaling bottleneck)
-        mat = np.zeros((n, width), dtype=np.float32)
-        rows = np.arange(n)
-
-        # time one-hot: 7 dow ‖ 24 hour (enc/APMFragmentIntent.java:752-777)
-        mat[rows, t_off + dow.to_numpy(dtype=np.int64)] = 1.0
-        mat[rows, t_off + 7 + hour.to_numpy(dtype=np.int64)] = 1.0
-
-        # role / tool one-hot — vectorized dict lookup; OOV leaves bits
-        # unset (reference swallows lookup misses,
-        # enc/APMFragmentIntent.java:303-305; we count them instead)
-        r_idx = role.map(roles).to_numpy(dtype=np.float64, na_value=np.nan)
-        r_ok = ~np.isnan(r_idx)
-        mat[rows[r_ok], r_off + r_idx[r_ok].astype(np.int64)] = 1.0
-        o_idx = (
-            tool.fillna("").map(tools).to_numpy(dtype=np.float64, na_value=np.nan)
-        )
-        o_ok = ~np.isnan(o_idx)
-        mat[rows[o_ok], o_off + o_idx[o_ok].astype(np.int64)] = 1.0
-
-        # bag-of-token: explode + map + np.add.at scatter
-        ex = toks.explode()
-        ex = ex[ex.notna()]
-        if len(ex):
-            pos = ex.map(tokens)
-            keep = pos.notna()
-            if keep.any():
-                ridx = ex.index.to_numpy()[keep.to_numpy()]
-                cidx = pos[keep].to_numpy(dtype=np.int64) + b_off
-                np.add.at(mat, (ridx, cidx), 1.0)
-                if binary:
-                    np.minimum(
-                        mat[:, b_off : b_off + len(tokens)],
-                        1.0,
-                        out=mat[:, b_off : b_off + len(tokens)],
-                    )
-
-        # lag buckets: bit i set iff lag >= gran_i; null lag ⇒ all ones
-        # (enc/APMFragmentIntent.java:791-802: null ⇒ all bits set)
-        lag = lag_sec.to_numpy(dtype=np.float64, na_value=np.nan)
-        lag_bits = np.where(
-            np.isnan(lag)[:, None], 1.0, (lag[:, None] >= grans[None, :]) * 1.0
-        )
-        mat[:, l_off : l_off + len(grans)] = lag_bits
-
-        return pd.Series(list(mat))
-
-    return encode, layout
-
-
-def _scatter_sparse_udf(vocab: Vocabulary, cfg: FeatureConfig):
-    """Sparse variant of the per-turn encoder: emits
-    struct<idx:array<int>, val:array<float>> (canonical: idx strictly
-    ascending) instead of the dense width-length array.
-
-    Why it exists: a turn vector has ~10-30 nonzeros regardless of
-    vocabulary size, but the DENSE representation costs
-    width×4 bytes/turn through Arrow, cache and every shuffle it
-    crosses.  Measured at 10k-token vocabulary (turn width 10 046,
-    sf0.1): the dense vectorize+cache stage is 137 s / ~4 GB while the
-    narrow window pass (3 s) and the assembly (5 s) are width-robust —
-    the dense format IS the bottleneck.  Sparse keeps the pipeline
-    identical (same scatter semantics, the assembler densifies per
-    selected representative) at ~nonzeros×8 bytes/turn.
-
-    The COO construction is fully vectorized: all (row, col, val)
-    triplets built by numpy segment ops, lex-sorted, duplicate (bow
-    count) cells summed, then split per row — no (n×width) allocation
-    anywhere."""
-    layout = vocab.layout(n_grans=len(cfg.granularities_s))
-    t_off = layout.seg("time").offset
-    r_off = layout.seg("role").offset
-    o_off = layout.seg("tool").offset
-    b_off = layout.seg("bow").offset
-    l_off = layout.seg("lag").offset
-    grans = np.asarray(cfg.granularities_s, dtype=np.int64)
-    roles = dict(vocab.roles)
-    tools = dict(vocab.tools)
-    tokens = dict(vocab.tokens)
-    binary = cfg.binary_bow
-
-    coo = _coo_builder(
-        t_off, r_off, o_off, b_off, l_off, grans, roles, tools, tokens, binary
+    # position i of each value list == bit i (dicts are built by
+    # enumerate over the sorted values, so sorting reconstructs them)
+    roles, tools, tokens = (
+        pa.array(sorted(d, key=d.get), type=pa.string())
+        for d in (vocab.roles, vocab.tools, vocab.tokens)
     )
+    n_tokens = len(tokens)
+    binary = cfg.binary_bow
 
-    @F.pandas_udf("struct<idx:array<int>, val:array<float>>")
-    def encode_sparse(
-        dow: pd.Series,
-        hour: pd.Series,
-        role: pd.Series,
-        tool: pd.Series,
-        toks: pd.Series,
-        lag_sec: pd.Series,
-    ) -> pd.DataFrame:
-        n = len(dow)
-        r, c, v = coo(dow, hour, role, tool, toks, lag_sec)
-        bounds = np.searchsorted(r, np.arange(n + 1))
-        c32 = c.astype(np.int32)
-        return pd.DataFrame(
-            {
-                "idx": [c32[bounds[i] : bounds[i + 1]] for i in range(n)],
-                "val": [v[bounds[i] : bounds[i + 1]] for i in range(n)],
-            }
-        )
-
-    return encode_sparse, layout
-
-
-def _coo_builder(
-    t_off, r_off, o_off, b_off, l_off, grans, roles, tools, tokens, binary
-):
-    """Shared COO construction for the sparse encoders: returns a
-    callable producing the canonical merged (row, col, val) triplets —
-    row-major, col strictly ascending within a row, duplicate (bow
-    count) cells summed — for one Arrow batch.  Identical semantics to
-    the dense scatter (pinned by tests)."""
-
-    def coo(dow, hour, role, tool, toks, lag_sec):
+    def cells(dow, hour, role, tool, toks, lag_sec):
         n = len(dow)
         rows = np.arange(n, dtype=np.int64)
         rr, cc, vv = [], [], []
 
         def add(r, c, v=None):
-            rr.append(r.astype(np.int64))
-            cc.append(c.astype(np.int64))
-            vv.append(
-                np.ones(len(r), dtype=np.float32) if v is None else v
+            rr.append(r)
+            cc.append(c)
+            vv.append(np.ones(len(r), dtype=np.float32) if v is None else v)
+
+        add(rows, off["time"] + _np(dow).astype(np.int64))
+        add(rows, off["time"] + 7 + _np(hour).astype(np.int64))
+        for col, values, seg in (
+            (role, roles, "role"),
+            (pc.fill_null(tool, ""), tools, "tool"),
+        ):
+            idx = _np(pc.index_in(col, value_set=values).fill_null(-1))
+            ok = idx >= 0
+            add(rows[ok], off[seg] + idx[ok].astype(np.int64))
+
+        # bag-of-token: flatten the list column once, index_in the flat
+        # values, merge duplicate (row, token) cells
+        parent = _np(pc.list_parent_indices(toks)).astype(np.int64)
+        pos = pc.index_in(pc.list_flatten(toks), value_set=tokens)
+        pos = _np(pos.fill_null(-1))
+        keep = pos >= 0
+        if keep.any():
+            key = parent[keep] * n_tokens + pos[keep]
+            uk, counts = np.unique(key, return_counts=True)
+            add(
+                uk // n_tokens,
+                off["bow"] + uk % n_tokens,
+                None if binary else counts.astype(np.float32),
             )
 
-        add(rows, t_off + dow.to_numpy(dtype=np.int64))
-        add(rows, t_off + 7 + hour.to_numpy(dtype=np.int64))
-        r_idx = role.map(roles).to_numpy(dtype=np.float64, na_value=np.nan)
-        ok = ~np.isnan(r_idx)
-        add(rows[ok], r_off + r_idx[ok].astype(np.int64))
-        o_idx = (
-            tool.fillna("").map(tools).to_numpy(dtype=np.float64, na_value=np.nan)
+        lag = np.asarray(_np(lag_sec), dtype=np.float64)
+        ri, ci = np.nonzero(
+            np.isnan(lag)[:, None] | (lag[:, None] >= grans[None, :])
         )
-        ok = ~np.isnan(o_idx)
-        add(rows[ok], o_off + o_idx[ok].astype(np.int64))
-        ex = toks.explode()
-        ex = ex[ex.notna()]
-        if len(ex):
-            pos = ex.map(tokens)
-            keep = pos.notna()
-            if keep.any():
-                add(
-                    ex.index.to_numpy()[keep.to_numpy()],
-                    pos[keep].to_numpy(dtype=np.int64) + b_off,
-                )
-        # lag bits from the SAME elementwise (lag >= gran_i) mask as the
-        # dense path (bit i independently, null ⇒ all bits) — correct
-        # for any granularity ordering, not just ascending configs
-        lag = lag_sec.to_numpy(dtype=np.float64, na_value=np.nan)
-        mask = np.isnan(lag)[:, None] | (lag[:, None] >= grans[None, :])
-        ri, ci = np.nonzero(mask)
-        add(rows[ri], l_off + ci)
+        add(ri, off["lag"] + ci)
 
-        r = np.concatenate(rr)
-        c = np.concatenate(cc)
-        v = np.concatenate(vv)
-        order = np.lexsort((c, r))
-        r, c, v = r[order], c[order], v[order]
-        # merge duplicate (row, col) cells (bow token counts)
-        if len(r):
-            new_cell = np.concatenate(
-                ([True], (r[1:] != r[:-1]) | (c[1:] != c[:-1]))
-            )
-            cell_id = np.cumsum(new_cell) - 1
-            merged_v = np.zeros(cell_id[-1] + 1, dtype=np.float32)
-            np.add.at(merged_v, cell_id, v)
-            if binary:
-                np.minimum(merged_v, 1.0, out=merged_v)
-            r, c = r[new_cell], c[new_cell]
-            v = merged_v
-        return r, c, v
+        # every add() above is row-major with cols ascending within a
+        # row, in layout segment order, so a STABLE sort on the row
+        # alone yields the canonical (row, col) order — merging a few
+        # presorted runs, much cheaper than a full lexsort
+        r, c, v = (np.concatenate(x) for x in (rr, cc, vv))
+        order = np.argsort(r, kind="stable")
+        return r[order], c[order], v[order]
 
-    return coo
+    return layout, cells
 
 
 def _mix64(x: np.ndarray) -> np.ndarray:
@@ -250,6 +130,56 @@ def _mix64(x: np.ndarray) -> np.ndarray:
     x = (x ^ (x >> np.uint64(30))) * np.uint64(0xBF58476D1CE4E5B9)
     x = (x ^ (x >> np.uint64(27))) * np.uint64(0x94D049BB133111EB)
     return x ^ (x >> np.uint64(31))
+
+
+def _fingerprint(r: np.ndarray, c: np.ndarray, v: np.ndarray, n: int):
+    """vec_hash of each of n rows: a 64-bit fingerprint of the row's
+    canonical cell set.  Each (col, val) cell is injectively packed into
+    64 bits (col << 32 | float32-bits(val)) and splitmix64-mixed; the
+    mixes are XOR-folded per row (cells have distinct cols, so the fold
+    is over a set and order-insensitive) and re-mixed with the cell
+    count.  Vector equality ⇒ identical fingerprint; distinct vectors
+    collide with 2^-64-class probability.  The hash is a PURELY
+    INTERNAL dedupe key — it never appears in any output — so only the
+    induced equality partition matters."""
+    packed = (c.astype(np.uint64) << np.uint64(32)) | v.view(np.uint32).astype(
+        np.uint64
+    )
+    acc = np.zeros(n, dtype=np.uint64)
+    np.bitwise_xor.at(acc, r, _mix64(packed))
+    cnt = np.bincount(r, minlength=n).astype(np.uint64)
+    return _mix64(acc ^ (cnt * np.uint64(0x9E3779B97F4A7C15))).astype(np.int64)
+
+
+def _with_lag(transcripts: DataFrame) -> DataFrame:
+    """Appends ts_sec and lag_sec (null on a conversation's first turn).
+    The lag window shuffles once on conv_id; the encoders are
+    per-partition after it."""
+    w = Window.partitionBy("conv_id").orderBy(*TURN_ORDER)
+    return transcripts.withColumn(
+        # NTZ parquet timestamps need the intermediate cast; session TZ
+        # is pinned to UTC so the epoch is well-defined
+        "ts_sec",
+        F.col("ts").cast("timestamp").cast("long"),
+    ).withColumn("lag_sec", F.col("ts_sec") - F.lag("ts_sec").over(w))
+
+
+def _cell_inputs() -> list:
+    """The cell builder's argument columns, in its parameter order."""
+    return [
+        # ISO day-of-week, Monday=bit 0 — matches the reference's
+        # getDayOfWeek().getValue()-1 (enc/APMFragmentIntent.java:752-777)
+        F.weekday("ts").cast("int").alias("dow"),
+        F.hour("ts").cast("int").alias("hour"),
+        F.col("role"),
+        F.col("tool"),
+        tokenize_col(F.col("text")).alias("_toks"),
+        F.col("lag_sec"),
+    ]
+
+
+def _cost() -> Column:
+    return F.coalesce(F.col("duration_ms"), F.lit(1)).cast("long")
 
 
 _TURN_SCALAR_SCHEMA = (
@@ -265,184 +195,43 @@ def with_turn_scalars(
     cfg: FeatureConfig,
 ) -> tuple[DataFrame, VectorLayout]:
     """Narrow per-turn encoding for scalar-projection consumers: the
-    same turn-vector semantics as ``with_turn_features``, reduced
-    in-UDF to (vec_hash, per-segment sums) — the full vector never
-    leaves the Python worker (guide §2.3: shuffle keys and metadata,
-    not payloads).
-
-    The encoder is a ``mapInArrow`` pass whose per-batch body is pure
-    ``pyarrow.compute`` + numpy (guide §4.2): the token→bit and
-    role/tool→bit dictionary lookups run as vectorized C++
-    ``index_in`` against the fitted value lists — no per-row Python
-    objects anywhere (the pandas ``Series.explode()``/``.map()`` path
-    materializes every token as a Python string; measured, it
-    dominated the encode stage).
-
-    vec_hash is a 64-bit fingerprint of the turn vector's canonical
-    merged COO cell set: each (col, val) cell injectively packed into
-    64 bits (col << 32 | float32-bits(val)), splitmix64-mixed,
-    XOR-folded per row (cells have distinct cols, so the fold is over
-    a set and order-insensitivity is sound), then re-mixed with the
-    cell count.  Vector equality ⇒ identical fingerprint; distinct
-    vectors collide with the same 2^-64-class probability as the
-    xxhash64(dense) key the assembler path uses.  The hash is a PURELY
-    INTERNAL dedupe key — it never appears in any output — so only
-    the induced equality partition matters.
-
-    The per-segment sums are exact small integers (0/1 bits + small
-    counts), identical to summing the dense float32 matrix.
+    same cells and vec_hash as ``with_turn_features``, reduced in one
+    ``mapInArrow`` pass to (vec_hash, per-segment sums) — the full
+    vector never leaves the Python worker (guide §2.3: shuffle keys and
+    metadata, not payloads).  The per-segment sums are exact small
+    integers (0/1 bits + small counts), identical to summing the dense
+    float32 vector.
 
     Output columns: conv_id, turn_idx, tool, ts_sec, cost, vec_hash,
     s_time, s_role, s_tool, s_bow, s_lag.  (No ``ts``: scalar
     consumers key on the integral ``ts_sec`` anchor only.)"""
-    import pyarrow as pa
-
-    layout = vocab.layout(n_grans=len(cfg.granularities_s))
-    t_off = layout.seg("time").offset
-    r_off = layout.seg("role").offset
-    o_off = layout.seg("tool").offset
-    b_off = layout.seg("bow").offset
-    l_off = layout.seg("lag").offset
-    grans = np.asarray(cfg.granularities_s, dtype=np.int64)
-    # position i of each value list == bit i (dicts are built by
-    # enumerate over the sorted values, so sorting reconstructs them)
-    role_list = sorted(vocab.roles, key=vocab.roles.get)
-    tool_list = sorted(vocab.tools, key=vocab.tools.get)
-    token_list = sorted(vocab.tokens, key=vocab.tokens.get)
-    n_tokens = len(token_list)
-    binary = cfg.binary_bow
-    P = np.uint64(0x9E3779B97F4A7C15)
+    layout, cells = _cell_builder(vocab, cfg)
+    starts = np.asarray([s.offset for s in layout.segments])
+    n_seg = len(starts)
+    inputs = ["dow", "hour", "role", "tool", "_toks", "lag_sec"]
+    passthrough = ["conv_id", "turn_idx", "tool", "ts_sec", "cost"]
 
     def encode_batches(batches):
-        import pyarrow.compute as pc
-
-        roles_arr = pa.array(role_list, type=pa.string())
-        tools_arr = pa.array(tool_list, type=pa.string())
-        tokens_arr = pa.array(token_list, type=pa.string())
-
-        def cell_hash(col: np.ndarray, val: np.ndarray) -> np.ndarray:
-            packed = (col.astype(np.uint64) << np.uint64(32)) | val.view(
-                np.uint32
-            ).astype(np.uint64)
-            return _mix64(packed)
-
         for b in batches:
             n = b.num_rows
-            rows = np.arange(n, dtype=np.int64)
-            dow = b.column("dow").to_numpy(zero_copy_only=False).astype(np.int64)
-            hour = b.column("hour").to_numpy(zero_copy_only=False).astype(np.int64)
-            acc = np.zeros(n, dtype=np.uint64)
-            cnt = np.zeros(n, dtype=np.int64)
-            sums = {}
-
-            def fold(r, c, v):
-                np.bitwise_xor.at(acc, r, cell_hash(c, v))
-                np.add.at(cnt, r, 1)
-
-            one = np.float32(1.0)
-            # time bits: always present
-            fold(rows, t_off + dow, np.full(n, one))
-            fold(rows, t_off + 7 + hour, np.full(n, one))
-            sums["s_time"] = np.full(n, 2, dtype=np.int32)
-
-            # role / tool one-hot via vectorized C++ dictionary lookup
-            r_idx = pc.index_in(b.column("role"), value_set=roles_arr)
-            r_idx = r_idx.fill_null(-1).to_numpy(zero_copy_only=False).astype(np.int64)
-            ok = r_idx >= 0
-            fold(rows[ok], r_off + r_idx[ok], np.full(ok.sum(), one))
-            sums["s_role"] = ok.astype(np.int32)
-            o_idx = pc.index_in(
-                pc.fill_null(b.column("tool"), ""), value_set=tools_arr
-            )
-            o_idx = o_idx.fill_null(-1).to_numpy(zero_copy_only=False).astype(np.int64)
-            ok = o_idx >= 0
-            fold(rows[ok], o_off + o_idx[ok], np.full(ok.sum(), one))
-            sums["s_tool"] = ok.astype(np.int32)
-
-            # bag-of-token: flatten the list column once, index_in the
-            # flat values, merge duplicate (row, token) cells
-            toks = b.column("_toks")
-            if isinstance(toks, pa.ChunkedArray):
-                toks = toks.combine_chunks()
-            parent = pc.list_parent_indices(toks).to_numpy(
-                zero_copy_only=False
-            ).astype(np.int64)
-            pos = pc.index_in(pc.list_flatten(toks), value_set=tokens_arr)
-            pos = pos.fill_null(-1).to_numpy(zero_copy_only=False).astype(np.int64)
-            keep = pos >= 0
-            s_bow = np.zeros(n, dtype=np.int32)
-            if keep.any():
-                key = parent[keep] * np.int64(n_tokens) + pos[keep]
-                if binary:
-                    uk = np.unique(key)
-                    bval = np.ones(len(uk), dtype=np.float32)
-                else:
-                    uk, c_ = np.unique(key, return_counts=True)
-                    bval = c_.astype(np.float32)
-                brow = uk // n_tokens
-                bcol = (uk % n_tokens) + b_off
-                fold(brow, bcol, bval)
-                np.add.at(s_bow, brow, bval.astype(np.int32))
-            sums["s_bow"] = s_bow
-
-            # lag buckets: bit i iff lag >= gran_i; null lag ⇒ all bits
-            lag = b.column("lag_sec").to_numpy(zero_copy_only=False)
-            lag = np.asarray(lag, dtype=np.float64)
-            mask = np.isnan(lag)[:, None] | (lag[:, None] >= grans[None, :])
-            ri, ci = np.nonzero(mask)
-            fold(ri, l_off + ci, np.full(len(ri), one))
-            sums["s_lag"] = mask.sum(axis=1).astype(np.int32)
-
-            vh = _mix64(acc ^ (cnt.astype(np.uint64) * P)).astype(np.int64)
+            r, c, v = cells(*(b.column(k) for k in inputs))
+            # zero-width segments hold no cells, so side="right" maps
+            # every col to its own segment
+            seg = np.searchsorted(starts, c, side="right") - 1
+            sums = np.bincount(
+                r * n_seg + seg, weights=v, minlength=n * n_seg
+            ).reshape(n, n_seg).astype(np.int32)
             yield pa.RecordBatch.from_arrays(
-                [
-                    b.column("conv_id"),
-                    b.column("turn_idx"),
-                    b.column("tool"),
-                    b.column("ts_sec"),
-                    b.column("cost"),
-                    pa.array(vh, type=pa.int64()),
-                    pa.array(sums["s_time"], type=pa.int32()),
-                    pa.array(sums["s_role"], type=pa.int32()),
-                    pa.array(sums["s_tool"], type=pa.int32()),
-                    pa.array(sums["s_bow"], type=pa.int32()),
-                    pa.array(sums["s_lag"], type=pa.int32()),
-                ],
-                names=[
-                    "conv_id",
-                    "turn_idx",
-                    "tool",
-                    "ts_sec",
-                    "cost",
-                    "vec_hash",
-                    "s_time",
-                    "s_role",
-                    "s_tool",
-                    "s_bow",
-                    "s_lag",
-                ],
+                [b.column(k) for k in passthrough]
+                + [pa.array(_fingerprint(r, c, v, n), type=pa.int64())]
+                + [pa.array(sums[:, i]) for i in range(n_seg)],
+                names=passthrough
+                + ["vec_hash"]
+                + [f"s_{s.name}" for s in layout.segments],
             )
 
-    w = Window.partitionBy("conv_id").orderBy(*TURN_ORDER)
-    df = (
-        transcripts.withColumn(
-            "ts_sec", F.col("ts").cast("timestamp").cast("long")
-        )
-        .withColumn("lag_sec", F.col("ts_sec") - F.lag("ts_sec").over(w))
-        .select(
-            "conv_id",
-            "turn_idx",
-            "tool",
-            "ts_sec",
-            F.coalesce(F.col("duration_ms"), F.lit(1))
-            .cast("long")
-            .alias("cost"),
-            F.weekday("ts").cast("int").alias("dow"),
-            F.hour("ts").cast("int").alias("hour"),
-            "role",
-            tokenize_col(F.col("text")).alias("_toks"),
-            "lag_sec",
-        )
+    df = _with_lag(transcripts).select(
+        "conv_id", "turn_idx", "ts_sec", _cost().alias("cost"), *_cell_inputs()
     )
     return df.mapInArrow(encode_batches, _TURN_SCALAR_SCHEMA), layout
 
@@ -453,51 +242,72 @@ def with_turn_features(
     cfg: FeatureConfig,
     sparse: bool | str = False,
 ) -> tuple[DataFrame, VectorLayout]:
-    """Append per-turn feature vectors.
+    """Append per-turn feature vectors: ts_sec:long, lag_sec:long (null
+    on the first turn), features, cost:long, vec_hash:long.
 
     The lag window shuffles once on conv_id; everything else is
     per-partition (no further shuffle).  At scale the input should
     already be bucketed/partitioned by conv_id so this is shuffle-free.
 
     sparse=False → dense array<float> `features` (the reference's
-    fixed-width format, right for narrow vocabularies); sparse=True →
-    struct<idx,val> sparse rows (width-independent bytes — see
-    _scatter_sparse_udf); sparse="auto" → sparse iff the turn width
-    exceeds 1024.  Window paths accept either; full window vectors are
-    bit-identical (pinned by tests)."""
+    fixed-width format, right for narrow vocabularies; float32 halves
+    the dominant cache/shuffle bytes); sparse=True → the canonical cell
+    set as struct<idx:array<int>, val:array<float>> (idx strictly
+    ascending; ~nonzeros×8 bytes per turn instead of width×4);
+    sparse="auto" → sparse iff the turn width exceeds 1024.  Window
+    paths accept either; full window vectors are bit-identical (pinned
+    by tests).  Both formats come from the same cells, so vec_hash is
+    the same either way."""
+    layout, cells = _cell_builder(vocab, cfg)
+    width = layout.width
     if sparse == "auto":
-        width = vocab.layout(n_grans=len(cfg.granularities_s)).width
         sparse = width > 1024
-    if sparse:
-        encode, layout = _scatter_sparse_udf(vocab, cfg)
-    else:
-        encode, layout = _scatter_udf(vocab, cfg)
-
-    w = Window.partitionBy("conv_id").orderBy(*TURN_ORDER)
-    df = (
-        transcripts.withColumn(
-            # NTZ parquet timestamps need the intermediate cast; session TZ
-            # is pinned to UTC so the epoch is well-defined
-            "ts_sec",
-            F.col("ts").cast("timestamp").cast("long"),
-        )
-        .withColumn("lag_sec", F.col("ts_sec") - F.lag("ts_sec").over(w))
-        .withColumn("_toks", tokenize_col(F.col("text")))
+    feature_type = (
+        "struct<idx:array<int>, val:array<float>>"
+        if sparse
+        else "array<float>"
     )
-    df = df.withColumn(
-        "features",
-        encode(
-            # ISO day-of-week, Monday=bit 0 — matches the reference's
-            # getDayOfWeek().getValue()-1 (enc/APMFragmentIntent.java:752-777)
-            F.weekday("ts").cast("int"),
-            F.hour("ts").cast("int"),
-            F.col("role"),
-            F.col("tool"),
-            F.col("_toks"),
-            F.col("lag_sec"),
-        ),
-    ).drop("_toks")
-    df = df.withColumn(
-        "cost", F.coalesce(F.col("duration_ms"), F.lit(1)).cast("long")
-    ).withColumn("vec_hash", F.xxhash64("features"))
+
+    @F.arrow_udf(f"struct<features:{feature_type}, vec_hash:bigint>")
+    def encode(
+        dow: pa.Array,
+        hour: pa.Array,
+        role: pa.Array,
+        tool: pa.Array,
+        toks: pa.Array,
+        lag_sec: pa.Array,
+    ) -> pa.Array:
+        n = len(dow)
+        r, c, v = cells(dow, hour, role, tool, toks, lag_sec)
+        if sparse:
+            bounds = pa.array(np.searchsorted(r, np.arange(n + 1)), pa.int32())
+            features = pa.StructArray.from_arrays(
+                [
+                    pa.ListArray.from_arrays(bounds, c.astype(np.int32)),
+                    pa.ListArray.from_arrays(bounds, v),
+                ],
+                names=["idx", "val"],
+            )
+        else:
+            mat = np.zeros((n, width), dtype=np.float32)
+            mat[r, c] = v
+            bounds = pa.array(np.arange(n + 1) * width, pa.int32())
+            features = pa.ListArray.from_arrays(bounds, mat.ravel())
+        return pa.StructArray.from_arrays(
+            [features, pa.array(_fingerprint(r, c, v, n))],
+            names=["features", "vec_hash"],
+        )
+
+    df = (
+        _with_lag(transcripts)
+        .withColumn("_enc", encode(*_cell_inputs()))
+        .withColumns(
+            {
+                "features": F.col("_enc.features"),
+                "cost": _cost(),
+                "vec_hash": F.col("_enc.vec_hash"),
+            }
+        )
+        .drop("_enc")
+    )
     return df, layout

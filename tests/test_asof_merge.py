@@ -174,64 +174,6 @@ def test_sparse_turn_features_equal_dense(transcripts_df):
         _assert_equal(a, b)
 
 
-def test_sparse_densify_roundtrip(transcripts_df):
-    """Per-turn: scattering the sparse (idx, val) pairs into a zero
-    vector reproduces the dense encoder output exactly."""
-    cfg = FeatureConfig()
-    v = fit_vocabulary(transcripts_df)
-    vec_d, layout = with_turn_features(transcripts_df, v, cfg)
-    vec_s, _ = with_turn_features(transcripts_df, v, cfg, sparse=True)
-    d = (
-        vec_d.select("conv_id", "turn_idx", "features")
-        .toPandas()
-        .sort_values(["conv_id", "turn_idx"])
-        .reset_index(drop=True)
-    )
-    s = (
-        vec_s.select("conv_id", "turn_idx", "features")
-        .toPandas()
-        .sort_values(["conv_id", "turn_idx"])
-        .reset_index(drop=True)
-    )
-    assert len(d) == len(s)
-    for fd, fs in zip(d["features"], s["features"]):
-        dense = np.asarray(fd, dtype=np.float32)
-        out = np.zeros(layout.width, dtype=np.float32)
-        out[np.asarray(fs["idx"], dtype=np.int64)] = fs["val"]
-        assert np.array_equal(dense, out)
-        # canonical sparse form: strictly ascending indices
-        assert (np.diff(np.asarray(fs["idx"])) > 0).all()
-
-
-def test_sparse_equals_dense_nonascending_granularities(transcripts_df):
-    """The sparse encoder's lag bits come from the same elementwise
-    (lag >= gran_i) mask as the dense path, so a NON-ascending
-    granularity config (where lag bits are not a prefix) must still be
-    transport-equivalent (the ADVICE-flagged divergence)."""
-    cfg = FeatureConfig(granularities_s=(3600, 60, 86400, 300))
-    v = fit_vocabulary(transcripts_df)
-    vec_d, layout = with_turn_features(transcripts_df, v, cfg)
-    vec_s, _ = with_turn_features(transcripts_df, v, cfg, sparse=True)
-    d = (
-        vec_d.select("conv_id", "turn_idx", "features")
-        .toPandas()
-        .sort_values(["conv_id", "turn_idx"])
-        .reset_index(drop=True)
-    )
-    s = (
-        vec_s.select("conv_id", "turn_idx", "features")
-        .toPandas()
-        .sort_values(["conv_id", "turn_idx"])
-        .reset_index(drop=True)
-    )
-    assert len(d) == len(s)
-    for fd, fs in zip(d["features"], s["features"]):
-        dense = np.asarray(fd, dtype=np.float32)
-        out = np.zeros(layout.width, dtype=np.float32)
-        out[np.asarray(fs["idx"], dtype=np.int64)] = fs["val"]
-        assert np.array_equal(dense, out)
-
-
 def test_scalar_fast_path_matches_assembler(transcripts_df):
     """r6 narrow scalar pipeline (with_turn_scalars +
     window_feature_scalars — no wide vector, no feature join, no

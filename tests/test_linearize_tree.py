@@ -82,6 +82,25 @@ def test_linearize_depth_guard(spark):
         linearize_conversation_tree(dfc, max_depth=8).collect()
 
 
+def test_linearize_dangling_parent_names_offenders(spark):
+    """A parent pointer to a node that does not exist never resolves,
+    so it trips the same guard; the error names the leaf and its
+    pending parent id."""
+    from sqlfeatureextraction_spark.operators.reorganize import (
+        linearize_conversation_tree,
+    )
+
+    rows = [("a", 0, None), ("a", 1, 0), ("d", 5, 99), ("d", 6, 5)]
+    df = spark.createDataFrame(
+        rows, "conv_id string, node_id long, parent_id long"
+    )
+    with pytest.raises(ValueError, match="dangling") as err:
+        linearize_conversation_tree(df, max_depth=8).collect()
+    msg = str(err.value)
+    assert "leaf_id=6 pending=99" in msg
+    assert "'a'" not in msg  # the well-formed conversation is not named
+
+
 def test_linearize_random_forest(spark):
     import numpy as np
 
