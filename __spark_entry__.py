@@ -1436,9 +1436,8 @@ def _wf_scalars(wf: DataFrame, vocab) -> DataFrame:
     are exact and the long casts lose nothing.
 
     (Used when the caller already has the array output; the flagship
-    entries instead pass scalars_only=True so the reduction happens
-    inside the assembler's Arrow pass and the array never crosses
-    back to the JVM.)"""
+    entries instead run pit_window.scalar_finish on the member rows,
+    so no window vector is ever built.)"""
     n_tools = len(vocab.tools)
     total = F.aggregate(
         F.col("window_features"), F.lit(0.0), lambda a, v: a + v
@@ -1462,20 +1461,19 @@ def _q_transcript_window_features(spark, sf_dir):
     oracle-checkable scalars (width / tool-segment sum / vector sum
     per (conv_id, ts_sec) anchor).
 
-    r6: runs through the narrow scalar pipeline
-    (with_turn_scalars + window_feature_scalars) — identical output to
-    the old scalars_only assembly (pinned by
-    tests/test_asof_merge.py::test_scalar_fast_path_matches_assembler),
-    with the wide vector payload, the feature join-back and the
-    assembly ArrowEvalPython all removed.  The transcript view is
+    Runs with_turn_scalars → the JVM member selector → the scalar
+    finisher — identical output to reducing the dense window vectors
+    (pinned by tests/test_asof_merge.py::test_selectors_and_finishers),
+    with no wide vector payload, no feature join-back and no assembly
+    ArrowEvalPython.  The transcript view is
     spread (single-row-group scans are effectively serial) and cached
     ONCE for its three consumers — the vocabulary-fit token job, the
     role/tool-distinct job and the encode pipeline — so the serial
     file read happens exactly once per run."""
     from sqlfeatureextraction_spark.config import FeatureConfig
     from sqlfeatureextraction_spark.operators.pit_window import (
-        SCALAR_FIELDS,
-        window_feature_scalars,
+        scalar_finish,
+        select_members,
     )
     from sqlfeatureextraction_spark.operators.vectorize import with_turn_scalars
     from sqlfeatureextraction_spark.scanspread import spread_small_scan
@@ -1493,9 +1491,7 @@ def _q_transcript_window_features(spark, sf_dir):
     ).cache()  # three consumers: fit tokens, fit role/tool, encode
     vocab = fit_vocabulary(tx, max_tokens=256)
     vec_s, layout = with_turn_scalars(tx, vocab, cfg)
-    return window_feature_scalars(vec_s, vocab, cfg, layout).select(
-        "conv_id", "ts_sec", *SCALAR_FIELDS
-    )
+    return scalar_finish(select_members(vec_s, cfg), vocab, cfg, layout)
 
 
 def _q_tumbling_window_agg(spark, sf_dir):
@@ -2238,27 +2234,26 @@ def _q_semantic_dedup(spark, sf_dir):
 
 
 def _q_transcript_wf_merge(spark, sf_dir):
-    """Flagship via the salted sort-merge throughput path, projected to
-    the same oracle-checkable scalars (equality of the full vectors
-    between the two paths is additionally pinned by pytest)."""
+    """Flagship via the salted pandas member selector and the scalar
+    finisher, projected to the same oracle-checkable scalars (equality
+    of the two selectors' member rows and of the full vectors is
+    additionally pinned by pytest)."""
     from sqlfeatureextraction_spark.config import FeatureConfig
     from sqlfeatureextraction_spark.operators.asof_merge import (
-        window_features_merge,
+        select_members_salted,
     )
-    from sqlfeatureextraction_spark.operators.vectorize import with_turn_features
+    from sqlfeatureextraction_spark.operators.pit_window import scalar_finish
+    from sqlfeatureextraction_spark.operators.vectorize import with_turn_scalars
     from sqlfeatureextraction_spark.synth import events_as_transcripts
     from sqlfeatureextraction_spark.vocab import fit_vocabulary
 
     cfg = FeatureConfig()
     tx = events_as_transcripts(spark, sf_dir)
     vocab = fit_vocabulary(tx, max_tokens=256)
-    vec, layout = with_turn_features(tx, vocab, cfg)
-    vec = vec.cache()  # used by the stats pass + base/replica branches
-    from sqlfeatureextraction_spark.operators.pit_window import SCALAR_FIELDS
-
-    return window_features_merge(
-        vec, vocab, cfg, layout, scalars_only=True
-    ).select("conv_id", "ts_sec", *SCALAR_FIELDS)
+    vec_s, layout = with_turn_scalars(tx, vocab, cfg)
+    vec_s = vec_s.cache()  # used by the stats pass + base/replica branches
+    members = select_members_salted(vec_s, cfg)
+    return scalar_finish(members, vocab, cfg, layout)
 
 
 def _q_sql_minc_encode(spark, sf_dir):

@@ -34,8 +34,11 @@ from pyspark.sql import functions as F
 from sqlfeatureextraction_spark.session import get_spark
 from sqlfeatureextraction_spark.config import FeatureConfig
 from sqlfeatureextraction_spark.vocab import fit_vocabulary
-from sqlfeatureextraction_spark.operators.vectorize import with_turn_features
-from sqlfeatureextraction_spark.operators.pit_window import window_features_builtin
+from sqlfeatureextraction_spark.operators.vectorize import with_turn_scalars
+from sqlfeatureextraction_spark.operators.pit_window import (
+    scalar_finish,
+    select_members,
+)
 from sqlfeatureextraction_spark.operators.incremental import incremental_update
 
 par = int(os.environ.get("BENCH_PARALLELISM", "8"))
@@ -55,9 +58,8 @@ cfg = FeatureConfig()
 vocab = fit_vocabulary(turns, max_tokens=256)   # shared, untimed
 
 def fn(df):
-    vec, layout = with_turn_features(df, vocab, cfg)
-    return window_features_builtin(vec, vocab, cfg, layout,
-                                   scalars_only=True)
+    vec_s, layout = with_turn_scalars(df, vocab, cfg)
+    return scalar_finish(select_members(vec_s, cfg), vocab, cfg, layout)
 
 is_new = F.abs(F.xxhash64("conv_id")) % 100 < touched_pct
 new_rows = turns.where(is_new)

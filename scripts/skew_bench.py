@@ -1,9 +1,11 @@
 """Hot-key skew benchmark: one conversation holds ALL rows.
 
-The built-in rangeBetween path partitions the window exec by conv_id —
-a single hot conversation pins one task (exactly like the reference's
-one-thread-per-session split, enc/APMFragmentIntent.java:1069-1097).
-The salted merge path splits it into ~n/65k time buckets with overlap
+Both paths run a member selector and the same dense finisher.  The JVM
+selector (window_features_builtin) partitions the window exec by
+conv_id — a single hot conversation pins one task (exactly like the
+reference's one-thread-per-session split,
+enc/APMFragmentIntent.java:1069-1097).  The salted pandas selector
+(window_features_merge) splits it into ~n/65k time buckets with overlap
 replication and processes them in parallel.
 
 Each path runs in its own subprocess with a wall-clock cap so a

@@ -7,8 +7,9 @@ What this checks at scale: the narrow-member design means the member
 shuffle cost is WIDTH-INDEPENDENT (structs of ts/turn/tool/cost/hash);
 only (a) the per-turn Arrow vectorizer, (b) the single wide join-back
 of ≤ k·n selected representatives, and (c) the assembly scatter grow
-with width.  scalars_only=True keeps the ~600 KB arrays from crossing
-back to the JVM (same reduction the driver rows use).
+with width.  The window vectors go to Spark's noop sink, so every
+~600 KB array is assembled and crosses back to the JVM, as in the
+deployment pipeline.
 
 Usage: python scripts/width_stress_bench.py [sf_dir] [reps]
 Prints one JSON line per config; record results in BENCH_SCALING.md.
@@ -59,9 +60,11 @@ def run_once(spark, sf_dir: str, max_tokens: int, k: int, n: int) -> dict:
         )
     vec, layout = with_turn_features(tx, vocab, cfg, sparse="auto")
     vec = vec.cache()
-    out = window_features_builtin(vec, vocab, cfg, layout, scalars_only=True)
-    n_rows = out.count()
+    out = window_features_builtin(vec, vocab, cfg, layout)
+    out.write.format("noop").mode("overwrite").save()
     wall = time.perf_counter() - t0
+    # one window row per distinct (conv_id, ts_sec) anchor
+    n_rows = vec.select("conv_id", "ts_sec").distinct().count()
     vec.unpersist()
     return {
         "max_tokens": max_tokens,

@@ -52,8 +52,9 @@ def audit_truncation(
 
 
 def audit_member_bound(wf_with_bound: DataFrame, ts_col: str = "ts") -> dict:
-    """Assert max_member_ts ≤ ts on a window-feature table that carries
-    provenance (engine emits max_member_ts when audit=True)."""
+    """Assert max_member_ts_sec ≤ ts on a per-anchor provenance table:
+    the newest selected member per anchor, derived from a selector's
+    member rows (rep_turn_idx joined back to the member's ts_sec)."""
     bad = wf_with_bound.where(
         F.col("max_member_ts_sec")
         > F.col(ts_col).cast("timestamp").cast("long")

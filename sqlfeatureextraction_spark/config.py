@@ -61,10 +61,6 @@ class FeatureConfig:
     granularities_s    lag-bucket granularities (seconds).
     train_ratio        per-conversation train split (reference 0.8, :506).
     batch_size         output re-batching size (reference 1000, :500).
-    salt_buckets       number of salt buckets used for hot conv_ids in the
-                       as-of merge path (skew handling).
-    hot_key_threshold  a conv_id is "hot" when its row share exceeds this
-                       fraction of the total (triggers salting).
     merge_rows_per_bucket
                        target rows per time-salt bucket in the as-of merge
                        path: a conversation of n rows splits into
@@ -83,6 +79,4 @@ class FeatureConfig:
     granularities_s: tuple[int, ...] = field(default=DEFAULT_GRANULARITIES)
     train_ratio: float = 0.8
     batch_size: int = 1000
-    salt_buckets: int = 8
-    hot_key_threshold: float = 0.05
     merge_rows_per_bucket: int = 65536

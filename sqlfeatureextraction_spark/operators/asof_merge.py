@@ -1,31 +1,33 @@
-"""Sort-merge point-in-time window features with explicit skew handling
-— the throughput-critical path (north rule).
+"""Salted pandas member selector — the hot-key path, and the deployment
+pipeline's window stage.
 
-Same semantics as pit_window.window_features_builtin (trailing
-right-closed ``(ts−W, ts]`` window per distinct (conv_id, ts); dedupe
-intent-equal members summing cost; top-K entities; top-N members;
-fixed-width assembly — reference enc/APMWindowFragmentIntent.java:
-266-493), but executed as ONE shuffle + ONE sorted pandas pass:
+Emits the same member rows as ``pit_window.select_members`` (the
+member-row contract in the pit_window module docstring) and feeds the
+same finishers; ``window_features_merge`` is its dense composition.
+Semantics are the reference's (enc/APMWindowFragmentIntent.java:
+266-493): trailing right-closed ``(ts−W, ts]`` window per distinct
+(conv_id, ts); dedupe intent-equal members summing cost; top-K
+entities; top-N members.  It runs as ONE narrow shuffle + ONE sorted
+pandas pass:
 
-  1. hot-key detection: a cheap ``groupBy(conv_id).count()`` finds
-     conversations holding more than ``hot_key_threshold`` of all rows
-     (the reference pins a hot session to one thread,
-     enc/APMFragmentIntent.java:1069-1097 — it cannot split it; we can);
-  2. salting by time range: hot conversations are split into buckets of
-     ``span = max(8·W, hot_span/salt_buckets)`` seconds; rows in the
-     trailing ``W−1`` seconds of a bucket are REPLICATED into the next
-     bucket as context-only (is_anchor=false) so every anchor still
-     sees its full trailing window — overlap replication, the classic
-     point-in-time-join trick (SURVEY §7.3);
-  3. ``groupBy(conv_id, salt).applyInPandas``: inside, a two-pointer
-     ``np.searchsorted`` builds (anchor, member) pairs and dedupe /
-     top-K / top-N / assembly are pandas groupby + 2-D fancy-index
-     scatter — numpy column ops only, no per-row Python.
+  1. adaptive time salting (``_salted``): a per-conversation stats pass
+     (count, min/max ts) splits a conversation of n rows into
+     ``ceil(n / cfg.merge_rows_per_bucket)`` time-range buckets; rows
+     in the trailing ``W−1`` seconds of a bucket are REPLICATED into
+     the next bucket as context-only (is_anchor=false) so every anchor
+     still sees its full trailing window — overlap replication, the
+     classic point-in-time-join trick (SURVEY §7.3).  The reference
+     pins a hot session to one thread (enc/APMFragmentIntent.java:
+     1069-1097 — it cannot split it; we can);
+  2. ``groupBy(_grp, salt).applyInPandas`` over coarse conversation
+     buckets: inside, a two-pointer ``np.searchsorted`` builds
+     (anchor, member) pairs and dedupe / top-K / top-N are pandas
+     groupby + sorts — numpy column ops only, no per-row Python.
 
-Compared to the built-in path this avoids materializing a
-``collect_list`` of feature arrays per anchor and the three downstream
-shuffles on (conv_id, ts) — it shuffles each input row at most twice
-(once if not replicated).
+Against the JVM selector it wins on hot, dense windows (one
+conversation holding 100k rows, local[4] on 4 cores: 14.8 s vs 70.9 s,
+scripts/skew_bench.py) and shuffles each input row at most twice (once
+if not replicated).
 """
 
 from __future__ import annotations
@@ -36,7 +38,11 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from sqlfeatureextraction_spark.config import FeatureConfig
-from sqlfeatureextraction_spark.layout import VectorLayout, window_vector_width
+from sqlfeatureextraction_spark.layout import VectorLayout
+from sqlfeatureextraction_spark.operators.pit_window import (
+    TURN_SUMS,
+    dense_finish,
+)
 from sqlfeatureextraction_spark.vocab import Vocabulary
 
 
@@ -90,18 +96,18 @@ def _salted(vec: DataFrame, cfg: FeatureConfig) -> DataFrame:
     return base.unionByName(repl).drop("_t0", "_span")
 
 
-def _window_merge_fn(cfg: FeatureConfig, audit: bool = False):
+def _window_merge_fn(cfg: FeatureConfig, sums: list[str]):
     """Member-selection core of the merge path.
 
-    Returns SLIM selected-member rows — (anchor conv_id, ts_sec, ts,
-    slot_idx, member_idx, tool, rep_turn_idx) — NOT assembled vectors:
+    Returns member rows — (anchor conv_id, ts_sec, ts, slot_idx,
+    member_idx, tool, rep_turn_idx, *sums) — NOT assembled vectors:
     shipping the wide feature arrays through the pandas stage (input
     AND output) measured 30× slower than the narrow formulation at
     local[2] (object-dtype vstack of millions of tiny ndarrays + Arrow
-    list-array materialization).  The ≤ k·n selected representatives
-    join their feature vectors back JVM-side and reuse the builtin
-    path's Arrow assembler, so the wide arrays cross the wire exactly
-    once, identically to pit_window."""
+    list-array materialization).  The finishers take it from there,
+    so the wide arrays cross the wire exactly once, identically to
+    the JVM selector.  ``sums`` (a subset of TURN_SUMS) pass through
+    the dedupe as the representative's segment sums."""
     k, n = cfg.top_k_entities, cfg.top_n_members
     win = cfg.window_size_s
 
@@ -127,9 +133,8 @@ def _window_merge_fn(cfg: FeatureConfig, audit: bool = False):
             "member_idx": pd.Series(dtype=np.int32),
             "tool": pd.Series(dtype=object),
             "rep_turn_idx": pd.Series(dtype=np.int64),
+            **{s: pd.Series(dtype=np.int32) for s in sums},
         }
-        if audit:
-            empty["max_member_ts_sec"] = pd.Series(dtype=np.int64)
         if len(ts) == 0 or not anchor_mask.any():
             return pd.DataFrame(empty)
         conv_arr = pdf["conv_id"].to_numpy()
@@ -158,15 +163,18 @@ def _window_merge_fn(cfg: FeatureConfig, audit: bool = False):
                 "cost": pdf["cost"].to_numpy(np.int64)[midx],
                 "mts": ts[midx],
                 "mturn": pdf["turn_idx"].to_numpy(np.int64)[midx],
+                **{s: pdf[s].to_numpy()[midx] for s in sums},
             }
         )
         # A2 dedupe: first (ts, turn) representative + summed cost per
-        # (anchor, tool, vec_hash) — input is ts/turn-sorted already
+        # (anchor, tool, vec_hash) — input is ts/turn-sorted already;
+        # the sums depend on vec_hash alone, so "first" is exact
         grp = pairs.groupby(["a", "tool", "h"], sort=False)
         dd = grp.agg(
             cost=("cost", "sum"),
             mts=("mts", "first"),
             mturn=("mturn", "first"),
+            **{s: (s, "first") for s in sums},
         ).reset_index()
 
         # W6 top-K tools by summed cost (cost desc, tool asc)
@@ -197,47 +205,25 @@ def _window_merge_fn(cfg: FeatureConfig, audit: bool = False):
             "member_idx": mm["mi"].to_numpy().astype(np.int32),
             "tool": mm["tool"].to_numpy(),
             "rep_turn_idx": mm["mturn"].to_numpy(np.int64),
+            **{s: mm[s].to_numpy(np.int32) for s in sums},
         }
-        if audit:
-            # provenance: newest member actually in the window per
-            # anchor — audit_member_bound asserts ≤ the anchor ts
-            res["max_member_ts_sec"] = ts[hi - 1][a]
         return pd.DataFrame(res)
 
     return fn
 
 
-def window_features_merge(
-    vec: DataFrame,
-    vocab: Vocabulary,
-    cfg: FeatureConfig,
-    layout: VectorLayout,
-    audit: bool = False,
-    scalars_only: bool = False,
-) -> DataFrame:
-    """(conv_id, ts) → window_features via salted applyInPandas merge.
+def select_members_salted(vec: DataFrame, cfg: FeatureConfig) -> DataFrame:
+    """Salted pandas member selector: turn table → member rows.
 
-    Stage plan (all NARROW until the final join):
-      1. per-conv stats + adaptive time salting (`_salted`) — feature
-         arrays are NOT selected into this branch;
+    Stage plan (all NARROW — feature arrays are never selected in):
+      1. per-conv stats + adaptive time salting (`_salted`);
       2. ONE narrow shuffle into coarse conversation buckets
          ((hash(conv_id) % 4·cores, salt)) → vectorized pandas member
          selection (searchsorted over the composite timeline, dedupe,
-         top-K/top-N) emitting ≤ k·n slim rows per anchor;
-      3. the selected representatives join their feature vectors back
-         by (conv_id, turn_idx) — the wide array crosses the wire
-         exactly once — and the builtin path's Arrow assembler builds
-         the fixed-width output.
-
-    audit=True appends max_member_ts_sec provenance for
-    audit.audit_member_bound."""
-    from sqlfeatureextraction_spark.operators.pit_window import (
-        SCALAR_FIELDS,
-        _assemble_udf,
-    )
-
+         top-K/top-N) emitting ≤ k·n member rows per anchor."""
+    sums = [c for c in TURN_SUMS if c in vec.columns]
     cols = ["conv_id", "ts", "ts_sec", "turn_idx", "tool", "cost", "vec_hash"]
-    salted = _salted(vec.select(*cols), cfg)
+    salted = _salted(vec.select(*cols, *sums), cfg)
     # coarse conversation buckets: many conversations per pandas call
     # (per-call overhead amortized ~300×), vectorized inside over the
     # composite timeline; the time salt still splits hot conversations
@@ -245,57 +231,25 @@ def window_features_merge(
     salted = salted.withColumn(
         "_grp", F.pmod(F.xxhash64("conv_id"), F.lit(n_grp))
     )
-    fn = _window_merge_fn(cfg, audit=audit)
     member_schema = (
         "conv_id string, ts_sec long, ts timestamp, slot_idx int,"
         " member_idx int, tool string, rep_turn_idx long"
+    ) + "".join(f", {s} int" for s in sums)
+    return salted.groupBy("_grp", "salt").applyInPandas(
+        _window_merge_fn(cfg, sums), member_schema
     )
-    if audit:
-        member_schema += ", max_member_ts_sec long"
-    members = salted.groupBy("_grp", "salt").applyInPandas(fn, member_schema)
 
-    feats = vec.select(
-        "conv_id",
-        F.col("turn_idx").cast("long").alias("rep_turn_idx"),
-        F.col("features").alias("g_features"),
+
+def window_features_merge(
+    vec: DataFrame,
+    vocab: Vocabulary,
+    cfg: FeatureConfig,
+    layout: VectorLayout,
+) -> DataFrame:
+    """(conv_id, ts) → window_features — the salted selector and the
+    dense finisher (the selected representatives join their feature
+    vectors back by (conv_id, turn_idx), so the wide array crosses the
+    wire exactly once)."""
+    return dense_finish(
+        select_members_salted(vec, cfg), vec, vocab, cfg, layout
     )
-    joined = members.join(feats, ["conv_id", "rep_turn_idx"])
-
-    assemble, out_w = _assemble_udf(vocab, cfg, layout, scalars_only)
-    aggs = [
-        F.collect_list(
-            F.struct(
-                F.col("slot_idx"),
-                F.col("member_idx"),
-                F.col("tool"),
-                F.col("g_features").alias("features"),
-            )
-        ).alias("slots")
-    ]
-    if audit:
-        aggs.append(F.max("max_member_ts_sec").alias("max_member_ts_sec"))
-    slots = joined.groupBy("conv_id", "ts_sec", "ts").agg(*aggs)
-    if scalars_only:
-        out_cols = [
-            "conv_id",
-            "ts_sec",
-            "ts",
-            assemble(F.col("slots")).alias("s"),
-        ]
-        if audit:
-            out_cols.append("max_member_ts_sec")
-        keep = ["conv_id", "ts_sec", "ts"] + [
-            f"s.{f}" for f in SCALAR_FIELDS
-        ]
-        if audit:
-            keep.append("max_member_ts_sec")
-        return slots.select(*out_cols).select(*keep)
-    out_cols = [
-        "conv_id",
-        "ts_sec",
-        "ts",
-        assemble(F.col("slots")).alias("window_features"),
-    ]
-    if audit:
-        out_cols.append("max_member_ts_sec")
-    return slots.select(*out_cols)

@@ -10,8 +10,29 @@ per entity (:376-386), and concatenate member vectors with zero-padding
 O(W·N) — and re-parses every SQL per window; this plan is a single
 sort-based pass that reuses the per-turn vector computed once.
 
-Spark-first formulation (this module = the pure built-in path; the
-salted ``applyInPandas`` sort-merge path lives in asof_merge.py):
+One member-row contract, two producers, two finishers.  A selector
+emits one row per SELECTED member:
+
+    (conv_id, ts_sec, ts, slot_idx, member_idx, tool, rep_turn_idx)
+
+plus the representative's per-segment sums ``s_time … s_lag`` when the
+turn table carries them (``vectorize.with_turn_scalars``).  Producers:
+
+  * ``select_members`` (here) — the JVM selector;
+  * ``asof_merge.select_members_salted`` — the salted pandas selector,
+    which wins on hot, dense conversations (scripts/skew_bench.py).
+
+Finishers:
+
+  * ``dense_finish`` — the representatives' feature vectors join back
+    and one Arrow pandas UDF assembles the fixed-width window vector;
+  * ``scalar_finish`` — ``SCALAR_FIELDS`` by exact integer sums on the
+    JVM, no vector and no Python stage.
+
+``window_features_builtin`` (here) and ``asof_merge.
+window_features_merge`` are the two dense compositions.
+
+JVM selector formulation:
 
   1. member lists via ``collect_list().over(rangeBetween(-(W-1), 0))``
      — Spark's sort-based window exec: one shuffle on conv_id, one
@@ -19,23 +40,17 @@ salted ``applyInPandas`` sort-merge path lives in asof_merge.py):
      is ``rangeBetween(-(W−1), 0)`` on integral epoch seconds (Spark's
      own ``F.window`` is left-closed and cannot express this).
      **Member structs are NARROW** — (ts_sec, turn_idx, tool, cost,
-     vec_hash), NOT the feature array: carrying the ~2KB vector through
-     the window materialization and the dedupe shuffle multiplies
-     shuffle bytes by the mean window size (measured: the dominant cost
-     at 3M rows, and catastrophic for dense windows).
+     vec_hash[, s_*]), NOT the feature array: carrying the ~2KB vector
+     through the window materialization and the dedupe shuffle
+     multiplies shuffle bytes by the mean window size (measured: the
+     dominant cost at 3M rows, and catastrophic for dense windows).
   2. one anchor row per distinct (conv_id, ts) — the reference skips
      windows with an end-ts equal to the previous one (:280-284);
      with ties all peer rows carry identical member lists (RANGE frame
      includes peers), so any representative is exact.
-  3. dedupe/top-K/top-N as groupBy + window functions on the
-     (conv_id, ts) key family — dense_rank instead of a top-tools
-     self-join (a join would recompute the whole upstream twice).
-  4. the ≤ top_k×top_n SELECTED members join their feature vectors
-     back by (conv_id, turn_idx) — the full-width vector is shuffled
-     exactly once, on the vec side of this join.  `vec` should be
-     cached/materialized by the caller (FeaturePipeline does) since
-     it feeds both this join and the turn-feature output.
-  5. final fixed-width assembly: one Arrow pandas UDF, numpy scatter.
+  3. dedupe/top-K/top-N as a hash groupBy + window functions on the
+     (conv_id, ts) key family — ranks instead of a top-tools self-join
+     (a join would recompute the whole upstream twice).
 
 Tie-breaking is a DEFINED total order (the reference's is JVM-HashMap
 order, SURVEY §4.4.4): entities by (cost desc, tool asc); members by
@@ -55,11 +70,13 @@ from sqlfeatureextraction_spark.config import FeatureConfig
 from sqlfeatureextraction_spark.layout import VectorLayout, window_vector_width
 from sqlfeatureextraction_spark.vocab import Vocabulary
 
-MEMBER_STRUCT = "struct(ts_sec, turn_idx, tool, cost, vec_hash)"
+# per-turn segment sums (vectorize.with_turn_scalars) that ride along
+# with the member rows when the turn table carries them
+TURN_SUMS = ("s_time", "s_role", "s_tool", "s_bow", "s_lag")
 
-# scalar projection fields emitted by scalars_only assembly: the fixed
-# width, the tool-intent segment sum, PER-SEGMENT sums of the slotted
-# turn vectors (time/role/tool/bow/lag — each independently
+# scalar projection fields emitted by scalar_finish: the fixed width,
+# the tool-intent segment sum, PER-SEGMENT sums of the slotted turn
+# vectors (time/role/tool/bow/lag — each independently
 # oracle-checkable), and the whole-vector sum
 SCALAR_FIELDS = (
     "width",
@@ -74,65 +91,133 @@ SCALAR_FIELDS = (
 
 
 def pit_member_pairs(vec: DataFrame, cfg: FeatureConfig) -> DataFrame:
-    """(anchor conv_id, ts, ts_sec) × exploded NARROW members with
-    ts' ∈ (ts−W, ts]."""
+    """(anchor conv_id, ts_sec, ts) × exploded NARROW members with
+    ts' ∈ (ts−W, ts]: m_ts_sec, m_turn_idx, m_tool ("" for NULL),
+    m_cost, m_vec_hash, plus the ``TURN_SUMS`` the turn table carries.
+
+    The anchor at each distinct (conv_id, ts_sec) is its MIN-turn_idx
+    row (its full-precision ts becomes the output ts) — the same
+    convention as the salted selector and the pandas oracle, so
+    sub-second timestamps cannot make the two selectors disagree."""
+    sums = [c for c in TURN_SUMS if c in vec.columns]
     w = (
         Window.partitionBy("conv_id")
         .orderBy("ts_sec")
         .rangeBetween(-(cfg.window_size_s - 1), 0)
     )
-    # anchor representative at each distinct (conv_id, ts_sec) = the
-    # MIN-turn_idx row (its full-precision ts becomes the output ts) —
-    # the same convention as the merge path and the pandas oracle, so
-    # sub-second timestamps cannot make the two paths disagree
     tie = Window.partitionBy("conv_id", "ts_sec").orderBy(F.asc("turn_idx"))
+    member = F.struct("ts_sec", "turn_idx", "tool", "cost", "vec_hash", *sums)
+    # explicit conv_id repartition: a Python eval node upstream
+    # cannot advertise partitioning, so without this the planner
+    # satisfies the tie window with a (conv_id, ts_sec) exchange and
+    # then needs a SECOND exchange back to conv_id for the range
+    # window; pinning conv_id here lets one exchange serve the entire
+    # downstream chain (every partition spec is a conv_id superset)
+    vec = vec.repartition("conv_id")
+    # _rn FIRST: its (conv_id, ts_sec, turn_idx) sort also satisfies
+    # the (conv_id, ts_sec)-sorted range-frame member window, so the
+    # planner emits ONE sort for both (members computed over ALL rows
+    # — the _rn filter only selects which row keeps the list, and a
+    # filter on a window output never pushes below the other window)
     anchors = (
-        vec.select(
+        vec.withColumn("_rn", F.row_number().over(tie))
+        .select(
             "conv_id",
-            "ts",
             "ts_sec",
-            "turn_idx",
-            F.collect_list(F.expr(MEMBER_STRUCT)).over(w).alias("members"),
+            "ts",
+            "_rn",
+            F.collect_list(member).over(w).alias("members"),
         )
-        .withColumn("_rn", F.row_number().over(tie))
         .where(F.col("_rn") == 1)
-        .drop("_rn", "turn_idx")
+        .drop("_rn")
     )
     m = F.explode("members").alias("m")
-    return anchors.select("conv_id", "ts", "ts_sec", m).select(
+    return anchors.select("conv_id", "ts_sec", "ts", m).select(
         "conv_id",
-        "ts",
         "ts_sec",
+        "ts",
         F.col("m.ts_sec").alias("m_ts_sec"),
         F.col("m.turn_idx").alias("m_turn_idx"),
         F.coalesce(F.col("m.tool"), F.lit("")).alias("m_tool"),
         F.col("m.cost").alias("m_cost"),
         F.col("m.vec_hash").alias("m_vec_hash"),
+        *[F.col(f"m.{s}").alias(s) for s in sums],
     )
 
 
-def _assemble_udf(
-    vocab: Vocabulary,
-    cfg: FeatureConfig,
-    layout: VectorLayout,
-    scalars_only: bool = False,
-):
-    """W8 fixed-width assembler.
+def select_members(vec: DataFrame, cfg: FeatureConfig) -> DataFrame:
+    """JVM member selector: turn table → member rows (module
+    docstring).  Input: a turn table with conv_id, ts, ts_sec,
+    turn_idx, tool, cost, vec_hash (``with_turn_features`` or
+    ``with_turn_scalars`` output).
 
-    scalars_only=True runs the IDENTICAL matrix scatter but reduces the
-    assembled rows to SCALAR_FIELDS inside the same Arrow pass — for
-    consumers (driver correctness rows, bench) that only check scalar
-    projections, the ~out_w×8B per-row array never crosses back to the
-    JVM.  The per-turn-segment sums (time/role/tool/bow/lag) are taken
-    over the slot region reshaped to (rows, k·n, turn_w), so each of
-    the turn layout's segments is verified independently instead of
-    one whole-vector sum.
-    """
+    Whole chain: one hash exchange on conv_id (``pit_member_pairs``);
+    every groupBy/window after it is keyed on a superset of conv_id
+    and reuses it.  The member-rank window runs BEFORE the slot-rank
+    window so its filter shrinks the rows the second sort sees."""
+    sums = [c for c in TURN_SUMS if c in vec.columns]
+    pairs = pit_member_pairs(vec, cfg)
+
+    # A2 dedupe: intent-equal members within the window, summing cost;
+    # representative = earliest (ts, turn_idx) member.  Kept
+    # HASH-aggregable (all-primitive keys and buffers; min(struct)
+    # would force a SortAggregate + an extra 5-key sort):
+    #   * the per-segment sums are functionally dependent on
+    #     m_vec_hash (equal hash ⇒ equal vector ⇒ equal sums), so
+    #     adding them to the GROUP KEY cannot split any group;
+    #   * the (m_ts_sec, m_turn_idx) representative order packs into
+    #     one BIGINT — ts_sec < 2^32 until year 2106 and turn_idx is a
+    #     non-negative int32, so (ts_sec << 31) + turn_idx stays below
+    #     2^63 and preserves the lexicographic order exactly.
+    g_ord_packed = (
+        F.shiftleft(F.col("m_ts_sec"), 31) + F.col("m_turn_idx")
+    ).cast("long")
+    dedup = pairs.groupBy(
+        "conv_id", "ts_sec", "ts", "m_tool", "m_vec_hash", *sums
+    ).agg(
+        F.sum("m_cost").alias("g_cost"),
+        F.min(g_ord_packed).alias("g_ord"),
+    )
+
+    # W7 then W6: member rank FIRST (its sort also satisfies the
+    # order-free tool_cost window: same partition-key prefix), filter
+    # to <= top_n per tool, THEN rank tools — the slot sort runs on
+    # the filtered rows
+    tool_cost_w = Window.partitionBy("conv_id", "ts_sec", "m_tool")
+    mem_w = Window.partitionBy("conv_id", "ts_sec", "m_tool").orderBy(
+        F.desc("g_cost"), F.asc("g_ord")
+    )
+    slot_w = Window.partitionBy("conv_id", "ts_sec").orderBy(
+        F.desc("tool_cost"), F.asc("m_tool")
+    )
+    members = (
+        dedup.withColumn("member_idx", F.row_number().over(mem_w) - 1)
+        .withColumn("tool_cost", F.sum("g_cost").over(tool_cost_w))
+        .where(F.col("member_idx") < cfg.top_n_members)
+        .withColumn("slot_idx", F.dense_rank().over(slot_w) - 1)
+        .where(F.col("slot_idx") < cfg.top_k_entities)
+    )
+    return members.select(
+        "conv_id",
+        "ts_sec",
+        "ts",
+        "slot_idx",
+        "member_idx",
+        F.col("m_tool").alias("tool"),
+        # the low 31 bits of the packed order are the turn_idx
+        F.col("g_ord").bitwiseAND(F.lit((1 << 31) - 1)).alias("rep_turn_idx"),
+        *sums,
+    )
+
+
+def _assemble_udf(vocab: Vocabulary, cfg: FeatureConfig, layout: VectorLayout):
+    """W8 fixed-width assembler: one Arrow pandas UDF over each
+    anchor's collected (slot_idx, member_idx, tool, features) slots."""
     turn_w = layout.width
     tool_bits = dict(vocab.tools)
     n_tools = layout.seg("tool").width
-    k, n = cfg.top_k_entities, cfg.top_n_members
-    out_w = window_vector_width(layout, k, n)
+    n = cfg.top_n_members
+    out_w = window_vector_width(layout, cfg.top_k_entities, n)
 
     def _fill(slots: pd.Series) -> np.ndarray:
         """tool_intent(|T|) ‖ slot-major, member-minor turn vectors,
@@ -160,113 +245,46 @@ def _assemble_udf(
                     mat[i, start : start + turn_w] = f
         return mat
 
-    if scalars_only:
-        seg_slices = {
-            s.name: (s.offset, s.offset + s.width) for s in layout.segments
-        }
-
-        @F.pandas_udf(
-            "struct<width:int, tool_bits:bigint, time_sum:bigint,"
-            " role_sum:bigint, tool_sum:bigint, bow_sum:bigint,"
-            " lag_sum:bigint, feat_sum:bigint>"
-        )
-        def assemble_scalars(slots: pd.Series) -> pd.DataFrame:
-            mat = _fill(slots)
-            body = mat[:, n_tools:].reshape(len(slots), k * n, turn_w)
-            cols = {
-                "width": np.full(len(slots), out_w, dtype=np.int32),
-                "tool_bits": mat[:, :n_tools].sum(axis=1).astype(np.int64),
-            }
-            for name, (lo, hi) in seg_slices.items():
-                cols[f"{name}_sum"] = (
-                    body[:, :, lo:hi].sum(axis=(1, 2)).astype(np.int64)
-                )
-            cols["feat_sum"] = mat.sum(axis=1).astype(np.int64)
-            return pd.DataFrame(cols)
-
-        return assemble_scalars, out_w
-
     @F.pandas_udf(T.ArrayType(T.FloatType()))
     def assemble(slots: pd.Series) -> pd.Series:
         return pd.Series(list(_fill(slots)))
 
-    return assemble, out_w
+    return assemble
 
 
-def window_features_builtin(
+def dense_finish(
+    members: DataFrame,
     vec: DataFrame,
     vocab: Vocabulary,
     cfg: FeatureConfig,
     layout: VectorLayout,
-    scalars_only: bool = False,
 ) -> DataFrame:
-    """(conv_id, ts) → window_features:array<double> via pure DataFrame ops.
+    """Member rows → (conv_id, ts_sec, ts, window_features).
 
-    scalars_only=True emits (width, tool_bits, feat_sum) instead of the
-    array — same pipeline and same matrix scatter, reduced in-UDF."""
-    pairs = pit_member_pairs(vec, cfg)
-
-    # A2: dedupe intent-equal members within the window, summing cost;
-    # representative = earliest (ts, turn_idx) member.
-    dedup = pairs.groupBy("conv_id", "ts", "ts_sec", "m_tool", "m_vec_hash").agg(
-        F.sum("m_cost").alias("g_cost"),
-        F.min(F.struct("m_ts_sec", "m_turn_idx")).alias("g_ord"),
-    )
-
-    # W6 + W7 as window functions over ONE pipeline — a join of
-    # top-tools back onto dedup would make Catalyst compute the whole
-    # upstream (scan + Arrow vectorizer) twice; dense_rank over the
-    # same (conv_id, ts_sec) partitioning keeps it single-pass and
-    # reuses the groupBy's hash partitioning (no extra shuffle).
-    tool_cost_w = Window.partitionBy("conv_id", "ts_sec", "m_tool")
-    slot_w = Window.partitionBy("conv_id", "ts_sec").orderBy(
-        F.desc("tool_cost"), F.asc("m_tool")
-    )
-    mem_w = Window.partitionBy("conv_id", "ts_sec", "m_tool").orderBy(
-        F.desc("g_cost"), F.asc("g_ord")
-    )
-    members = (
-        dedup.withColumn("tool_cost", F.sum("g_cost").over(tool_cost_w))
-        .withColumn("slot_idx", F.dense_rank().over(slot_w) - 1)
-        .where(F.col("slot_idx") < cfg.top_k_entities)
-        .withColumn("member_idx", F.row_number().over(mem_w) - 1)
-        .where(F.col("member_idx") < cfg.top_n_members)
-    )
-
-    # join the representative's feature vector back — the wide array is
-    # shuffled once (vec side); `members` is ≤ k·n rows per anchor
+    The ≤ k·n selected representatives join their feature vectors back
+    by (conv_id, turn_idx) — the wide array is shuffled once, on the
+    vec side of this join.  `vec` should be cached/materialized by the
+    caller (FeaturePipeline does) since it feeds both the selector and
+    this join.  ts_sec rides along (1:1 with ts per conv — the anchor
+    key family) so downstream joins can normalize on the epoch key
+    even with sub-second timestamps."""
     feats = vec.select(
         "conv_id",
-        F.col("turn_idx").alias("rep_turn_idx"),
+        F.col("turn_idx").cast("long").alias("rep_turn_idx"),
         F.col("features").alias("g_features"),
     )
-    members = members.withColumn(
-        "rep_turn_idx", F.col("g_ord").getField("m_turn_idx")
-    ).join(feats, ["conv_id", "rep_turn_idx"])
-
-    # W8: fixed-width assembly.  ts_sec rides along (1:1 with ts per
-    # conv — the anchor key family) so downstream joins can normalize
-    # on the epoch key even with sub-second timestamps.
-    assemble, out_w = _assemble_udf(vocab, cfg, layout, scalars_only)
-    slots = members.groupBy("conv_id", "ts_sec", "ts").agg(
+    joined = members.join(feats, ["conv_id", "rep_turn_idx"])
+    slots = joined.groupBy("conv_id", "ts_sec", "ts").agg(
         F.collect_list(
             F.struct(
                 F.col("slot_idx"),
                 F.col("member_idx"),
-                F.col("m_tool").alias("tool"),
+                F.col("tool"),
                 F.col("g_features").alias("features"),
             )
         ).alias("slots")
     )
-    if scalars_only:
-        return slots.select(
-            "conv_id",
-            "ts_sec",
-            "ts",
-            assemble(F.col("slots")).alias("s"),
-        ).select(
-            "conv_id", "ts_sec", "ts", *[f"s.{f}" for f in SCALAR_FIELDS]
-        )
+    assemble = _assemble_udf(vocab, cfg, layout)
     return slots.select(
         "conv_id",
         "ts_sec",
@@ -275,182 +293,53 @@ def window_features_builtin(
     )
 
 
-def window_feature_scalars(
-    vec_s: DataFrame,
+def scalar_finish(
+    members: DataFrame,
     vocab: Vocabulary,
     cfg: FeatureConfig,
     layout: VectorLayout,
 ) -> DataFrame:
-    """Flagship SCALAR projection via narrow per-turn sums — the same
-    output as ``window_features_builtin(..., scalars_only=True)``
-    (pinned by tests), with the payload path removed (guide §2.3/§8):
+    """Member rows carrying ``TURN_SUMS`` → (conv_id, ts_sec,
+    *SCALAR_FIELDS) by exact integer arithmetic on the JVM — the same
+    values as reducing ``dense_finish``'s vectors, without the wide
+    vector, the feature join-back or the assembly UDF:
 
-      * input is ``with_turn_scalars`` output — per-turn segment sums
-        ride IN the member struct (5 extra int32s), so the
-        feature-join back onto ``vec`` disappears, and with it the
-        caching / broadcast of the wide vector column;
-      * the fixed-width matrix scatter is replaced by exact integer
-        arithmetic on the JVM: segment sums of the assembled window
-        matrix = Σ over selected members of their per-turn segment
-        sums (slots never overlap: (slot_idx, member_idx) is unique
-        per anchor), and the tool-intent popcount = the number of
-        distinct in-vocabulary tools among selected members — so the
-        second ArrowEvalPython node disappears too.
-
-    Whole pipeline: exactly two hash exchanges on conv_id (the second
-    only because the Python-eval node cannot advertise that it
-    preserves its child's partitioning); every groupBy/window after it
-    is keyed on a superset of conv_id and reuses the one exchange.
-    Sort placement is deliberate: the anchor-tie row_number orders by
-    turn_idx so ONE (conv_id, ts_sec, turn_idx) sort serves both it
-    and the range-frame member window; the member-rank window runs
-    BEFORE the slot-rank window so its filter shrinks the rows the
-    second sort sees."""
-    w = (
-        Window.partitionBy("conv_id")
-        .orderBy("ts_sec")
-        .rangeBetween(-(cfg.window_size_s - 1), 0)
-    )
-    tie = Window.partitionBy("conv_id", "ts_sec").orderBy(F.asc("turn_idx"))
-    member = F.struct(
-        "ts_sec",
-        "turn_idx",
-        "tool",
-        "cost",
-        "vec_hash",
-        "s_time",
-        "s_role",
-        "s_tool",
-        "s_bow",
-        "s_lag",
-    )
-    # explicit conv_id repartition: the Python eval node upstream
-    # cannot advertise partitioning, so without this the planner
-    # satisfies the tie window with a (conv_id, ts_sec) exchange and
-    # then needs a SECOND exchange back to conv_id for the range
-    # window; pinning conv_id here lets one exchange serve the entire
-    # downstream chain (every partition spec is a conv_id superset)
-    vec_s = vec_s.repartition("conv_id")
-    # _rn FIRST: its (conv_id, ts_sec, turn_idx) sort also satisfies
-    # the (conv_id, ts_sec)-sorted range-frame member window, so the
-    # planner emits ONE sort for both (members computed over ALL rows
-    # — the _rn filter only selects which row keeps the list, and a
-    # filter on a window output never pushes below the other window)
-    anchors = (
-        vec_s.withColumn("_rn", F.row_number().over(tie))
-        .select(
-            "conv_id",
-            "ts_sec",
-            "_rn",
-            F.collect_list(member).over(w).alias("members"),
-        )
-        .where(F.col("_rn") == 1)
-        .drop("_rn")
-    )
-    m = F.explode("members").alias("m")
-    pairs = anchors.select("conv_id", "ts_sec", m).select(
-        "conv_id",
-        "ts_sec",
-        F.col("m.ts_sec").alias("m_ts_sec"),
-        F.col("m.turn_idx").alias("m_turn_idx"),
-        F.coalesce(F.col("m.tool"), F.lit("")).alias("m_tool"),
-        F.col("m.cost").alias("m_cost"),
-        F.col("m.vec_hash").alias("m_vec_hash"),
-        F.col("m.s_time").alias("m_s_time"),
-        F.col("m.s_role").alias("m_s_role"),
-        F.col("m.s_tool").alias("m_s_tool"),
-        F.col("m.s_bow").alias("m_s_bow"),
-        F.col("m.s_lag").alias("m_s_lag"),
-    )
-
-    # A2 dedupe — identical grouping to window_features_builtin, kept
-    # HASH-aggregable (all-primitive keys and buffers; min(struct)
-    # would force a SortAggregate + an extra 5-key sort):
-    #   * the per-segment sums are functionally dependent on
-    #     m_vec_hash (equal hash ⇒ equal vector ⇒ equal sums), so
-    #     adding them to the GROUP KEY cannot split any group;
-    #   * the (m_ts_sec, m_turn_idx) representative order packs into
-    #     one BIGINT — ts_sec < 2^32 until year 2106 and turn_idx is a
-    #     non-negative int32, so (ts_sec << 31) + turn_idx stays below
-    #     2^63 and preserves the lexicographic order exactly.
-    g_ord_packed = (
-        F.shiftleft(F.col("m_ts_sec"), 31) + F.col("m_turn_idx")
-    ).cast("long")
-    dedup = pairs.groupBy(
-        "conv_id",
-        "ts_sec",
-        "m_tool",
-        "m_vec_hash",
-        "m_s_time",
-        "m_s_role",
-        "m_s_tool",
-        "m_s_bow",
-        "m_s_lag",
-    ).agg(
-        F.sum("m_cost").alias("g_cost"),
-        F.min(g_ord_packed).alias("g_ord"),
-    )
-
-    # member rank FIRST (its sort also satisfies the order-free
-    # tool_cost window: same partition-key prefix), filter to <= top_n
-    # per tool, THEN rank tools — the slot sort runs on the filtered
-    # rows
-    tool_cost_w = Window.partitionBy("conv_id", "ts_sec", "m_tool")
-    mem_w = Window.partitionBy("conv_id", "ts_sec", "m_tool").orderBy(
-        F.desc("g_cost"), F.asc("g_ord")
-    )
-    slot_w = Window.partitionBy("conv_id", "ts_sec").orderBy(
-        F.desc("tool_cost"), F.asc("m_tool")
-    )
-    members = (
-        dedup.withColumn("member_idx", F.row_number().over(mem_w) - 1)
-        .withColumn("tool_cost", F.sum("g_cost").over(tool_cost_w))
-        .where(F.col("member_idx") < cfg.top_n_members)
-        .withColumn("slot_idx", F.dense_rank().over(slot_w) - 1)
-        .where(F.col("slot_idx") < cfg.top_k_entities)
-    )
-
+      * segment sums of the assembled window matrix = Σ over selected
+        members of their per-turn segment sums (slots never overlap:
+        (slot_idx, member_idx) is unique per anchor);
+      * the tool-intent popcount = the number of distinct
+        in-vocabulary tools among selected members.  Every selected
+        slot has exactly one member_idx == 0 row and its own tool, so
+        a plain sum counts them — no collect_set, whose
+        ObjectHashAggregate can fall back to sort-based aggregation."""
     out_w = window_vector_width(
         layout, cfg.top_k_entities, cfg.top_n_members
     )
-    in_vocab_tools = sorted(vocab.tools)
-    seg_sum = [
-        F.sum(F.col(f"m_s_{s}")).cast("long").alias(f"{s}_sum")
-        for s in ("time", "role", "tool", "bow", "lag")
-    ]
+    slot_bit = (F.col("member_idx") == 0) & F.col("tool").isin(
+        sorted(vocab.tools)
+    )
     agg = members.groupBy("conv_id", "ts_sec").agg(
-        F.size(
-            F.collect_set(
-                F.when(
-                    F.col("m_tool").isin(in_vocab_tools), F.col("m_tool")
-                )
-            )
-        )
-        .cast("bigint")
-        .alias("tool_bits"),
-        *seg_sum,
+        F.sum(slot_bit.cast("long")).alias("tool_bits"),
+        *[F.sum(s).cast("long").alias(f"{s[2:]}_sum") for s in TURN_SUMS],
     )
-    return agg.select(
-        "conv_id",
-        "ts_sec",
-        F.lit(out_w).cast("int").alias("width"),
-        "tool_bits",
-        "time_sum",
-        "role_sum",
-        "tool_sum",
-        "bow_sum",
-        "lag_sum",
-        (
-            F.col("tool_bits")
-            + F.col("time_sum")
-            + F.col("role_sum")
-            + F.col("tool_sum")
-            + F.col("bow_sum")
-            + F.col("lag_sum")
-        )
-        .cast("bigint")
-        .alias("feat_sum"),
-    )
+    seg_total = sum(F.col(f"{s[2:]}_sum") for s in TURN_SUMS)
+    return agg.withColumns(
+        {
+            "width": F.lit(out_w).cast("int"),
+            "feat_sum": (F.col("tool_bits") + seg_total).cast("bigint"),
+        }
+    ).select("conv_id", "ts_sec", *SCALAR_FIELDS)
+
+
+def window_features_builtin(
+    vec: DataFrame,
+    vocab: Vocabulary,
+    cfg: FeatureConfig,
+    layout: VectorLayout,
+) -> DataFrame:
+    """(conv_id, ts) → window_features:array<float> — the JVM selector
+    and the dense finisher."""
+    return dense_finish(select_members(vec, cfg), vec, vocab, cfg, layout)
 
 
 def ewma_time_decay(

@@ -361,17 +361,13 @@ def or_combine_window_features(
             "sparse turn vectors require width=layout.width so the OR "
             "result can be densified"
         )
-    hashed = vec.select(
-        "conv_id",
-        F.col("turn_idx").alias("m_turn_idx"),
-        F.xxhash64("features").alias("vh"),
-    )
-    pairs = pit_member_pairs(vec, cfg).join(
-        hashed, ["conv_id", "m_turn_idx"]
-    )
-    distinct_members = pairs.select("conv_id", "ts", "vh").distinct()
+    # the pair stage already carries each member's vec_hash (the one
+    # turn-vector fingerprint), so no second hash and no join-back
+    distinct_members = pit_member_pairs(vec, cfg).select(
+        "conv_id", "ts", F.col("m_vec_hash").alias("vh")
+    ).distinct()
     reps = vec.select(
-        "conv_id", F.xxhash64("features").alias("vh"), "features"
+        "conv_id", F.col("vec_hash").alias("vh"), "features"
     ).dropDuplicates(["conv_id", "vh"])
     wide = distinct_members.join(reps, ["conv_id", "vh"])
 

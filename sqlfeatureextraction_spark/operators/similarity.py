@@ -608,16 +608,18 @@ def rrf_fuse(
     if len(lists) < 2:
         raise ValueError("rrf_fuse needs at least two ranked lists")
     if max_candidates is not None:
-        # materialize each (contract-bounded, top-k-sized) list once
-        # so the bound probe does not re-execute the upstream
-        # retrieval pipeline, and the fusion below reads the same
-        # materialized rows instead of computing each leg a second
-        # time (the probe used to double-execute every un-cached leg)
-        lists = [df.localCheckpoint(eager=True) for df in lists]
+        # bounded probe FIRST, on the raw list: at most one row beyond
+        # the cap is ever computed or fetched, so an oversized (corpus)
+        # input fails before anything is materialized.  A list within
+        # the cap comes back whole, and the fusion below reads these
+        # collected rows instead of computing each leg a second
+        # time — no checkpoint or cache is left to release.
+        spark = lists[0].sparkSession
+        probed = []
         for i, df in enumerate(lists):
-            # bounded probe: one extra row beyond the cap decides
-            n_probe = df.limit(int(max_candidates) + 1).count()
-            if n_probe > max_candidates:
+            df = df.select(id_col, score_col)
+            rows = df.limit(int(max_candidates) + 1).collect()
+            if len(rows) > max_candidates:
                 raise ValueError(
                     f"rrf_fuse: input list {i} exceeds max_candidates"
                     f"={max_candidates}; inputs must be bounded top-k"
@@ -625,6 +627,8 @@ def rrf_fuse(
                     " pass max_candidates=None only with a structural"
                     " bound)"
                 )
+            probed.append(spark.createDataFrame(rows, df.schema))
+        lists = probed
     fused = None
     for df in lists:
         w = Window.orderBy(F.desc(score_col), F.asc(id_col))

@@ -183,7 +183,7 @@ def _cost() -> Column:
 
 
 _TURN_SCALAR_SCHEMA = (
-    "conv_id string, turn_idx int, tool string, ts_sec bigint,"
+    "conv_id string, turn_idx int, tool string, ts {ts}, ts_sec bigint,"
     " cost bigint, vec_hash bigint, s_time int, s_role int, s_tool int,"
     " s_bow int, s_lag int"
 )
@@ -202,14 +202,15 @@ def with_turn_scalars(
     integers (0/1 bits + small counts), identical to summing the dense
     float32 vector.
 
-    Output columns: conv_id, turn_idx, tool, ts_sec, cost, vec_hash,
-    s_time, s_role, s_tool, s_bow, s_lag.  (No ``ts``: scalar
-    consumers key on the integral ``ts_sec`` anchor only.)"""
+    Output columns: conv_id, turn_idx, tool, ts, ts_sec, cost,
+    vec_hash, s_time, s_role, s_tool, s_bow, s_lag (``ts`` passes
+    through with its input type, so window anchors keep their
+    full-precision timestamp)."""
     layout, cells = _cell_builder(vocab, cfg)
     starts = np.asarray([s.offset for s in layout.segments])
     n_seg = len(starts)
     inputs = ["dow", "hour", "role", "tool", "_toks", "lag_sec"]
-    passthrough = ["conv_id", "turn_idx", "tool", "ts_sec", "cost"]
+    passthrough = ["conv_id", "turn_idx", "tool", "ts", "ts_sec", "cost"]
 
     def encode_batches(batches):
         for b in batches:
@@ -231,9 +232,17 @@ def with_turn_scalars(
             )
 
     df = _with_lag(transcripts).select(
-        "conv_id", "turn_idx", "ts_sec", _cost().alias("cost"), *_cell_inputs()
+        "conv_id",
+        "turn_idx",
+        "ts",
+        "ts_sec",
+        _cost().alias("cost"),
+        *_cell_inputs(),
     )
-    return df.mapInArrow(encode_batches, _TURN_SCALAR_SCHEMA), layout
+    ts_type = df.schema["ts"].dataType.simpleString()
+    return df.mapInArrow(
+        encode_batches, _TURN_SCALAR_SCHEMA.format(ts=ts_type)
+    ), layout
 
 
 def with_turn_features(

@@ -1,107 +1,170 @@
-"""The salted sort-merge path must equal the built-in rangeBetween path
-(and therefore the pandas oracle) at every (conv_id, ts)."""
+"""One pin for every point-in-time window path: both member selectors
+(the JVM ``pit_window.select_members`` and the salted pandas
+``asof_merge.select_members_salted``) × both finishers, across configs.
+
+  * the dense finisher's window vectors equal the pandas oracle's;
+  * the scalar finisher equals a numpy reduction of those vectors;
+  * the two selectors emit the same member rows, row for row."""
 
 import numpy as np
 import pandas as pd
+import pytest
 
+from oracle import pandas_oracle as O
 from sqlfeatureextraction_spark.config import FeatureConfig
-from sqlfeatureextraction_spark.operators.asof_merge import window_features_merge
-from sqlfeatureextraction_spark.operators.pit_window import window_features_builtin
-from sqlfeatureextraction_spark.operators.vectorize import with_turn_features
+from sqlfeatureextraction_spark.operators.asof_merge import (
+    select_members_salted,
+    window_features_merge,
+)
+from sqlfeatureextraction_spark.operators.pit_window import (
+    SCALAR_FIELDS,
+    dense_finish,
+    scalar_finish,
+    select_members,
+    window_features_builtin,
+)
+from sqlfeatureextraction_spark.operators.vectorize import (
+    with_turn_features,
+    with_turn_scalars,
+)
 from sqlfeatureextraction_spark.vocab import fit_vocabulary
 
+SELECTORS = {"jvm": select_members, "salted": select_members_salted}
 
-def _both(transcripts_df, cfg):
-    v = fit_vocabulary(transcripts_df)
-    vec, layout = with_turn_features(transcripts_df, v, cfg)
-    a = window_features_builtin(vec, v, cfg, layout).toPandas()
-    b = window_features_merge(vec, v, cfg, layout).toPandas()
-    a = a.sort_values(["conv_id", "ts"]).reset_index(drop=True)
-    b = b.sort_values(["conv_id", "ts"]).reset_index(drop=True)
-    return a, b
-
-
-def _assert_equal(a: pd.DataFrame, b: pd.DataFrame):
-    assert len(a) == len(b), (len(a), len(b))
-    assert (a["conv_id"] == b["conv_id"]).all()
-    assert (
-        pd.to_datetime(a["ts"]).to_numpy() == pd.to_datetime(b["ts"]).to_numpy()
-    ).all()
-    ma = np.vstack(a["window_features"].to_numpy())
-    mb = np.vstack(b["window_features"].to_numpy())
-    assert ma.shape == mb.shape
-    bad = ~np.isclose(ma, mb).all(axis=1)
-    assert not bad.any(), a.loc[bad, ["conv_id", "ts"]].head(10).to_string()
+# id → (config, sparse turn-vector transport)
+CONFIGS = {
+    "default": (FeatureConfig(), False),
+    "k2n3": (FeatureConfig(top_k_entities=2, top_n_members=3), False),
+    # W=61s: salting span shrinks, replication kicks in at many edges
+    "w61": (FeatureConfig(window_size_s=61), False),
+    # every conversation splits into many salt buckets — overlap
+    # replication is exercised everywhere
+    "salt8": (FeatureConfig(merge_rows_per_bucket=8), False),
+    "counts": (FeatureConfig(binary_bow=False), False),
+    # the sparse struct only changes the transport format; the
+    # assembler densifies per representative
+    "sparse": (FeatureConfig(), True),
+}
 
 
-def test_merge_equals_builtin(transcripts_df):
-    a, b = _both(transcripts_df, FeatureConfig())
-    _assert_equal(a, b)
+@pytest.fixture(scope="module")
+def cache():
+    """Results shared by the parametrized cases: oracle vectors per
+    config, member rows per (config, selector)."""
+    return {}
 
 
-def test_scalars_only_matches_array_reduction(transcripts_df):
-    """scalars_only=True must equal reducing the full array output —
-    for BOTH paths (same matrix scatter, in-UDF reduction)."""
-    cfg = FeatureConfig()
-    v = fit_vocabulary(transcripts_df)
-    vec, layout = with_turn_features(transcripts_df, v, cfg)
-    n_tools = len(v.tools)
-    for path in (window_features_builtin, window_features_merge):
-        full = (
-            path(vec, v, cfg, layout)
-            .toPandas()
-            .sort_values(["conv_id", "ts_sec"])
-            .reset_index(drop=True)
+def _oracle(cache, transcripts_pdf, cfg):
+    key = (
+        "oracle",
+        cfg.window_size_s,
+        cfg.top_k_entities,
+        cfg.top_n_members,
+        cfg.binary_bow,
+    )
+    if key not in cache:
+        tokens, roles, tools = O.fit_vocab(transcripts_pdf)
+        tv = O.turn_vectors(
+            transcripts_pdf, tokens, roles, tools, binary_bow=cfg.binary_bow
         )
-        sc = (
-            path(vec, v, cfg, layout, scalars_only=True)
-            .toPandas()
-            .sort_values(["conv_id", "ts_sec"])
-            .reset_index(drop=True)
-        )
-        mat = np.vstack(full["window_features"].to_numpy())
-        assert (sc["width"] == mat.shape[1]).all()
-        assert np.array_equal(
-            sc["tool_bits"].to_numpy(),
-            mat[:, :n_tools].sum(axis=1).astype(np.int64),
-        )
-        assert np.array_equal(
-            sc["feat_sum"].to_numpy(), mat.sum(axis=1).astype(np.int64)
-        )
-        # per-segment sums over the slot region (rows, k·n, turn_w)
-        k, n, tw = cfg.top_k_entities, cfg.top_n_members, layout.width
-        body = mat[:, n_tools:].reshape(len(mat), k * n, tw)
-        for seg in layout.segments:
-            expect = (
-                body[:, :, seg.offset : seg.offset + seg.width]
-                .sum(axis=(1, 2))
-                .astype(np.int64)
+        cache[key] = _by_anchor(
+            O.window_features(
+                tv,
+                tools,
+                window_s=cfg.window_size_s,
+                top_k=cfg.top_k_entities,
+                top_n=cfg.top_n_members,
             )
-            assert np.array_equal(
-                sc[f"{seg.name}_sum"].to_numpy(), expect
-            ), seg.name
+        )
+    return cache[key]
 
 
-def test_merge_equals_builtin_topk2_topn3(transcripts_df):
-    a, b = _both(
-        transcripts_df, FeatureConfig(top_k_entities=2, top_n_members=3)
+def _by_anchor(pdf: pd.DataFrame) -> pd.DataFrame:
+    return pdf.sort_values(["conv_id", "ts"]).reset_index(drop=True)
+
+
+def _member_rows(cache, config_id, selector_id, vec_s, cfg) -> pd.DataFrame:
+    key = ("members", config_id, selector_id)
+    if key not in cache:
+        rows = SELECTORS[selector_id](vec_s, cfg).toPandas()
+        cache[key] = rows.sort_values(
+            ["conv_id", "ts_sec", "slot_idx", "member_idx"]
+        ).reset_index(drop=True)
+    return cache[key]
+
+
+def _assert_vectors_equal(got: pd.DataFrame, exp: pd.DataFrame):
+    assert len(got) == len(exp), (len(got), len(exp))
+    assert (got["conv_id"].to_numpy() == exp["conv_id"].to_numpy()).all()
+    assert (
+        pd.to_datetime(got["ts"]).to_numpy()
+        == pd.to_datetime(exp["ts"]).to_numpy()
+    ).all()
+    mg = np.vstack(got["window_features"].to_numpy())
+    me = np.vstack(exp["window_features"].to_numpy())
+    assert mg.shape == me.shape
+    bad = ~np.isclose(mg, me).all(axis=1)
+    assert not bad.any(), got.loc[bad, ["conv_id", "ts"]].head(10).to_string()
+
+
+def _reduce(mat: np.ndarray, n_tools: int, cfg, layout) -> dict:
+    """SCALAR_FIELDS of dense window vectors, by numpy: per-segment
+    sums over the slot region reshaped to (rows, k·n, turn_w)."""
+    k, n, tw = cfg.top_k_entities, cfg.top_n_members, layout.width
+    body = mat[:, n_tools:].reshape(len(mat), k * n, tw)
+    out = {
+        "width": np.full(len(mat), mat.shape[1]),
+        "tool_bits": mat[:, :n_tools].sum(axis=1),
+        "feat_sum": mat.sum(axis=1),
+    }
+    for seg in layout.segments:
+        lo, hi = seg.offset, seg.offset + seg.width
+        out[f"{seg.name}_sum"] = body[:, :, lo:hi].sum(axis=(1, 2))
+    return {c: v.astype(np.int64) for c, v in out.items()}
+
+
+@pytest.mark.parametrize("selector_id", list(SELECTORS))
+@pytest.mark.parametrize("config_id", list(CONFIGS))
+def test_selectors_and_finishers(
+    cache, transcripts_df, transcripts_pdf, config_id, selector_id
+):
+    cfg, sparse = CONFIGS[config_id]
+    select = SELECTORS[selector_id]
+    v = fit_vocabulary(transcripts_df)
+    vec, layout = with_turn_features(transcripts_df, v, cfg, sparse=sparse)
+
+    # dense finisher == the independent pandas oracle
+    dense = _by_anchor(
+        dense_finish(select(vec, cfg), vec, v, cfg, layout).toPandas()
     )
-    _assert_equal(a, b)
+    _assert_vectors_equal(dense, _oracle(cache, transcripts_pdf, cfg))
 
-
-def test_merge_equals_builtin_tiny_window(transcripts_df):
-    """W=61s: salting span shrinks, replication kicks in at many edges."""
-    a, b = _both(transcripts_df, FeatureConfig(window_size_s=61))
-    _assert_equal(a, b)
-
-
-def test_merge_equals_builtin_forced_salting(transcripts_df):
-    """merge_rows_per_bucket=8 forces every conversation to split into
-    many salt buckets — overlap replication is exercised everywhere."""
-    a, b = _both(
-        transcripts_df, FeatureConfig(merge_rows_per_bucket=8)
+    # scalar finisher == numpy reduction of the dense vectors
+    vec_s, layout_s = with_turn_scalars(transcripts_df, v, cfg)
+    sc = (
+        scalar_finish(select(vec_s, cfg), v, cfg, layout_s)
+        .toPandas()
+        .sort_values(["conv_id", "ts_sec"])
+        .reset_index(drop=True)
     )
-    _assert_equal(a, b)
+    assert list(sc.columns) == ["conv_id", "ts_sec", *SCALAR_FIELDS]
+    assert (sc["conv_id"].to_numpy() == dense["conv_id"].to_numpy()).all()
+    assert (sc["ts_sec"].to_numpy() == dense["ts_sec"].to_numpy()).all()
+    mat = np.vstack(dense["window_features"].to_numpy())
+    expect = _reduce(mat, len(v.tools), cfg, layout)
+    for col in SCALAR_FIELDS:
+        assert np.array_equal(sc[col].to_numpy(), expect[col]), col
+
+    # both selectors emit the same member rows, segment sums included
+    mine = _member_rows(cache, config_id, selector_id, vec_s, cfg)
+    other_id = next(s for s in SELECTORS if s != selector_id)
+    other = _member_rows(cache, config_id, other_id, vec_s, cfg)
+    assert list(mine.columns) == list(other.columns)
+    assert len(mine) == len(other), (len(mine), len(other))
+    for col in mine.columns:
+        assert np.array_equal(
+            mine[col].to_numpy(), other[col].to_numpy()
+        ), col
 
 
 def test_merge_salt_boundary_anchor(spark):
@@ -139,79 +202,9 @@ def test_merge_salt_boundary_anchor(spark):
     vec, layout = with_turn_features(df, v, cfg)
     a = window_features_builtin(vec, v, cfg, layout).toPandas()
     b = window_features_merge(vec, v, cfg, layout).toPandas()
-    _assert_equal(
-        a.sort_values(["conv_id", "ts"]).reset_index(drop=True),
-        b.sort_values(["conv_id", "ts"]).reset_index(drop=True),
-    )
+    _assert_vectors_equal(_by_anchor(a), _by_anchor(b))
     # the anchor at span+10 must include the (span-250, span-100) members:
     # its window vector cannot be all-zero beyond the tool intent bits
     m = np.vstack(b.sort_values("ts")["window_features"].to_numpy())
     n_tools = layout.seg("tool").width
     assert m[2, n_tools:].sum() > layout.width / 10  # members present
-
-
-def test_sparse_turn_features_equal_dense(transcripts_df):
-    """sparse=True turn vectors must produce bit-identical window
-    vectors on BOTH window paths (the sparse struct only changes the
-    transport format; the assembler densifies per representative)."""
-    cfg = FeatureConfig()
-    v = fit_vocabulary(transcripts_df)
-    vec_d, layout = with_turn_features(transcripts_df, v, cfg)
-    vec_s, _ = with_turn_features(transcripts_df, v, cfg, sparse=True)
-    for path in (window_features_builtin, window_features_merge):
-        a = (
-            path(vec_d, v, cfg, layout)
-            .toPandas()
-            .sort_values(["conv_id", "ts"])
-            .reset_index(drop=True)
-        )
-        b = (
-            path(vec_s, v, cfg, layout)
-            .toPandas()
-            .sort_values(["conv_id", "ts"])
-            .reset_index(drop=True)
-        )
-        _assert_equal(a, b)
-
-
-def test_scalar_fast_path_matches_assembler(transcripts_df):
-    """r6 narrow scalar pipeline (with_turn_scalars +
-    window_feature_scalars — no wide vector, no feature join, no
-    assembly UDF) must equal the matrix-scatter scalars_only path on
-    every column, for several configs."""
-    from sqlfeatureextraction_spark.operators.pit_window import (
-        SCALAR_FIELDS,
-        window_feature_scalars,
-    )
-    from sqlfeatureextraction_spark.operators.vectorize import (
-        with_turn_scalars,
-    )
-
-    for cfg in (
-        FeatureConfig(),
-        FeatureConfig(top_k_entities=2, top_n_members=3),
-        FeatureConfig(window_size_s=61),
-        FeatureConfig(binary_bow=False),
-    ):
-        v = fit_vocabulary(transcripts_df)
-        vec, layout = with_turn_features(transcripts_df, v, cfg)
-        old = (
-            window_features_builtin(vec, v, cfg, layout, scalars_only=True)
-            .select("conv_id", "ts_sec", *SCALAR_FIELDS)
-            .toPandas()
-            .sort_values(["conv_id", "ts_sec"])
-            .reset_index(drop=True)
-        )
-        vec_s, layout_s = with_turn_scalars(transcripts_df, v, cfg)
-        new = (
-            window_feature_scalars(vec_s, v, cfg, layout_s)
-            .select("conv_id", "ts_sec", *SCALAR_FIELDS)
-            .toPandas()
-            .sort_values(["conv_id", "ts_sec"])
-            .reset_index(drop=True)
-        )
-        assert len(old) == len(new), (cfg, len(old), len(new))
-        for col in old.columns:
-            assert np.array_equal(
-                old[col].to_numpy(), new[col].to_numpy()
-            ), (cfg, col)

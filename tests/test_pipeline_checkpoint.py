@@ -5,11 +5,12 @@ import os
 
 import numpy as np
 import pytest
+from pyspark.sql import functions as F
 
 from sqlfeatureextraction_spark.audit import audit_member_bound, audit_truncation
 from sqlfeatureextraction_spark.checkpoint import CheckpointedRun
 from sqlfeatureextraction_spark.config import FeatureConfig
-from sqlfeatureextraction_spark.operators.asof_merge import window_features_merge
+from sqlfeatureextraction_spark.operators.asof_merge import select_members_salted
 from sqlfeatureextraction_spark.plans.pipeline import FeaturePipeline
 
 CFG = FeatureConfig()
@@ -46,12 +47,25 @@ def test_split_deterministic_and_ratio(fitted, transcripts_df):
 
 
 def test_audit_member_bound(fitted, transcripts_df):
+    """Provenance on the salted selector's member rows: every selected
+    representative lies inside its anchor's window (ts − W, ts]."""
     vec = fitted.turn_features(transcripts_df)
-    wf = window_features_merge(
-        vec, fitted.vocab, CFG, fitted.layout, audit=True
+    members = select_members_salted(vec, CFG).join(
+        vec.select(
+            "conv_id",
+            F.col("turn_idx").cast("long").alias("rep_turn_idx"),
+            F.col("ts_sec").alias("m_ts_sec"),
+        ),
+        ["conv_id", "rep_turn_idx"],
     )
-    res = audit_member_bound(wf)
+    bound = members.groupBy("conv_id", "ts_sec", "ts").agg(
+        F.max("m_ts_sec").alias("max_member_ts_sec"),
+        F.min(F.col("m_ts_sec") - F.col("ts_sec")).alias("min_offset"),
+    )
+    res = audit_member_bound(bound)
     assert res["ok"], res
+    assert bound.count() > 0
+    assert bound.where(F.col("min_offset") <= -CFG.window_size_s).count() == 0
 
 
 def test_audit_truncation(fitted, transcripts_df, transcripts_pdf):

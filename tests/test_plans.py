@@ -105,6 +105,25 @@ def test_flagship_single_conv_exchange(plans):
     assert n_exch <= 4, f"flagship re-shuffles: {n_exch} exchanges"
 
 
+def test_flagship_no_object_hash_aggregate(plans):
+    # tool_bits is a plain sum over member_idx == 0 rows, not a
+    # collect_set: no ObjectHashAggregate (which can fall back to
+    # sort-based aggregation) anywhere in the flagship
+    assert "ObjectHashAggregate" not in plans["transcript_window_features"]
+
+
+def test_wf_merge_scalar_path_has_no_feature_join(plans):
+    # salted selector + scalar finisher: no wide vector, so no
+    # representative-feature join-back and no assembly UDF; the only
+    # joins left are _salted's per-conversation stats joins on conv_id
+    import re
+
+    p = plans["transcript_wf_merge"]
+    assert "ArrowEvalPython" not in p
+    assert not re.search(r"Left keys.*rep_turn_idx", p)
+    assert "features" not in p
+
+
 def test_lsh_paths_are_equi_joins(plans):
     # candidate generation in every LSH/banded path must be a hash or
     # sort-merge EQUI-join (bucket id), never a nested-loop scan of

@@ -591,6 +591,28 @@ def test_rrf_fuse_enforces_candidate_bound(spark):
     assert len(rrf_fuse([big, big], k=5, max_candidates=50).collect()) == 5
 
 
+def test_rrf_fuse_oversized_list_leaves_nothing_persisted(spark):
+    """The bound is probed on the raw list before anything is
+    materialized: an oversized list raises and leaves no persisted
+    RDD behind — and a list within the cap leaves none either."""
+    from sqlfeatureextraction_spark.operators.similarity import rrf_fuse
+
+    def persisted():
+        return set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
+
+    big = spark.range(50).selectExpr(
+        "id AS doc_id", "CAST(id AS DOUBLE) AS score"
+    )
+    before = persisted()
+    with pytest.raises(ValueError, match="max_candidates"):
+        rrf_fuse([big, big.limit(5)], k=5, max_candidates=10)
+    with pytest.raises(ValueError, match="max_candidates"):
+        rrf_fuse([big.limit(5), big], k=5, max_candidates=10)
+    assert persisted() == before
+    assert len(rrf_fuse([big, big], k=5, max_candidates=50).collect()) == 5
+    assert persisted() == before
+
+
 def test_rrf_fuse_plan_shape(spark):
     from sqlfeatureextraction_spark.operators.similarity import rrf_fuse
     from sqlfeatureextraction_spark.operators.stats import bm25_topk
