@@ -1,39 +1,34 @@
-"""SQL fragment extraction + one-hot encoding (SURVEY §2.2 P5-P7, P10-P11).
+"""SQL fragment extraction (SURVEY §2.2 P5-P6, P11).
 
 The reference walks full ASTs (ANTLR ClickHouse grammar / JSQLParser —
 ch/ClickhouseSQLParser.java:60-242, enc/SQLParser.java:145-933) to pull
 fragment SETS out of each query: referenced tables, projection /
 where / groupBy / orderBy column sets, aggregate-function columns,
-granularity flags, selection-predicate operators.  In the transcript
-engine the per-turn payload is free text (tokenize instead), but the
-SQL capability itself is re-expressed here for parity — as vectorized
-column expressions (regexp over clause spans), NOT a Python parser:
-deterministic, codegen'd, O(len) per row.  A regex extractor accepts
-less SQL than the reference's grammars; unparseable constructs simply
-contribute empty sets (the reference likewise swallows parse failures,
+selection-predicate operators.  In the transcript engine the per-turn
+payload is free text (tokenize instead), but the SQL capability itself
+is re-expressed here for parity — as vectorized column expressions
+(regexp over clause spans), NOT a Python parser: deterministic,
+codegen'd, O(len) per row.  A regex extractor accepts less SQL than
+the reference's grammars; unparseable constructs simply contribute
+empty sets (the reference likewise swallows parse failures,
 ch/ClickhouseSQLParser.java:71-76, leaving bits unset).
 
-Fragment one-hot (P7): fragments → vocabulary bit positions → the same
-`layout.Segment` machinery as the transcript vectorizer.
+One-hot placement and granularity bits belong to the encoders that
+build on these extractors: functions/sqlencode.py (MINC layout) and
+functions/apmencode.py (APM layout, the reference's granularity
+ladder).
 """
 
 from __future__ import annotations
 
-import numpy as np
-import pandas as pd
 from pyspark.sql import Column
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 IDENT = r"[a-zA-Z_][a-zA-Z0-9_.]*"
 
 # selection-predicate operator slots, reference order
 # {=, <>, <=, >=, <, >, LIKE} (enc/APMFragmentIntent.java:68,698-718)
 SEL_PRED_OPS = ["=", "<>", "<=", ">=", "<", ">", "like"]
-
-# granularity buckets {1m,5m,30m,1h,1d,7d,30d,90d,365d}
-# (enc/APMFragmentIntent.java:28; detection ch/ClickhouseSQLParser.java:195-227)
-GRAN_SECONDS = [60, 300, 1800, 3600, 86400, 604800, 2592000, 7776000, 31536000]
 
 
 def strip_literals_and_comments(sql: Column) -> Column:
@@ -173,37 +168,6 @@ def extract_sel_pred_ops(sql: Column) -> Column:
     return F.transform(pairs, to_struct)
 
 
-def extract_granularity_flags(sql: Column) -> Column:
-    """P10: detect `toStartOfInterval(ts, toIntervalSecond(n))` /
-    `toIntervalMinute(n)` … → 9 granularity-bucket flags; a detected
-    granularity g sets bucket i iff GRAN_SECONDS[i] ≤ g (day implies
-    week/month… when n large — reference semantics).  No interval
-    found ⇒ all zeros."""
-    unit_secs = {
-        "second": 1,
-        "minute": 60,
-        "hour": 3600,
-        "day": 86400,
-        "week": 604800,
-        "month": 2592000,
-        "quarter": 7776000,
-        "year": 31536000,
-    }
-    gran = F.lit(0).cast("long")
-    for unit, secs in unit_secs.items():
-        n = F.regexp_extract(
-            F.lower(sql), rf"tointerval{unit}\s*\(\s*(\d+)", 1
-        )
-        val = F.when(n != "", n.cast("long") * secs).otherwise(F.lit(0))
-        gran = F.greatest(gran, val)
-    return F.array(
-        *[
-            F.when((gran > 0) & (F.lit(g) <= gran), 1.0).otherwise(0.0)
-            for g in GRAN_SECONDS
-        ]
-    )
-
-
 def extract_fragments(sql: Column) -> Column:
     """Full P5/P6 fragment record as one struct column."""
     return F.struct(
@@ -217,47 +181,4 @@ def extract_fragments(sql: Column) -> Column:
         extract_agg_columns(sql, "max").alias("max_cols"),
         extract_agg_columns(sql, "sum").alias("sum_cols"),
         extract_sel_pred_ops(sql).alias("sel_preds"),
-        extract_granularity_flags(sql).alias("granularity"),
     )
-
-
-def onehot_fragment_segment(frag_arr: Column, vocab: dict) -> Column:
-    """P7: map a fragment array onto vocabulary bit positions →
-    fixed-width 0/1 array<double>.  OOV fragments leave bits unset
-    (reference behavior, enc/APMFragmentIntent.java:303-305).
-
-    Two constructions by vocabulary size (the same 4096 switch as
-    vocab.with_oov_stats): small vocabs use the literal-array
-    ``array_contains`` form (pure codegen, O(|V|) per row — fine when
-    |V| is small); large vocabs go through an Arrow scatter whose
-    per-row work is O(|fragments|), with the vocab dict shipped once
-    per executor in the UDF closure instead of O(|V|) literal
-    comparisons per row."""
-    width = len(vocab)
-    if width <= 4096:
-        keys = F.lit(list(vocab.keys()))
-        return F.transform(
-            F.lit(list(range(width))),
-            lambda i: F.when(
-                F.array_contains(frag_arr, F.element_at(keys, i + 1)), 1.0
-            ).otherwise(0.0),
-        )
-
-    # bit i corresponds to the i-th vocab KEY (same as the literal form)
-    bitmap = {k: i for i, k in enumerate(vocab.keys())}
-
-    @F.pandas_udf(T.ArrayType(T.DoubleType()))
-    def scatter(frags: pd.Series) -> pd.Series:
-        n = len(frags)
-        mat = np.zeros((n, width), dtype=np.float64)
-        ex = frags.explode()
-        ex = ex[ex.notna()]
-        if len(ex):
-            pos = ex.map(bitmap)
-            keep = pos.notna()
-            if keep.any():
-                ridx = ex.index.to_numpy()[keep.to_numpy()]
-                mat[ridx, pos[keep].to_numpy(dtype=np.int64)] = 1.0
-        return pd.Series(list(mat))
-
-    return scatter(frag_arr)

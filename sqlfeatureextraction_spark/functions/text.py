@@ -7,7 +7,7 @@ Python in the hot path.
 
 The tokenizer is shared verbatim (same regex semantics) by:
   * the Spark fit/transform path (this module),
-  * the DuckDB oracle SQL in __spark_entry__,
+  * the DuckDB oracle SQL (``_TOK`` in queries/_common.py),
   * the pandas test oracle (oracle/pandas_oracle.py),
 so per-turn token equality holds exactly across all three.
 """
@@ -30,13 +30,3 @@ def tokenize_col(col: Column) -> Column:
     """text → array<string> of non-empty lowercase tokens."""
     arr = F.split(F.lower(F.coalesce(col, F.lit(""))), TOKEN_SPLIT_RE)
     return F.filter(arr, lambda t: t != F.lit(""))
-
-
-def tokenize_pandas(series):
-    """The same tokenizer over a pandas Series (for oracle / UDF reuse)."""
-    import re
-
-    pat = re.compile(TOKEN_SPLIT_RE)
-    return series.fillna("").str.lower().map(
-        lambda s: [t for t in pat.split(s) if t]
-    )

@@ -7,24 +7,16 @@ attach the newest right row with ts' ≤ ts (backward; optional
 tolerance), never a future row — the as-of join IS the zero-leakage
 primitive.
 
-Spark has no native as-of join; two formulations:
-
-  union-trick (default, pure built-ins): tag both sides, union on a
-  common schema, one window per `by` ordered by (ts, is_left) with
-  last(right_value, ignorenulls) over rowsBetween(unboundedPreceding,
-  current) — right rows at the same ts sort BEFORE left rows, making
-  the bound inclusive (ts' ≤ ts).  ONE shuffle of |L|+|R| rows, sort-
-  based, no join blow-up, AQE-skew-safe.
-
-  merge_asof (throughput path for wide right payloads):
-  repartition both sides by `by`, applyInPandas pd.merge_asof per
-  group — used when the right row carries many columns (the union
-  trick would null-pad them through the shuffle).
+Spark has no native as-of join.  The union trick uses built-ins
+only: tag both sides, union on a common schema, one window per `by`
+ordered by (ts, is_left) with last(right_value, ignorenulls) over
+rowsBetween(unboundedPreceding, current) — right rows at the same ts
+sort BEFORE left rows, making the bound inclusive (ts' ≤ ts).  ONE
+shuffle of |L|+|R| rows, sort-based, no join blow-up, AQE-skew-safe.
 """
 
 from __future__ import annotations
 
-import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -92,48 +84,3 @@ def asof_join(
         *[f"{c}{suffix}" for c in value_cols],
     )
 
-
-def asof_join_merge(
-    left: DataFrame,
-    right: DataFrame,
-    on: str = "ts_sec",
-    by: str = "user_id",
-    value_cols: tuple = ("value",),
-    tolerance_s: int | None = None,
-    suffix: str = "_asof",
-) -> DataFrame:
-    """applyInPandas pd.merge_asof per `by` group (cogroup formulation)."""
-    lcols = left.columns
-    out_fields = ", ".join(
-        f"`{c}` {t}" for c, t in left.dtypes
-    )
-    r_types = dict(right.dtypes)
-    extra = ", ".join(
-        [f"`asof_ts{suffix}` bigint"]
-        + [f"`{c}{suffix}` {r_types[c]}" for c in value_cols]
-    )
-    schema = f"{out_fields}, {extra}"
-
-    def fn(lpdf: pd.DataFrame, rpdf: pd.DataFrame) -> pd.DataFrame:
-        lpdf = lpdf.sort_values(on, kind="mergesort")
-        rr = rpdf[[on, *value_cols]].sort_values(on, kind="mergesort")
-        rr = rr.rename(
-            columns={on: f"asof_ts{suffix}", **{c: f"{c}{suffix}" for c in value_cols}}
-        )
-        merged = pd.merge_asof(
-            lpdf,
-            rr,
-            left_on=on,
-            right_on=f"asof_ts{suffix}",
-            direction="backward",
-            tolerance=tolerance_s,
-        )
-        return merged[
-            lcols + [f"asof_ts{suffix}"] + [f"{c}{suffix}" for c in value_cols]
-        ]
-
-    return (
-        left.groupBy(by)
-        .cogroup(right.groupBy(by))
-        .applyInPandas(fn, schema)
-    )

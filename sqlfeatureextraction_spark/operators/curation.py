@@ -21,8 +21,8 @@ a document corpus.  Design rules shared with the rest of the engine:
   exact-ntile pattern (functions/sqlencode.fit_range_bins) instead of
   a single-task global Window.
 
-Shingling convention (shared verbatim by the DuckDB oracle SQL in
-__spark_entry__): lowercase, split on single spaces, drop empty
+Shingling convention (shared verbatim by the DuckDB oracle SQL,
+``_SPTOK``/``_shingle_cte`` in queries/_common.py): lowercase, split on single spaces, drop empty
 tokens, word n-grams joined by a single space.  A deliberately
 simpler tokenizer than functions/text.tokenize_col — decontamination
 and substring-dup detection operate on surface text, and the oracle

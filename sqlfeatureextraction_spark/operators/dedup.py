@@ -7,8 +7,9 @@ near-duplicate session queries by cosine similarity > 0.8
 row-at-a-time).  A training-data pipeline needs the corpus-scale
 versions; each below is formulated to bound the shuffle:
 
-  exact          hash-groupBy on the full text (1 shuffle, map-side
-                 partial agg)
+  exact          ingest-batch dedup against the corpus
+                 (exact_against_corpus, optionally Bloom-prefiltered):
+                 equi-join on the text, 1 shuffle
   minhash LSH    shingle → minhash → band → bucket-join: candidates
                  are generated by an equi-join on (band, band_hash),
                  never an all-pairs product
@@ -30,42 +31,6 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from sqlfeatureextraction_spark.functions.text import tokenize_col
-
-# ------------------------------------------------------------------ exact
-
-
-def dedup_exact(
-    df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
-) -> DataFrame:
-    """Exact dedupe: canonical (min id) representative per identical text.
-
-    groupBy on the text hash first so the shuffle key is 8 bytes, not
-    the document body; map-side combine collapses duplicates early.
-    """
-    h = F.xxhash64(F.col(text_col))
-    return (
-        df.withColumn("_h", h)
-        .groupBy("_h")
-        .agg(
-            F.min(id_col).alias("keep_id"),
-            F.count("*").alias("n_copies"),
-        )
-        .drop("_h")
-    )
-
-
-def drop_exact_duplicates(
-    df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
-) -> DataFrame:
-    """Keep one row (min id) per distinct text — a window filter, so all
-    original columns survive."""
-    w = Window.partitionBy(F.xxhash64(F.col(text_col))).orderBy(id_col)
-    return (
-        df.withColumn("_rn", F.row_number().over(w))
-        .where(F.col("_rn") == 1)
-        .drop("_rn")
-    )
-
 
 # ------------------------------------------------------------- shingling
 

@@ -1,4 +1,4 @@
-"""Gap-based sessionization with monotonic session_id + lag/lead features.
+"""Gap-based sessionization with monotonic session_id.
 
 Reference analog: sessions arrive labeled in the MINC logs and are
 split/validated by running counters (`prevSessionID`/`queryID`,
@@ -40,19 +40,6 @@ def sessionize(
     )
 
 
-def session_stats(
-    sess: DataFrame, entity_col: str = "conv_id"
-) -> DataFrame:
-    """Per-session aggregates (analog of session query counting,
-    enc/APMFragmentIntent.java:835-846)."""
-    return sess.groupBy(entity_col, "session_id").agg(
-        F.count("*").alias("n_turns"),
-        F.min("ts").alias("session_start"),
-        F.max("ts").alias("session_end"),
-        (F.max(_epoch("ts")) - F.min(_epoch("ts"))).alias("duration_s"),
-    )
-
-
 def filter_valid_sessions(
     sess: DataFrame,
     min_turns: int = 2,
@@ -68,26 +55,6 @@ def filter_valid_sessions(
         .where((F.col("_n") >= min_turns) & (F.col("_n") < max_turns))
         .drop("_n")
     )
-
-
-def with_lag_lead_features(
-    df: DataFrame,
-    value_cols: tuple = (),
-    entity_col: str = "conv_id",
-    ts_col: str = "ts",
-    order_cols: tuple = ("turn_idx",),
-) -> DataFrame:
-    """W10 lag/lead: trailing gap, leading gap, plus lag/lead of any
-    value columns — all codegen'd window functions."""
-    w = Window.partitionBy(entity_col).orderBy(ts_col, *order_cols)
-    out = df.withColumn(
-        "lag_gap_s", _epoch(ts_col) - F.lag(_epoch(ts_col)).over(w)
-    ).withColumn("lead_gap_s", F.lead(_epoch(ts_col)).over(w) - _epoch(ts_col))
-    for c in value_cols:
-        out = out.withColumn(f"lag_{c}", F.lag(c).over(w)).withColumn(
-            f"lead_{c}", F.lead(c).over(w)
-        )
-    return out
 
 
 def train_test_split_by_session(

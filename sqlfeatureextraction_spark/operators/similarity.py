@@ -30,23 +30,6 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 
-def cosine_col(a, b):
-    """Pure built-in cosine between two array<float> columns."""
-    dot = F.aggregate(
-        F.zip_with(a, b, lambda x, y: x * y),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
-    )
-    na = F.sqrt(
-        F.aggregate(a, F.lit(0.0), lambda acc, v: acc + v * v)
-    )
-    nb = F.sqrt(
-        F.aggregate(b, F.lit(0.0), lambda acc, v: acc + v * v)
-    )
-    den = na * nb
-    return F.when(den > 0, dot / den).otherwise(F.lit(0.0))
-
-
 def _cosine_matrix_udf(query_vecs: np.ndarray):
     """cosine(corpus_vec, Q) for all queries at once: one BLAS matmul
     per Arrow batch; returns array<double> of per-query cosines."""

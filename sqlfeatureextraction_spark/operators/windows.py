@@ -10,9 +10,11 @@ Reference analogs:
      arithmetically on epoch seconds.
   W4 window expansion — :237-252 (data augmentation by shifted copies).
   W5 empty-window backfill — :102-119,163-178: windows after the
-     business-hours gate with no rows get synthesized zero-vector
-     records.  Spark-first: dense time spine via sequence()+explode,
-     left join observed windows, coalesce to zero vector.
+     business-hours gate with no rows get synthesized records.
+     Spark-first: window_cost_metrics GENERATES the dense spine with
+     its empty windows already marked (lag-based gap-fill, no spine
+     join); the APM encoder's zeroed records are
+     functions/apmencode.apm_empty_windows.
 """
 
 from __future__ import annotations
@@ -72,31 +74,6 @@ def expand_windows(df: DataFrame, cfg: FeatureConfig, factor: int) -> DataFrame:
         .withColumn("window_end_sec", F.col("window_start_sec") + cfg.window_size_s)
         .drop("_shift")
     )
-
-
-def time_spine(
-    df: DataFrame,
-    cfg: FeatureConfig,
-    entity_col: str | None = "conv_id",
-    ts_col: str = "ts",
-) -> DataFrame:
-    """Dense strided window spine from min to max event time (per entity
-    when entity_col is set, else global).  The generator side of W5."""
-    s = cfg.slide_s
-    keys = [entity_col] if entity_col else []
-    bounds = df.groupBy(*keys).agg(
-        (F.floor(F.min(_epoch(ts_col)) / s) * s).alias("mn"),
-        (F.ceil(F.max(_epoch(ts_col)) / s) * s).alias("mx"),
-    )
-    spine = bounds.select(
-        *keys, F.explode(F.sequence("mn", "mx", F.lit(s))).alias("window_start_sec")
-    ).withColumn("window_end_sec", F.col("window_start_sec") + cfg.window_size_s)
-    if cfg.business_hour_min is not None:
-        spine = spine.where(
-            F.hour(F.timestamp_seconds("window_start_sec"))
-            > cfg.business_hour_min
-        )
-    return spine
 
 
 def window_cost_metrics(
@@ -212,30 +189,6 @@ def metrics_summary(metrics: DataFrame) -> DataFrame:
         ).alias("empty_rate"),
         F.sum("total_cost").alias("total_cost"),
     )
-
-
-def backfill_zero_vectors(
-    spine: DataFrame,
-    observed: DataFrame,
-    vector_col: str,
-    width: int,
-    keys: tuple = ("conv_id", "window_start_sec"),
-) -> DataFrame:
-    """W5: left-join observed window features onto the dense spine;
-    missing windows get the zero vector (reference zeroes all bits for
-    synthesized records, enc/APMWindowFragmentIntent.java:444-446).
-    Adds is_backfilled flag (the reference logs an empty-window rate,
-    :261,301 — we surface it as a column/metric)."""
-    joined = spine.join(observed, list(keys), "left")
-    # zero vector in the SAME element type as the observed column
-    # (float32 turn vectors since round 2) — a double literal would
-    # widen the whole column
-    zero = F.array_repeat(F.lit(0.0), width).cast(
-        joined.schema[vector_col].dataType
-    )
-    return joined.withColumn(
-        "is_backfilled", F.col(vector_col).isNull()
-    ).withColumn(vector_col, F.coalesce(F.col(vector_col), zero))
 
 
 def session_window_agg(

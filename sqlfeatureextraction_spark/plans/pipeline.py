@@ -3,7 +3,7 @@ APMWindowFragmentIntent.main, SURVEY §3.1, re-planned for Spark).
 
 fit:        vocabulary dimension table (driver-side dict, broadcast)
 transform:  per-turn vectors → sessionize → point-in-time window
-            features (merge path) → optional backfill
+            features (merge path), joined to each anchor's last turn
 split:      deterministic per-conversation train/test split
             (reference 0.8 per session, APMWindowFragmentIntent.java:
             506,560-581 — theirs consumes a shared Random; ours hashes

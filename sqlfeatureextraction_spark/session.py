@@ -8,8 +8,59 @@ wants — only the numbers change with ``spark.sql.shuffle.partitions``.
 from __future__ import annotations
 
 import os
+import re
 
 from pyspark.sql import SparkSession
+
+_UNITS = {"": 1, "k": 1 << 10, "m": 1 << 20, "g": 1 << 30, "t": 1 << 40}
+_CGROUP_LIMITS = (
+    "/sys/fs/cgroup/memory.max",  # cgroup v2
+    "/sys/fs/cgroup/memory/memory.limit_in_bytes",  # cgroup v1
+)
+
+
+def memory_limit_bytes() -> int:
+    """The smaller of physical memory and this process's cgroup memory
+    limit (an unlimited cgroup reads "max" or a huge number)."""
+    limit = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    for path in _CGROUP_LIMITS:
+        try:
+            with open(path) as f:
+                raw = f.read().strip()
+        except OSError:
+            continue
+        if raw.isdigit():
+            limit = min(limit, int(raw))
+    return limit
+
+
+def jvm_size_bytes(size: str) -> int:
+    """Bytes in a JVM memory string such as ``512m``, ``6g`` or ``1024``."""
+    m = re.fullmatch(r"(\d+)([kmgt]?)b?", size.strip().lower())
+    if m is None:
+        raise ValueError(f"not a JVM memory size: {size!r}")
+    return int(m.group(1)) * _UNITS[m.group(2)]
+
+
+def driver_memory(requested: str | None, limit: int | None = None) -> str:
+    """``spark.driver.memory`` for this box.
+
+    Default: half the memory limit in whole GiB (at least 1g, at most
+    48g), leaving the rest to the Python workers, off-heap buffers and
+    the page cache.  An explicit ``requested`` size (``SPARK_DRIVER_MEM``)
+    is kept as given, but one larger than the limit raises: such a heap
+    lets the JVM grow until the kernel kills the process."""
+    if limit is None:
+        limit = memory_limit_bytes()
+    if requested:
+        if jvm_size_bytes(requested) > limit:
+            raise ValueError(
+                f"SPARK_DRIVER_MEM={requested} exceeds this box's memory "
+                f"limit of {limit / (1 << 30):.1f} GiB (the smaller of "
+                "physical memory and the cgroup limit)"
+            )
+        return requested
+    return f"{max(1, min(48, limit // 2 // (1 << 30)))}g"
 
 
 def get_spark(
@@ -74,7 +125,10 @@ def get_spark(
         # memory bound, the record cap only matters for narrow rows
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "32768")
         .config("spark.sql.execution.arrow.maxBytesPerBatch", "16m")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "48g"))
+        .config(
+            "spark.driver.memory",
+            driver_memory(os.environ.get("SPARK_DRIVER_MEM")),
+        )
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
     )
@@ -102,9 +156,3 @@ def get_spark(
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
-
-
-def stop_spark() -> None:
-    active = SparkSession.getActiveSession()
-    if active is not None:
-        active.stop()

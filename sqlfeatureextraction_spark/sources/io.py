@@ -20,8 +20,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-TRANSCRIPT_COLS = ["conv_id", "turn_idx", "role", "text", "tool", "ts"]
-
 
 def read_transcripts(
     spark: SparkSession, path: str, snapshot_id: int | None = None

@@ -157,10 +157,6 @@ def _schema_key(schema_json: str):
     return json.dumps(scrub(json.loads(schema_json)), sort_keys=True)
 
 
-def _schema_of(meta: dict):
-    return _struct_of(meta["schema"])
-
-
 def _struct_of(schema_json: str | None):
     from pyspark.sql.types import StructType
 

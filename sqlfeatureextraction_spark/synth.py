@@ -127,47 +127,44 @@ def make_transcripts_pdf(
     return pdf.drop(columns=["ts_sec"])
 
 
-def make_transcripts_df(spark, **kwargs):
-    """Same table as a Spark DataFrame (Arrow ingest, explicit schema)."""
-    from pyspark.sql import types as T
+def conv_id_col(user_id):
+    """``'u%05d'`` of an integer id column, for every int32 value.
 
-    schema = T.StructType(
-        [
-            T.StructField("conv_id", T.StringType(), False),
-            T.StructField("turn_idx", T.IntegerType(), False),
-            T.StructField("role", T.StringType(), True),
-            T.StructField("text", T.StringType(), True),
-            T.StructField("tool", T.StringType(), True),
-            T.StructField("duration_ms", T.LongType(), True),
-            T.StructField("ts", T.TimestampType(), False),
-        ]
+    Built from concat/lpad instead of ``format_string``: the
+    java.util.Formatter call costs ~300ns per row (measured: +0.28 s
+    serially over 1M rows on the single-row-group scan task) while
+    concat+lpad codegens to cheap byte ops.  Like ``%05d``, the width
+    counts the sign (-3 → ``u-0003``) and never truncates longer ids."""
+    from pyspark.sql import functions as F
+
+    s = user_id.cast("int").cast("string")
+
+    def pad(digits, width):
+        return F.when(F.length(digits) >= width, digits).otherwise(
+            F.lpad(digits, width, "0")
+        )
+
+    return F.concat(
+        F.lit("u"),
+        F.when(
+            s.startswith("-"),
+            F.concat(F.lit("-"), pad(F.substring(s, 2, 10), 4)),
+        ).otherwise(pad(s, 5)),
     )
-    pdf = make_transcripts_pdf(**kwargs)
-    return spark.createDataFrame(pdf[[f.name for f in schema.fields]], schema=schema)
 
 
 def events_as_transcripts(spark, sf_dir: str):
     """Adapt the driver-provided ``events`` table to the transcript shape.
 
-    Used by ``__spark_entry__`` so correctness checks run on shared
-    driver data: user_id→conv_id, event_type→tool, props→text.
+    Used by ``entry()`` and the flagship gate queries (queries/windows.py)
+    so correctness checks run on shared driver data: user_id→conv_id,
+    event_type→tool, props→text.
     """
     from pyspark.sql import functions as F
 
     ev = spark.read.parquet(f"{sf_dir}/events.parquet")
-    # 'u%05d' without java.util.Formatter: format_string costs ~300ns
-    # per call (measured: +0.28 s serially over 1M rows on the
-    # single-row-group scan task) while concat+lpad codegens to cheap
-    # byte ops.  Identical output for non-negative ids of any width
-    # (lpad alone would TRUNCATE ids over 5 digits; %05d never does).
-    uid = F.col("user_id").cast("int").cast("string")
     w_cols = [
-        F.concat(
-            F.lit("u"),
-            F.when(F.length(uid) >= 5, uid).otherwise(
-                F.lpad(uid, 5, "0")
-            ),
-        ).alias("conv_id"),
+        conv_id_col(F.col("user_id")).alias("conv_id"),
         F.col("event_id").cast("int").alias("turn_idx"),
         F.lit("user").alias("role"),
         F.col("props").alias("text"),

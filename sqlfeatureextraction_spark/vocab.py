@@ -58,19 +58,6 @@ class Vocabulary:
         return Vocabulary(tokens=segs["bow"], roles=segs["role"], tools=segs["tool"])
 
 
-def _distinct_sorted(df: DataFrame, col) -> list[str]:
-    """Distinct non-null values, lexicographically sorted (deterministic
-    bit assignment, reference rdr/ExcelReader.java:101)."""
-    vals = (
-        df.select(col.alias("v"))
-        .where(F.col("v").isNotNull())
-        .distinct()
-        .orderBy("v")
-        .collect()
-    )
-    return [r["v"] for r in vals]
-
-
 MAX_LITERAL_VOCAB = 4096
 
 

@@ -1,12 +1,9 @@
-"""Generic two-table as-of join: union trick vs merge_asof vs pandas."""
+"""Generic two-table as-of join: union trick vs the pandas oracle."""
 
 import numpy as np
 import pandas as pd
 
-from sqlfeatureextraction_spark.operators.asof_join import (
-    asof_join,
-    asof_join_merge,
-)
+from sqlfeatureextraction_spark.operators.asof_join import asof_join
 
 
 def _tables(spark, seed=3):
@@ -69,27 +66,6 @@ def test_asof_union_trick_matches_oracle(spark):
     tie = got[got["event_id"] == 9001]
     assert tie["asof_ts_asof"].iloc[0] == 777
     assert tie["value_asof"].iloc[0] == 999.0
-
-
-def test_asof_merge_path_equal(spark):
-    left, right = _tables(spark)
-    a = (
-        asof_join(left, right)
-        .toPandas()
-        .sort_values("event_id")
-        .reset_index(drop=True)
-    )
-    b = (
-        asof_join_merge(left, right)
-        .toPandas()
-        .sort_values("event_id")
-        .reset_index(drop=True)
-    )
-    for c in ["asof_ts_asof", "value_asof"]:
-        assert (
-            a[c].astype("float64").fillna(-1).to_numpy()
-            == b[c].astype("float64").fillna(-1).to_numpy()
-        ).all(), c
 
 
 def test_asof_tolerance(spark):

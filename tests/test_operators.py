@@ -89,26 +89,25 @@ def test_business_hours_gate(spark):
 
 
 def test_time_spine_and_backfill(spark):
+    # W5: the dense spine is generated with its empty windows marked
     cfg = FeatureConfig(window_size_s=300, slide_s=300)
     df = spark.createDataFrame(
         [
-            ("c", 0, dt.datetime(2024, 1, 1, 10, 0)),
-            ("c", 1, dt.datetime(2024, 1, 1, 10, 20)),
+            ("c", 0, dt.datetime(2024, 1, 1, 10, 0), 3),
+            ("c", 1, dt.datetime(2024, 1, 1, 10, 20), 5),
         ],
-        "conv_id string, turn_idx int, ts timestamp",
+        "conv_id string, turn_idx int, ts timestamp, cost long",
     )
-    spine = W.time_spine(df, cfg, entity_col="conv_id")
-    observed = spark.createDataFrame(
-        [("c", 1704103200, [1.0, 2.0])],
-        "conv_id string, window_start_sec long, vec array<double>",
-    )
-    filled = W.backfill_zero_vectors(
-        spine, observed, "vec", 2, keys=("conv_id", "window_start_sec")
-    ).toPandas()
-    assert len(filled) == 5  # 10:00..10:20 every 300s inclusive
-    assert filled["is_backfilled"].sum() == 4
-    z = filled[filled["is_backfilled"]]["vec"].iloc[0]
-    assert list(z) == [0.0, 0.0]
+    got = W.window_cost_metrics(df, cfg).toPandas()
+    got = got.sort_values("window_start_sec").reset_index(drop=True)
+    # 10:00..10:20 every 300s inclusive; the 10:00 turn falls in the
+    # clamped-away 09:55 window (right-closed), the 10:20 one in 10:15
+    assert list(got["window_start_sec"] - 1704103200) == [
+        0, 300, 600, 900, 1200,
+    ]
+    assert list(got["is_empty"]) == [True, True, True, False, True]
+    assert list(got["n_turns"]) == [0, 0, 0, 1, 0]
+    assert list(got["total_cost"]) == [0, 0, 0, 5, 0]
 
 
 # ------------------------------------------------------------------ dedup
@@ -127,12 +126,15 @@ def docs(spark):
     return spark.createDataFrame(rows, "doc_id long, text string")
 
 
-def test_dedup_exact(docs):
-    got = D.dedup_exact(docs).toPandas()
+def test_dedup_exact(spark, docs, tmp_path):
+    # the dedup_exact gate row: min id per identical text
+    from queries.dedup import _q_dedup_exact
+
+    docs.write.parquet(str(tmp_path / "documents.parquet"))
+    got = _q_dedup_exact(spark, str(tmp_path)).toPandas()
     dup = got[got["n_copies"] == 2]
     assert len(dup) == 1 and dup["keep_id"].iloc[0] == 0
-    kept = D.drop_exact_duplicates(docs).toPandas()
-    assert sorted(kept["doc_id"]) == [0, 2, 3, 4, 5]
+    assert sorted(got["keep_id"]) == [0, 2, 3, 4, 5]
 
 
 def test_minhash_neardup(docs):
@@ -212,9 +214,7 @@ def test_jaccard_value_exact(spark):
 
 def _bruteforce_jaccard_pairs(texts, n, threshold):
     """All-pairs exact n-gram Jaccard in plain Python (test oracle)."""
-    from sqlfeatureextraction_spark.functions.text import tokenize_pandas
-
-    toks = tokenize_pandas(pd.Series([t for _, t in texts]))
+    toks = [O.tokenize(t) for _, t in texts]
     sets = []
     for tk in toks:
         sets.append(

@@ -1,4 +1,4 @@
-"""P5-P7/P10-P11 SQL fragment extraction vs hand-written expectations."""
+"""P5-P6/P11 SQL fragment extraction vs hand-written expectations."""
 
 from pyspark.sql import functions as F
 
@@ -33,32 +33,12 @@ def test_sel_pred_ops(spark):
     assert ("c", 1) in got
 
 
-def test_granularity_flags(spark):
-    f = _one(
-        spark,
-        "select toStartOfInterval(ts, toIntervalHour(1)) from t group by 1",
-    )
-    # 3600s: buckets 60, 300, 1800, 3600 set; day+ unset
-    assert list(f["granularity"]) == [1.0, 1.0, 1.0, 1.0, 0, 0, 0, 0, 0]
-    f2 = _one(spark, "select a from t")
-    assert sum(f2["granularity"]) == 0.0
-
-
 def test_join_tables_and_cluster_strip(spark):
     f = _one(
         spark,
         "select x from apm.spans_cluster join apm.traces on spans.id = traces.id",
     )
     assert f["tables"] == ["apm.spans", "apm.traces"]
-
-
-def test_onehot_segment(spark):
-    vocab = {"a": 0, "b": 1, "c": 2}
-    df = spark.createDataFrame([(["b", "zzz"],)], "frags array<string>")
-    got = df.select(
-        SF.onehot_fragment_segment(F.col("frags"), vocab).alias("v")
-    ).first()["v"]
-    assert list(got) == [0.0, 1.0, 0.0]  # OOV 'zzz' leaves bits unset
 
 
 def test_literals_and_comments_do_not_pollute(spark):
