@@ -50,6 +50,47 @@ def value_hash(pdf: pd.DataFrame) -> str:
     return hashlib.sha256(csv.encode()).hexdigest()[:16]
 
 
+def _cells(pdf: pd.DataFrame) -> pd.DataFrame:
+    """Cells as the strings ``value_hash`` hashes (floats as %.6g)."""
+    return pd.DataFrame(
+        {
+            c: pdf[c].map(lambda v: "" if pd.isna(v) else "%.6g" % v)
+            if pdf[c].dtype == "float64"
+            else pdf[c].astype(str)
+            for c in pdf.columns
+        }
+    )
+
+
+def divergence(g: pd.DataFrame, x: pd.DataFrame) -> list[str]:
+    """Name what diverged between two ``canon`` frames with the same
+    row count and columns but different value hashes: the columns whose
+    own value hash differs, and the first diverging row, keyed by its
+    values of the columns that do match.  Both sides are sorted by
+    those key columns first, so rows pair up by key."""
+    bad = [
+        c
+        for c in g.columns
+        if value_hash(canon(g[[c]])) != value_hash(canon(x[[c]]))
+    ]
+    key = [c for c in g.columns if c not in bad]
+    order = key + bad
+    gs = _cells(g.sort_values(order, kind="stable").reset_index(drop=True))
+    xs = _cells(x.sort_values(order, kind="stable").reset_index(drop=True))
+    alone = bad or "none alone (rows pair up differently)"
+    out = [f"columns differing: {alone}"]
+    rows = (gs != xs).any(axis=1)
+    if rows.any():
+        i = int(rows.idxmax())
+        shown = bad or list(g.columns)
+        out += [
+            f"first diverging row {i}, key {gs.loc[i, key].to_dict()}",
+            f"  spark : {gs.loc[i, shown].to_dict()}",
+            f"  duckdb: {xs.loc[i, shown].to_dict()}",
+        ]
+    return out
+
+
 def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     if not os.path.isdir(sf_dir):
@@ -107,10 +148,8 @@ def main() -> int:
             f"{'match' if hg == hx else f'{hg} != {hx}'}"
         )
         if hg != hx and ok_rows and ok_cols:
-            diff = (g != x) & ~(g.isna() & x.isna())
-            bad_rows = diff.any(axis=1)
-            print(g[bad_rows].head(3))
-            print(x[bad_rows].head(3))
+            for line in divergence(g, x):
+                print(f"      {line}")
 
     # smoke: entry()
     if not only:

@@ -12,7 +12,7 @@ of doc_id.
 
 Timed ops (each forced by a scalar aggregate so nothing wide is
 collected):
-  * substr_dup_frac(hashed=True)  — explode+distinct, count-per-shingle,
+  * substr_dup_frac               — explode+distinct, count-per-shingle,
     join-back, per-doc agg: the heaviest shuffle pattern in the family
   * decontaminate(n=5)            — broadcast eval shingles + one shuffle
   * mix->shard->pack chain        — filter, exact-ntile, window cumsum
@@ -72,7 +72,7 @@ from sqlfeatureextraction_spark.operators.semdedup import semantic_dedup
 from sqlfeatureextraction_spark.operators.stats import bm25_topk, tfidf_topk
 
 def op_dupfrac():
-    r = dup_substring_fraction(docs, n=8, hashed=True).agg(
+    r = dup_substring_fraction(docs, n=8).agg(
         F.sum("n_dup"), F.sum("n_shingles")).collect()[0]
     return [r[0], r[1]]
 
@@ -113,14 +113,14 @@ def op_sample():
     return [r[0], r[1]]
 
 def op_chunkdup():
-    r = chunk_dup_fraction(docs, hashed=True).agg(
+    r = chunk_dup_fraction(docs).agg(
         F.sum("n_chunks"), F.sum("n_dup_chunks"),
         F.round(F.sum("dup_frac"), 3)).collect()[0]
     return [r[0], r[1], r[2]]
 
 def op_rmspans():
     # modular checksum of clean_text so the full rebuild is forced
-    r = remove_duplicate_spans(docs, n=8, hashed=True).agg(
+    r = remove_duplicate_spans(docs, n=8).agg(
         F.sum("n_removed"), F.sum("n_kept"),
         F.sum(F.pmod(F.xxhash64("clean_text"), F.lit(10**9)))
     ).collect()[0]

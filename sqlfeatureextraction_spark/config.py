@@ -61,11 +61,6 @@ class FeatureConfig:
     granularities_s    lag-bucket granularities (seconds).
     train_ratio        per-conversation train split (reference 0.8, :506).
     batch_size         output re-batching size (reference 1000, :500).
-    merge_rows_per_bucket
-                       target rows per time-salt bucket in the as-of merge
-                       path: a conversation of n rows splits into
-                       ceil(n / merge_rows_per_bucket) time-range buckets
-                       (one bucket and no replicated rows when n fits).
     """
 
     window_size_s: int = 300
@@ -79,4 +74,3 @@ class FeatureConfig:
     granularities_s: tuple[int, ...] = field(default=DEFAULT_GRANULARITIES)
     train_ratio: float = 0.8
     batch_size: int = 1000
-    merge_rows_per_bucket: int = 65536

@@ -13,10 +13,13 @@ the reference's grammars; unparseable constructs simply contribute
 empty sets (the reference likewise swallows parse failures,
 ch/ClickhouseSQLParser.java:71-76, leaving bits unset).
 
-One-hot placement and granularity bits belong to the encoders that
-build on these extractors: functions/sqlencode.py (MINC layout) and
-functions/apmencode.py (APM layout, the reference's granularity
-ladder).
+This module holds the shared building blocks (literal/comment
+stripping, per-UNION-branch clause spans, identifier sets, aggregate
+columns); the per-fragment extractors and the one-hot placement live
+in the encoder that runs them, functions/sqlencode.py (MINC layout:
+``extract_tables_ext``, ``_clause_idents``, ``extract_sel_pred_consts``).
+functions/apmencode.py (APM layout, the reference's granularity ladder)
+parses on its own.
 """
 
 from __future__ import annotations
@@ -88,52 +91,6 @@ def _idents(col: Column) -> Column:
     return F.array_sort(F.array_distinct(ids))
 
 
-def extract_tables(sql: Column) -> Column:
-    """P5: FROM/JOIN table names (lowercased, `_cluster` stripped —
-    ch/ClickhouseSQLParser.java:96-100)."""
-    names = F.regexp_extract_all(
-        F.lower(strip_literals_and_comments(sql)),
-        F.lit(rf"(?:from|join)\s+({IDENT})"),
-        1,
-    )
-    names = F.transform(
-        names, lambda t: F.regexp_replace(t, r"_cluster$", "")
-    )
-    return F.array_sort(F.array_distinct(names))
-
-
-def extract_projection_columns(sql: Column) -> Column:
-    return _merge_branch_sets(
-        F.transform(_clause_each(sql, "select", ["from"]), _idents)
-    )
-
-
-def extract_where_columns(sql: Column) -> Column:
-    return _merge_branch_sets(
-        F.transform(
-            _clause_each(
-                sql, "where", ["group by", "order by", "limit", "having"]
-            ),
-            _idents,
-        )
-    )
-
-
-def extract_groupby_columns(sql: Column) -> Column:
-    return _merge_branch_sets(
-        F.transform(
-            _clause_each(sql, "group by", ["order by", "limit", "having"]),
-            _idents,
-        )
-    )
-
-
-def extract_orderby_columns(sql: Column) -> Column:
-    return _merge_branch_sets(
-        F.transform(_clause_each(sql, "order by", ["limit"]), _idents)
-    )
-
-
 def extract_agg_columns(sql: Column, fn: str) -> Column:
     """Columns inside avg(...)/min(...)/max(...)/sum(...) calls."""
     return F.array_sort(
@@ -144,41 +101,4 @@ def extract_agg_columns(sql: Column, fn: str) -> Column:
                 1,
             )
         )
-    )
-
-
-def extract_sel_pred_ops(sql: Column) -> Column:
-    """P11: (column, op_index) pairs for predicates `col OP literal`.
-    Returns array<struct<col:string, op:int>>."""
-    pairs = F.regexp_extract_all(
-        F.lower(strip_literals_and_comments(sql)),
-        F.lit(rf"({IDENT})\s*(<=|>=|<>|!=|=|<|>|\s+like\s+)"),
-        0,
-    )
-
-    def to_struct(p):
-        col = F.regexp_extract(p, rf"({IDENT})", 1)
-        op = F.trim(F.regexp_replace(p, rf"{IDENT}\s*", ""))
-        op = F.when(op == "!=", F.lit("<>")).otherwise(op)
-        op_idx = F.array_position(
-            F.lit(SEL_PRED_OPS), F.lower(op)
-        ).cast("int") - 1
-        return F.struct(col.alias("col"), op_idx.alias("op"))
-
-    return F.transform(pairs, to_struct)
-
-
-def extract_fragments(sql: Column) -> Column:
-    """Full P5/P6 fragment record as one struct column."""
-    return F.struct(
-        extract_tables(sql).alias("tables"),
-        extract_projection_columns(sql).alias("projection"),
-        extract_where_columns(sql).alias("where_cols"),
-        extract_groupby_columns(sql).alias("groupby_cols"),
-        extract_orderby_columns(sql).alias("orderby_cols"),
-        extract_agg_columns(sql, "avg").alias("avg_cols"),
-        extract_agg_columns(sql, "min").alias("min_cols"),
-        extract_agg_columns(sql, "max").alias("max_cols"),
-        extract_agg_columns(sql, "sum").alias("sum_cols"),
-        extract_sel_pred_ops(sql).alias("sel_preds"),
     )

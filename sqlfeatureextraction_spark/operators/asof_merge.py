@@ -12,7 +12,7 @@ pandas pass:
 
   1. adaptive time salting (``_salted``): a per-conversation stats pass
      (count, min/max ts) splits a conversation of n rows into
-     ``ceil(n / cfg.merge_rows_per_bucket)`` time-range buckets; rows
+     ``ceil(n / ROWS_PER_BUCKET)`` time-range buckets; rows
      in the trailing ``W−1`` seconds of a bucket are REPLICATED into
      the next bucket as context-only (is_anchor=false) so every anchor
      still sees its full trailing window — overlap replication, the
@@ -45,6 +45,11 @@ from sqlfeatureextraction_spark.operators.pit_window import (
 )
 from sqlfeatureextraction_spark.vocab import Vocabulary
 
+# Target rows per time-salt bucket: a conversation of n rows splits
+# into ceil(n / ROWS_PER_BUCKET) buckets (one bucket and no replicated
+# rows when n fits).
+ROWS_PER_BUCKET = 65536
+
 
 def _salted(vec: DataFrame, cfg: FeatureConfig) -> DataFrame:
     """Adaptive time-range salting with overlap replication.
@@ -57,7 +62,7 @@ def _salted(vec: DataFrame, cfg: FeatureConfig) -> DataFrame:
     map-side-combined shuffle on conv_id, NOT a driver-side census)
     sizes the span per conversation:
 
-      buckets = ceil(n_rows / cfg.merge_rows_per_bucket)
+      buckets = ceil(n_rows / ROWS_PER_BUCKET)
       span    = max(ceil(lifetime / buckets), 8·W)   if buckets > 1
       span    = lifetime + W + 2                     if buckets == 1
 
@@ -75,7 +80,7 @@ def _salted(vec: DataFrame, cfg: FeatureConfig) -> DataFrame:
         F.min("ts_sec").alias("_t0"),
         F.max("ts_sec").alias("_t1"),
     )
-    nb = F.ceil(F.col("_n") / cfg.merge_rows_per_bucket)
+    nb = F.ceil(F.col("_n") / ROWS_PER_BUCKET)
     life = F.col("_t1") - F.col("_t0")
     span = F.when(nb <= 1, life + w + 2).otherwise(
         F.greatest(F.ceil(life / nb), F.lit(8 * w))
@@ -105,8 +110,8 @@ def _window_merge_fn(cfg: FeatureConfig, sums: list[str]):
     AND output) measured 30× slower than the narrow formulation at
     local[2] (object-dtype vstack of millions of tiny ndarrays + Arrow
     list-array materialization).  The finishers take it from there,
-    so the wide arrays cross the wire exactly once, identically to
-    the JVM selector.  ``sums`` (a subset of TURN_SUMS) pass through
+    identically to the JVM selector, so no wide array enters this
+    stage.  ``sums`` (a subset of TURN_SUMS) pass through
     the dedupe as the representative's segment sums."""
     k, n = cfg.top_k_entities, cfg.top_n_members
     win = cfg.window_size_s
@@ -248,8 +253,8 @@ def window_features_merge(
 ) -> DataFrame:
     """(conv_id, ts) → window_features — the salted selector and the
     dense finisher (the selected representatives join their feature
-    vectors back by (conv_id, turn_idx), so the wide array crosses the
-    wire exactly once)."""
+    vectors back by (conv_id, turn_idx); ``dense_finish`` says where
+    the wide array crosses the wire)."""
     return dense_finish(
         select_members_salted(vec, cfg), vec, vocab, cfg, layout
     )

@@ -193,7 +193,6 @@ def dup_substring_fraction(
     n: int = 8,
     text_col: str = "text",
     id_col: str = "doc_id",
-    hashed: bool = False,
 ) -> DataFrame:
     """Per-document fraction of distinct word n-grams that also occur
     in at least one OTHER document — the corpus-level substring
@@ -216,18 +215,13 @@ def dup_substring_fraction(
     window for the rest) — not wired because the pre-distinct per-doc
     dedup already caps a shingle's rows at the corpus's doc count.
 
-    ``hashed=True`` replaces the shingle string by ``xxhash64`` of it
-    before the shuffle — the 100-TB transport format (8 bytes/key
-    instead of the n-gram text).  Results are identical absent 64-bit
-    collisions; equality of the two paths is pinned in pytest, and the
-    DuckDB-oracled driver row uses the string path.
+    The shingle string itself is the key: a hash key would let two
+    distinct n-grams collide and count as one.
     """
     dsh = docs.select(
         F.col(id_col),
         F.explode(shingles_col(tokens_col(F.col(text_col)), n)).alias("sh"),
     ).distinct()
-    if hashed:
-        dsh = dsh.select(id_col, F.xxhash64("sh").alias("sh"))
     nd = F.count("*").over(Window.partitionBy("sh"))
     per_doc = (
         dsh.withColumn("_nd", nd)
@@ -258,8 +252,6 @@ def remove_duplicate_spans(
     n: int = 8,
     text_col: str = "text",
     id_col: str = "doc_id",
-    hashed: bool = False,
-    mode: str = "compact",
 ) -> DataFrame:
     """Remove cross-document duplicated spans — the removal counterpart
     of :func:`dup_substring_fraction` (Lee et al., "Deduplicating
@@ -277,33 +269,16 @@ def remove_duplicate_spans(
     Plan shape for 100 TB: all stages are key-partitioned shuffles —
     distinct (doc, shingle) → per-shingle count (the duplicated-shingle
     set, never collected/broadcast), and an equi-join of shingle
-    occurrences against that set on the shingle key.  From there, two
-    modes (bit-identical; equality pinned in pytest):
-
-    * ``mode="compact"`` (default): the duplicated-occurrence START
-      positions aggregate per document (collect_set — bounded by the
-      doc's own shingle count) and the rebuild is one join back to the
-      token arrays plus array expressions (a token survives iff no
-      start lies in (i-n, i]).  Shuffle volume is ONE row per
-      duplicated occurrence + one per doc — nothing is exploded to
-      per-covered-position or per-token rows.  Per-row work is
-      O(tokens × starts), bounded by the document's own length — the
-      same bound as the final rebuild buffer.
-    * ``mode="antijoin"``: coverage explode → distinct (doc, position),
-      left-anti join of token rows against covered positions, per-doc
-      rebuild aggregate.  Every step is constant work per row (no
-      O(tokens × starts) term), at the cost of shuffling n rows per
-      duplicated occurrence plus one row per corpus token — the
-      formulation to prefer if single documents are pathologically
-      long.
-
-    No driver collect, no cartesian product in either mode.
-
-    ``hashed=True`` replaces the shingle string by ``xxhash64`` of it
-    before the count/join shuffles — the 100-TB transport format
-    (8 bytes/key instead of n-gram text), same trade as
-    ``dup_substring_fraction``; path equality is pinned in pytest and
-    the DuckDB-oracled driver row uses the string path.
+    occurrences against that set on the shingle string.  The
+    duplicated-occurrence START positions aggregate per document
+    (collect_set — bounded by the doc's own shingle count) and the
+    rebuild is one join back to the token arrays plus array
+    expressions (a token survives iff no start lies in (i-n, i]).
+    Shuffle volume is ONE row per duplicated occurrence + one per doc —
+    nothing is exploded to per-covered-position or per-token rows.
+    Per-row work is O(tokens × starts), bounded by the document's own
+    length — the same bound as the final rebuild buffer.  No driver
+    collect, no cartesian product.
 
     Returns one row per document: (id_col, n_tokens, n_kept,
     n_removed, clean_text) — documents with no duplicated span pass
@@ -311,8 +286,6 @@ def remove_duplicate_spans(
     """
     if n < 1:
         raise ValueError(f"shingle width must be >= 1, got {n}")
-    if mode not in ("compact", "antijoin"):
-        raise ValueError(f"unknown mode {mode!r}")
     toks = docs.select(F.col(id_col), tokens_col(F.col(text_col)).alias("_tk"))
     # shingle occurrences with their 0-based token start positions:
     # shingles_col nulls only the tail starts (i + n > size), and the
@@ -322,8 +295,6 @@ def remove_duplicate_spans(
         F.col(id_col),
         F.posexplode(shingles_col(F.col("_tk"), n)).alias("pos", "sh"),
     )
-    if hashed:
-        sh_pos = sh_pos.select(id_col, "pos", F.xxhash64("sh").alias("sh"))
     dup = (
         sh_pos.select(id_col, "sh")
         .distinct()
@@ -332,80 +303,37 @@ def remove_duplicate_spans(
         .where(F.col("_nd") > 1)
         .select("sh")
     )
-    if mode == "compact":
-        starts = (
-            sh_pos.join(dup, "sh")
-            .groupBy(id_col)
-            .agg(F.collect_set("pos").alias("_starts"))
-        )
-        joined = toks.join(starts, id_col, "left").select(
-            F.col(id_col),
-            "_tk",
-            F.coalesce("_starts", F.array().cast("array<int>")).alias(
-                "_starts"
-            ),
-        )
-        # token i survives iff no duplicated span start s satisfies
-        # s <= i < s + n
-        kept_arr = F.filter(
-            F.transform(
-                F.col("_tk"),
-                lambda t, i: F.when(
-                    ~F.exists(
-                        F.col("_starts"),
-                        lambda s: (s <= i) & (i < s + F.lit(n)),
-                    ),
-                    t,
-                ),
-            ),
-            lambda t: t.isNotNull(),
-        )
-        return joined.select(
-            F.col(id_col),
-            F.size("_tk").cast("long").alias("n_tokens"),
-            F.size(kept_arr).cast("long").alias("n_kept"),
-            (F.size("_tk") - F.size(kept_arr)).cast("long").alias(
-                "n_removed"
-            ),
-            F.array_join(kept_arr, " ").alias("clean_text"),
-        )
-
-    cov = (
+    starts = (
         sh_pos.join(dup, "sh")
-        .select(
-            F.col(id_col),
-            F.explode(
-                F.sequence(F.col("pos"), F.col("pos") + F.lit(n - 1))
-            ).alias("i"),
-        )
-        .distinct()
+        .groupBy(id_col)
+        .agg(F.collect_set("pos").alias("_starts"))
     )
-    tok_rows = toks.select(
-        F.col(id_col), F.posexplode(F.col("_tk")).alias("i", "tok")
+    joined = toks.join(starts, id_col, "left").select(
+        F.col(id_col),
+        "_tk",
+        F.coalesce("_starts", F.array().cast("array<int>")).alias("_starts"),
     )
-    kept = tok_rows.join(cov, [id_col, "i"], "left_anti")
-    rebuilt = kept.groupBy(id_col).agg(
-        F.count("*").alias("_n_kept"),
-        F.array_join(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("i", "tok"))),
-                lambda s: s["tok"],
+    # token i survives iff no duplicated span start s satisfies
+    # s <= i < s + n
+    kept_arr = F.filter(
+        F.transform(
+            F.col("_tk"),
+            lambda t, i: F.when(
+                ~F.exists(
+                    F.col("_starts"),
+                    lambda s: (s <= i) & (i < s + F.lit(n)),
+                ),
+                t,
             ),
-            " ",
-        ).alias("clean_text"),
+        ),
+        lambda t: t.isNotNull(),
     )
-    return (
-        toks.select(F.col(id_col), F.size("_tk").alias("n_tokens"))
-        .join(rebuilt, id_col, "left")
-        .select(
-            F.col(id_col),
-            F.col("n_tokens").cast("long").alias("n_tokens"),
-            F.coalesce("_n_kept", F.lit(0)).cast("long").alias("n_kept"),
-            (F.col("n_tokens") - F.coalesce("_n_kept", F.lit(0)))
-            .cast("long")
-            .alias("n_removed"),
-            F.coalesce("clean_text", F.lit("")).alias("clean_text"),
-        )
+    return joined.select(
+        F.col(id_col),
+        F.size("_tk").cast("long").alias("n_tokens"),
+        F.size(kept_arr).cast("long").alias("n_kept"),
+        (F.size("_tk") - F.size(kept_arr)).cast("long").alias("n_removed"),
+        F.array_join(kept_arr, " ").alias("clean_text"),
     )
 
 
@@ -718,7 +646,6 @@ def chunk_dup_fraction(
     boundary_hex: str = "0",
     id_col: str = "doc_id",
     text_col: str = "text",
-    hashed: bool = False,
 ) -> DataFrame:
     """Per-document duplicated-CHUNK fraction: the share of a doc's
     content-defined chunks (chunk_documents) whose exact text occurs
@@ -733,20 +660,14 @@ def chunk_dup_fraction(
     Plan: chunking's one doc-id shuffle, then count per distinct
     chunk text (map-side combine; a hot chunk contributes ONE count
     row) and a join back on the text key — the substr_dup_frac shape.
-    ``hashed=True`` swaps the join/count key for
-    ``xxhash64(chunk_text)`` (8-byte transport — the corpus-scale
-    path, exactly like dup_substring_fraction(hashed=True)); pinned
-    equal in pytest, text keys kept as the oracle-parity default.
+    The text itself is the key, so two distinct chunks never merge.
     """
     chunks = chunk_documents(docs, boundary_hex, id_col, text_col)
-    key = "_ckey" if hashed else "chunk_text"
-    if hashed:
-        chunks = chunks.withColumn("_ckey", F.xxhash64("chunk_text"))
-    per_text = chunks.groupBy(key).agg(
+    per_text = chunks.groupBy("chunk_text").agg(
         F.count(F.lit(1)).alias("_n_occ")
     )
     return (
-        chunks.join(per_text, key)
+        chunks.join(per_text, "chunk_text")
         .groupBy(id_col)
         .agg(
             F.count(F.lit(1)).cast("int").alias("n_chunks"),

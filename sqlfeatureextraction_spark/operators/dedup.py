@@ -98,21 +98,46 @@ def with_minhash(
     fire for outer generates, and the null filter on the generated
     attribute cannot be pushed below the Generate.  Row-identical:
     outer emits exactly one extra NULL element per empty/null array,
-    which the filter removes."""
-    ex = df.select(
-        F.col(id_col), F.explode_outer(shingle_col).alias("_s")
-    ).where(F.col("_s").isNotNull())
+    which the filter removes.
+
+    ``id_col`` must be unique: the per-id aggregate would otherwise
+    merge the shingle sets of two documents.  Each row is tagged before
+    the explode and the same aggregate carries the tag's min and max,
+    so a second row under one id fails the job (``raise_error``)
+    without an extra pass.  Rows with no shingles never reach the
+    aggregate and are not checked."""
+    # the tag is projected BELOW the explode: selected beside it, it
+    # would be evaluated once per shingle
+    ex = (
+        df.select(
+            F.col(id_col),
+            F.monotonically_increasing_id().alias("_row"),
+            F.col(shingle_col),
+        )
+        .select(id_col, "_row", F.explode_outer(shingle_col).alias("_s"))
+        .where(F.col("_s").isNotNull())
+    )
     mins = ex.groupBy(id_col).agg(
+        F.min("_row").alias("_r0"),
+        F.max("_row").alias("_r1"),
         *[
             F.min(F.xxhash64("_s", F.lit(i))).alias(f"_m{i}")
             for i in range(num_hashes)
-        ]
+        ],
     )
     sig = mins.select(
         id_col,
-        F.array(*[F.col(f"_m{i}") for i in range(num_hashes)]).alias(
-            "minhash"
-        ),
+        F.when(
+            F.col("_r0") != F.col("_r1"),
+            F.raise_error(
+                F.concat(
+                    F.lit(f"with_minhash: duplicate {id_col} "),
+                    F.col(id_col).cast("string"),
+                )
+            ),
+        )
+        .otherwise(F.array(*[F.col(f"_m{i}") for i in range(num_hashes)]))
+        .alias("minhash"),
     )
     return df.join(sig, id_col, "left")
 
@@ -219,7 +244,6 @@ def exact_against_corpus(
     corpus: DataFrame,
     text_col: str = "text",
     id_col: str = "doc_id",
-    hashed: bool = False,
 ) -> DataFrame:
     """Incremental-ingest exact dedup: flag every NEW document against
     the already-ingested corpus — ``in_corpus`` (its text already
@@ -231,13 +255,10 @@ def exact_against_corpus(
     keys (map-side combine collapses its duplicates before the
     shuffle); the membership test is a left equi-join on the key —
     never a broadcast of the corpus, which is the big side by
-    definition.  ``hashed=True`` joins on ``xxhash64(text)`` (8-byte
-    transport — the scale path, pinned equal in pytest); the default
-    string-key path is what the DuckDB oracle recomputes.
+    definition.  The key is the text itself, so two distinct texts
+    never merge — the same key the DuckDB oracle recomputes.
     """
-    key = (
-        F.xxhash64(F.col(text_col)) if hashed else F.col(text_col)
-    ).alias("_k")
+    key = F.col(text_col).alias("_k")
     corpus_keys = corpus.select(key).distinct().withColumn(
         "_inc", F.lit(True)
     )
@@ -677,84 +698,11 @@ def simhash_neardup_pairs(
 # ------------------------------------------------ near-dup cluster closure
 
 
-def _star_components(edges: DataFrame, max_rounds: int = 20) -> DataFrame:
-    """Alternating large-star/small-star contraction (Kiveris et al.,
-    "Connected Components in MapReduce and Beyond", SoCC'14) →
-    (id, lbl) with lbl = the component's min vertex id.
-
-    Converges in O(log n) rounds for ANY component shape — the
-    unbounded-diameter complement to min-label propagation (whose
-    round count is the component diameter).  Each round is a handful
-    of hash-partitioned joins/aggregates on two-long edge rows; edges
-    stay canonically oriented (hi, lo) so the star-forest fixpoint is
-    directly readable as labels.  ``edges`` must be the distinct
-    symmetric-free pair set with ``u != v`` (columns u, v, any
-    orientation).
-    """
-    # canonical (hi, lo) orientation, self-loops dropped
-    e = (
-        edges.select(
-            F.greatest("u", "v").alias("hi"), F.least("u", "v").alias("lo")
-        )
-        .where(F.col("hi") != F.col("lo"))
-        .distinct()
-        .localCheckpoint(eager=False)
-    )
-    for _ in range(max_rounds):
-        # ---- large-star: every neighbor u > v links to m(v) =
-        #      min(Γ(v) ∪ {v}); emitted edges are (u, m) with u > m
-        sym = e.union(
-            e.select(F.col("lo").alias("hi"), F.col("hi").alias("lo"))
-        ).select(F.col("hi").alias("src"), F.col("lo").alias("dst"))
-        m = (
-            sym.groupBy("src")
-            .agg(F.min("dst").alias("mn"))
-            .select("src", F.least("mn", "src").alias("m"))
-        )
-        large = (
-            sym.join(m, "src")
-            .where(F.col("dst") > F.col("src"))
-            .select(F.col("dst").alias("hi"), F.col("m").alias("lo"))
-            .where(F.col("hi") != F.col("lo"))
-            .distinct()
-        )
-        # ---- small-star: group by the larger endpoint v; every
-        #      smaller neighbor (and v itself) links to min(N(v))
-        mm = large.groupBy("hi").agg(F.min("lo").alias("mm"))
-        joined = large.join(mm, "hi")
-        new_e = (
-            joined.where(F.col("lo") != F.col("mm"))
-            .select(F.col("lo").alias("hi"), F.col("mm").alias("lo"))
-            .union(joined.select("hi", F.col("mm").alias("lo")))
-            .where(F.col("hi") != F.col("lo"))
-            .distinct()
-            .localCheckpoint(eager=False)
-        )
-        # fixpoint = star forest: edge set unchanged (both are distinct
-        # frames, so subtract-empty + equal counts is exact equality)
-        if (
-            new_e.count() == e.count()
-            and new_e.subtract(e).limit(1).count() == 0
-        ):
-            e = new_e
-            break
-        e = new_e
-    # star forest → labels; the defensive min() collapses the (only
-    # pathological, max_rounds-capped) case of a node with two roots
-    return (
-        e.select(F.col("hi").alias("id"), F.col("lo").alias("lbl"))
-        .union(e.select(F.col("lo").alias("id"), F.col("lo").alias("lbl")))
-        .groupBy("id")
-        .agg(F.min("lbl").alias("lbl"))
-    )
-
-
 def connected_components(
     pairs: DataFrame,
     vertices: DataFrame | None = None,
     id_col: str = "doc_id",
     max_iter: int = 25,
-    algorithm: str = "label",
 ) -> DataFrame:
     """Connected components over near-duplicate PAIRS → one cluster id
     (the component's min vertex id) per vertex.
@@ -773,44 +721,23 @@ def connected_components(
     two narrow shuffles per round (labels are two longs; the symmetric
     edge list is re-used unchanged).  Rounds needed = component
     diameter, and LSH-derived near-dup components are band-bucket
-    near-cliques (diameter ≲ 3-4), so this beats the O(log n)
-    large-star/small-star scheme on constants while staying safe: a
-    pathological chain terminates at max_iter with labels still a
-    valid (if unconverged) partition refinement, and convergence is
-    checked each round with a count on the CHANGED rows only.  Each
-    round's label frame is lazily localCheckpoint-ed to truncate the
-    logical plan (same exponential-explain lesson as
+    near-cliques (diameter ≲ 3-4), so few rounds suffice.  Convergence
+    is checked each round with a count on the CHANGED rows only; a
+    component whose diameter needs more than ``max_iter`` rounds
+    raises ``ValueError`` rather than returning unconverged labels.
+    Each round's label frame is lazily localCheckpoint-ed to truncate
+    the logical plan (same exponential-explain lesson as
     reorganize.py's hop-map path).
 
     vertices: optional frame holding ``id_col`` for the full corpus so
     singletons (no near-dup pair at all) appear with cluster_id =
     their own id; omit to label only paired vertices.
-
-    algorithm: ``"label"`` (default — min-label propagation, fastest
-    constants for the near-clique components LSH banding yields) or
-    ``"star"`` (large-star/small-star contraction, O(log n) rounds
-    regardless of component diameter — use when components may be long
-    chains, e.g. pairs from temporal adjacency rather than LSH).
     """
+    if max_iter < 1:
+        raise ValueError(f"max_iter must be >= 1, got {max_iter}")
     edges = pairs.select(
         F.col("id_a").alias("u"), F.col("id_b").alias("v")
     )
-    if algorithm == "star":
-        labels = _star_components(edges)
-        out = labels.select(
-            F.col("id").alias(id_col), F.col("lbl").alias("cluster_id")
-        )
-        if vertices is not None:
-            out = (
-                vertices.select(id_col)
-                .distinct()
-                .join(out, id_col, "left")
-                .withColumn(
-                    "cluster_id",
-                    F.coalesce(F.col("cluster_id"), F.col(id_col)),
-                )
-            )
-        return out
     edges = (
         edges.union(edges.select(F.col("v").alias("u"), F.col("u").alias("v")))
         .distinct()
@@ -843,12 +770,19 @@ def connected_components(
             ).alias("new_lbl"),
         )
         stepped = stepped.localCheckpoint(eager=False)
-        if stepped.where(F.col("new_lbl") < F.col("lbl")).count() == 0:
+        n_changed = stepped.where(F.col("new_lbl") < F.col("lbl")).count()
+        if n_changed == 0:
             labels = stepped.select("id", "lbl")
             break
         labels = stepped.select(
             "id", F.col("new_lbl").alias("lbl")
         ).localCheckpoint(eager=False)
+    else:
+        raise ValueError(
+            f"connected_components did not converge within max_iter="
+            f"{max_iter} rounds: {n_changed} labels still changed in the "
+            "last round (a component's diameter exceeds max_iter)"
+        )
     out = labels.select(
         F.col("id").alias(id_col), F.col("lbl").alias("cluster_id")
     )

@@ -262,12 +262,20 @@ def dense_finish(
     """Member rows → (conv_id, ts_sec, ts, window_features).
 
     The ≤ k·n selected representatives join their feature vectors back
-    by (conv_id, turn_idx) — the wide array is shuffled once, on the
-    vec side of this join.  `vec` should be cached/materialized by the
-    caller (FeaturePipeline does) since it feeds both the selector and
-    this join.  ts_sec rides along (1:1 with ts per conv — the anchor
-    key family) so downstream joins can normalize on the epoch key
-    even with sub-second timestamps."""
+    by (conv_id, turn_idx): the wide array moves once on the vec side
+    of this join (a shuffle, or a broadcast when vec is small), and
+    again when the per-anchor ``collect_list`` sends its partial
+    buffers through an exchange on (conv_id, ts_sec, ts) — unless the
+    joined rows are already clustered by conv_id, which the salted
+    selector's (partitioned by bucket and salt) are not.
+    ``FeaturePipeline.transform`` moves it twice more (its per-anchor
+    ``last`` aggregate and, at small sizes, the broadcast of it for the
+    final join).
+    `vec` should be cached/materialized by the caller (FeaturePipeline
+    does) since it feeds both the selector and this join.  ts_sec rides
+    along (1:1 with ts per conv — the anchor key family) so downstream
+    joins can normalize on the epoch key even with sub-second
+    timestamps."""
     feats = vec.select(
         "conv_id",
         F.col("turn_idx").cast("long").alias("rep_turn_idx"),

@@ -12,6 +12,7 @@ import pytest
 
 from oracle import pandas_oracle as O
 from sqlfeatureextraction_spark.config import FeatureConfig
+from sqlfeatureextraction_spark.operators import asof_merge
 from sqlfeatureextraction_spark.operators.asof_merge import (
     select_members_salted,
     window_features_merge,
@@ -38,8 +39,9 @@ CONFIGS = {
     # W=61s: salting span shrinks, replication kicks in at many edges
     "w61": (FeatureConfig(window_size_s=61), False),
     # every conversation splits into many salt buckets — overlap
-    # replication is exercised everywhere
-    "salt8": (FeatureConfig(merge_rows_per_bucket=8), False),
+    # replication is exercised everywhere (ROWS_PER_BUCKET = 8, set in
+    # the test)
+    "salt8": (FeatureConfig(), False),
     "counts": (FeatureConfig(binary_bow=False), False),
     # the sparse struct only changes the transport format; the
     # assembler densifies per representative
@@ -126,9 +128,11 @@ def _reduce(mat: np.ndarray, n_tools: int, cfg, layout) -> dict:
 @pytest.mark.parametrize("selector_id", list(SELECTORS))
 @pytest.mark.parametrize("config_id", list(CONFIGS))
 def test_selectors_and_finishers(
-    cache, transcripts_df, transcripts_pdf, config_id, selector_id
+    monkeypatch, cache, transcripts_df, transcripts_pdf, config_id, selector_id
 ):
     cfg, sparse = CONFIGS[config_id]
+    if config_id == "salt8":
+        monkeypatch.setattr(asof_merge, "ROWS_PER_BUCKET", 8)
     select = SELECTORS[selector_id]
     v = fit_vocabulary(transcripts_df)
     vec, layout = with_turn_features(transcripts_df, v, cfg, sparse=sparse)

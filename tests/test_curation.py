@@ -73,14 +73,6 @@ def test_dup_substring_fraction_vs_bruteforce(spark, docs_df):
         want_frac = round(ndup / max(len(shs), 1), 6)
         assert got[i][0] == len(shs) and got[i][1] == ndup
         assert math.isclose(got[i][2], want_frac, abs_tol=1e-9), i
-    # hashed transport path: identical result
-    got_h = {
-        r["doc_id"]: (r["n_shingles"], r["n_dup"], r["dup_frac"])
-        for r in curation.dup_substring_fraction(
-            docs_df, n=n, hashed=True
-        ).collect()
-    }
-    assert got_h == got
 
 
 def _remove_dup_spans_oracle(docs, n):
@@ -126,23 +118,6 @@ def test_remove_duplicate_spans_vs_bruteforce(spark, docs_df):
     # tokens covered by some duplicated 4-gram, never more
     tk0 = DOCS[0][1].split(" ")
     assert got[0][1] + got[0][2] == len(tk0)
-    # hashed shingle-key transport path: identical result
-    got_h = {
-        r["doc_id"]: (r["n_tokens"], r["n_kept"], r["n_removed"], r["clean_text"])
-        for r in curation.remove_duplicate_spans(
-            docs_df, n=n, hashed=True
-        ).collect()
-    }
-    assert got_h == got
-    # antijoin mode (constant work per row, for pathologically long
-    # docs): identical result to the default compact mode
-    got_a = {
-        r["doc_id"]: (r["n_tokens"], r["n_kept"], r["n_removed"], r["clean_text"])
-        for r in curation.remove_duplicate_spans(
-            docs_df, n=n, mode="antijoin"
-        ).collect()
-    }
-    assert got_a == got
 
 
 def _mix_keep(doc_id, rate, salt="mix"):
@@ -351,19 +326,14 @@ def test_curation_random_corpus_differential(spark, seed):
         )
         for i, shs in per_sh.items()
     }
-    # remove_duplicate_spans (same shingle width as dup fraction),
-    # both modes
-    want_rm = _remove_dup_spans_oracle(rows, n_dup)
-    for mode in ("compact", "antijoin"):
-        got = {
-            r["doc_id"]: (
-                r["n_tokens"], r["n_kept"], r["n_removed"], r["clean_text"]
-            )
-            for r in curation.remove_duplicate_spans(
-                df, n=n_dup, mode=mode
-            ).collect()
-        }
-        assert got == want_rm, mode
+    # remove_duplicate_spans (same shingle width as dup fraction)
+    got = {
+        r["doc_id"]: (
+            r["n_tokens"], r["n_kept"], r["n_removed"], r["clean_text"]
+        )
+        for r in curation.remove_duplicate_spans(df, n=n_dup).collect()
+    }
+    assert got == _remove_dup_spans_oracle(rows, n_dup)
     # repetition stats
     got = {
         r["doc_id"]: (r["n_shingles"], r["n_distinct"])
@@ -517,18 +487,3 @@ def test_chunk_dup_fraction_hand_case(spark):
     assert {r["doc_id"]: r["count"] for r in per_doc} == {
         d: v[0] for d, v in got.items()
     }
-
-
-def test_chunk_dup_fraction_hashed_equals_text(spark):
-    from sqlfeatureextraction_spark.operators.curation import (
-        chunk_dup_fraction,
-    )
-
-    docs = spark.read.parquet(
-        "/root/testdata/sf0.001/documents.parquet"
-    )
-    a = sorted(map(tuple, chunk_dup_fraction(docs).collect()))
-    b = sorted(
-        map(tuple, chunk_dup_fraction(docs, hashed=True).collect())
-    )
-    assert a == b

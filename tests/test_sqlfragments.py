@@ -1,13 +1,34 @@
-"""P5-P6/P11 SQL fragment extraction vs hand-written expectations."""
+"""P5-P6/P11 SQL fragment extraction vs hand-written expectations, through
+the extractors the MINC encoder (functions/sqlencode.encode_minc) runs."""
 
 from pyspark.sql import functions as F
 
-from sqlfeatureextraction_spark.functions import sqlfragments as SF
+from sqlfeatureextraction_spark.functions import sqlencode as SE
+from sqlfeatureextraction_spark.functions.sqlclean import clean_sql_text
+from sqlfeatureextraction_spark.functions.sqlfragments import (
+    extract_agg_columns,
+)
 
 
-def _one(spark, sql):
+def _one(spark, sql, clean=False):
+    """The encoder's fragment sets for one SQL text; ``clean`` applies
+    ``clean_sql_text`` first, as the gate rows do before encoding."""
     df = spark.createDataFrame([(sql,)], "sql string")
-    return df.select(SF.extract_fragments(F.col("sql")).alias("f")).first()["f"]
+    s = clean_sql_text(F.col("sql")) if clean else F.col("sql")
+    f = F.struct(
+        SE.extract_tables_ext(s).alias("tables"),
+        SE._clause_idents(s, "select", ["from"]).alias("projection"),
+        SE._clause_idents(
+            s, "where", ["group by", "order by", "limit", "having"]
+        ).alias("where_cols"),
+        SE._clause_idents(
+            s, "group by", ["order by", "limit", "having"]
+        ).alias("groupby_cols"),
+        SE._clause_idents(s, "order by", ["limit"]).alias("orderby_cols"),
+        extract_agg_columns(s, "sum").alias("sum_cols"),
+        SE.extract_sel_pred_consts(s).alias("sel_preds"),
+    )
+    return df.select(f.alias("f")).first()["f"]
 
 
 def test_basic_select(spark):
@@ -15,6 +36,7 @@ def test_basic_select(spark):
         spark,
         "SELECT a, b, sum(c) FROM db.events_cluster "
         "WHERE d > 5 AND e LIKE '%x%' GROUP BY a ORDER BY b LIMIT 10",
+        clean=True,
     )
     assert f["tables"] == ["db.events"]
     assert f["projection"] == ["a", "b", "c", "sum"]  # regex keeps fn name
@@ -22,23 +44,22 @@ def test_basic_select(spark):
     assert f["groupby_cols"] == ["a"]
     assert f["orderby_cols"] == ["b"]
     assert f["sum_cols"] == ["c"]
+    got = {(p["col"], p["op"], p["const"]) for p in f["sel_preds"]}
+    assert got == {("d", 5, "5"), ("e", 6, "%x%")}
 
 
 def test_sel_pred_ops(spark):
     f = _one(spark, "select * from t where a = 1 and b <= 2 and c <> 3")
     got = {(p["col"], p["op"]) for p in f["sel_preds"]}
     # op order {=, <>, <=, >=, <, >, LIKE}
-    assert ("a", 0) in got
-    assert ("b", 2) in got
-    assert ("c", 1) in got
+    assert got == {("a", 0), ("b", 2), ("c", 1)}
 
 
 def test_join_tables_and_cluster_strip(spark):
-    f = _one(
-        spark,
-        "select x from apm.spans_cluster join apm.traces on spans.id = traces.id",
-    )
-    assert f["tables"] == ["apm.spans", "apm.traces"]
+    sql = "select x from apm.spans_cluster join apm.traces on spans.id = traces.id"
+    # the `_cluster` suffix is stripped by clean_sql_text, before encoding
+    assert _one(spark, sql)["tables"] == ["apm.spans_cluster", "apm.traces"]
+    assert _one(spark, sql, clean=True)["tables"] == ["apm.spans", "apm.traces"]
 
 
 def test_literals_and_comments_do_not_pollute(spark):
@@ -56,10 +77,9 @@ def test_literals_and_comments_do_not_pollute(spark):
     assert "z" not in f["where_cols"] and "q" not in f["where_cols"]
     assert f["groupby_cols"] == ["a"]
     assert f["orderby_cols"] == []
-    # no phantom union branch: projection only from the real query
+    # no phantom predicate from inside a literal
     cols = {(p["col"], p["op"]) for p in f["sel_preds"]}
-    assert ("note", 0) in cols and ("tag", 0) in cols
-    assert all(c in ("note", "tag") for c, _ in cols)
+    assert cols == {("note", 0), ("tag", 0)}
 
 
 def test_union_branch_accumulation(spark):
