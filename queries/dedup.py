@@ -275,13 +275,13 @@ def _q_simhash_neardup(spark, sf_dir):
 
 
 def _q_dedup_clusters(spark, sf_dir):
-    """Near-dup CLUSTERS: minhash-LSH pairs closed transitively via
-    min-label-propagation connected components; every document gets its
-    component's min doc_id as cluster_id (singletons: own id).  Same
-    LSH recall argument as minhash_pairs (32 bands × 2 rows ⇒ miss
-    ≤ 1e-4 at J≥0.5), so the DuckDB oracle — exact all-pairs Jaccard
-    pairs + recursive-CTE transitive closure — recomputes the identical
-    clustering."""
+    """Near-dup CLUSTERS: minhash-LSH pairs closed transitively by
+    hook+jump connected components (one action per round); every
+    document gets its component's min doc_id as cluster_id (singletons:
+    own id).  Same LSH recall argument as minhash_pairs (32 bands × 2
+    rows ⇒ miss ≤ 1e-4 at J≥0.5), so the DuckDB oracle — exact
+    all-pairs Jaccard pairs + recursive-CTE transitive closure —
+    recomputes the identical clustering."""
     from sqlfeatureextraction_spark.operators.dedup import dedup_clusters
     from sqlfeatureextraction_spark.scanspread import spread_small_scan
 

@@ -31,6 +31,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from sqlfeatureextraction_spark.functions.text import tokenize_col
+from sqlfeatureextraction_spark.operators.iterate import fixed_point
 
 # ------------------------------------------------------------- shingling
 
@@ -716,18 +717,21 @@ def connected_components(
     because equality is transitive; similarity is not, so the corpus
     path needs components.
 
-    Algorithm: iterative min-label propagation.  Each round every
-    vertex takes the min of its own label and its neighbors' labels —
-    two narrow shuffles per round (labels are two longs; the symmetric
-    edge list is re-used unchanged).  Rounds needed = component
-    diameter, and LSH-derived near-dup components are band-bucket
-    near-cliques (diameter ≲ 3-4), so few rounds suffice.  Convergence
-    is checked each round with a count on the CHANGED rows only; a
-    component whose diameter needs more than ``max_iter`` rounds
-    raises ``ValueError`` rather than returning unconverged labels.
-    Each round's label frame is lazily localCheckpoint-ed to truncate
-    the logical plan (same exponential-explain lesson as
-    reorganize.py's hop-map path).
+    Algorithm: min-label propagation plus hooking and pointer jumping
+    (Rastogi et al., ICDE'13), so rounds grow with log(diameter), not
+    with the diameter (a 1000-node path takes 9-10).  Each round, over
+    the (id, lbl) frame and the symmetric edge list:
+
+      1. m[v] = min(lbl[v], lbl of v's neighbours);
+      2. hook: h[p] = min(m[p], min m[v] over v with lbl[v] = p);
+      3. jump: lbl[v] <- min(h[v], h[h[v]]).
+
+    Labels only fall and always name a vertex of the same component,
+    so once a round changes no label every edge lies inside one label:
+    each component carries its min id.  A round is one
+    ``iterate.fixed_point`` action that also counts the changed labels;
+    if labels still change after ``max_iter`` rounds it raises
+    ``ValueError`` rather than return unconverged labels.
 
     vertices: optional frame holding ``id_col`` for the full corpus so
     singletons (no near-dup pair at all) appear with cluster_id =
@@ -741,47 +745,35 @@ def connected_components(
     edges = (
         edges.union(edges.select(F.col("v").alias("u"), F.col("u").alias("v")))
         .distinct()
-        .localCheckpoint(eager=False)
+        .localCheckpoint(eager=True)
     )
-    labels = (
-        edges.select(F.col("u").alias("id"))
-        .distinct()
-        .withColumn("lbl", F.col("id"))
-        .localCheckpoint(eager=False)
+    start = edges.select(F.col("u").alias("id")).distinct().select(
+        "id", F.col("id").alias("lbl")
     )
-    for _ in range(max_iter):
-        nb_min = (
-            edges.join(
-                labels.select(
-                    F.col("id").alias("v"), F.col("lbl").alias("nlbl")
-                ),
-                "v",
-            )
-            .groupBy("u")
-            .agg(F.min("nlbl").alias("min_nb"))
+
+    def hook_and_jump(labels: DataFrame) -> DataFrame:
+        nl = labels.select(F.col("id").alias("v"), F.col("lbl").alias("nl"))
+        nb = edges.join(nl, "v").groupBy("u").agg(F.min("nl").alias("nb"))
+        m = labels.join(nb, F.col("id") == F.col("u"), "left").select(
+            "id", "lbl", F.least("lbl", "nb").alias("m")
         )
-        stepped = labels.join(
-            nb_min, labels["id"] == nb_min["u"], "left"
-        ).select(
-            "id",
-            "lbl",
-            F.least(
-                F.col("lbl"), F.coalesce(F.col("min_nb"), F.col("lbl"))
-            ).alias("new_lbl"),
+        hooks = m.groupBy(F.col("lbl").alias("p")).agg(F.min("m").alias("pm"))
+        h = m.join(hooks, F.col("id") == F.col("p"), "left").select(
+            "id", "lbl", F.least("m", "pm").alias("h")
         )
-        stepped = stepped.localCheckpoint(eager=False)
-        n_changed = stepped.where(F.col("new_lbl") < F.col("lbl")).count()
-        if n_changed == 0:
-            labels = stepped.select("id", "lbl")
-            break
-        labels = stepped.select(
-            "id", F.col("new_lbl").alias("lbl")
-        ).localCheckpoint(eager=False)
-    else:
+        hh = h.select(F.col("id").alias("hid"), F.col("h").alias("hh"))
+        return h.join(hh, F.col("h") == F.col("hid"), "left").select(
+            "id", F.least("h", "hh").alias("lbl"), F.col("lbl").alias("_old")
+        )
+
+    labels, _, n_changed = fixed_point(
+        start, hook_and_jump, F.col("lbl") != F.col("_old"), max_iter
+    )
+    if n_changed:
         raise ValueError(
             f"connected_components did not converge within max_iter="
             f"{max_iter} rounds: {n_changed} labels still changed in the "
-            "last round (a component's diameter exceeds max_iter)"
+            "last round"
         )
     out = labels.select(
         F.col("id").alias(id_col), F.col("lbl").alias("cluster_id")

@@ -30,6 +30,8 @@ pairing is shared with pit_window; the OR itself is one numpy
 
 from __future__ import annotations
 
+from functools import reduce
+
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, Window
@@ -37,6 +39,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from sqlfeatureextraction_spark.config import FeatureConfig
+from sqlfeatureextraction_spark.operators.iterate import fixed_point
 from sqlfeatureextraction_spark.operators.pit_window import pit_member_pairs
 
 
@@ -129,24 +132,24 @@ def reorganize_sessions_distributed(
 
       nxt = least(local, suffix)  — null ⇒ the chain ends.
 
-    Chains then materialize as ≤ max_hops-1 narrow equi-joins of the
-    shrinking frontier against the lazily-persisted hop map — iterated
-    over the DISTINCT value space (the hop target depends only on v),
-    then expanded to per-anchor rows and joined to the
-    min-full-precision-ts representative of each target second in ONE
-    join each (keys (conv_id, sec); a hot conversation's keys
-    hash-spread over the cluster).  The representative is the same tie
-    row the local path's stable sort picks; output rows/values are
-    identical to reorganize_sessions (equality-pinned in tests).
+    Chains then materialize as one narrow equi-join of the frontier
+    against the persisted hop map per level — iterated over the
+    DISTINCT value space (the hop target depends only on v), one
+    ``iterate.fixed_point`` round per level, stopping at max_hops-1
+    levels or at the first empty frontier — then expanded to
+    per-anchor rows and joined to the min-full-precision-ts
+    representative of each target second in ONE join each (keys
+    (conv_id, sec); a hot conversation's keys hash-spread over the
+    cluster).  The representative is the same tie row the local path's
+    stable sort picks; output rows/values are identical to
+    reorganize_sessions (equality-pinned in tests).
 
     Cache lifecycle: two intermediates (the distinct value space and
-    the hop map) are persisted because the returned LAZY plan reuses
-    them across every chain level — no action runs inside this
-    function, so they cannot be unpersisted here without defeating the
-    reuse.  Pass ``unpersist_with=[]`` to receive them and call
-    ``.unpersist()`` on each after the result has been consumed;
-    without it they stay cached for the session (CacheManager entries
-    are not GC-reclaimed)."""
+    the hop map) are persisted because every level reads the hop map;
+    the returned frame reads neither.  Pass ``unpersist_with=[]`` to
+    receive them and call ``.unpersist()`` on each; without it they
+    stay cached for the session (CacheManager entries are not
+    GC-reclaimed)."""
     ent_ddl = anchors.schema[entity_col].dataType.simpleString()
     sec = F.col(ts_col).cast("timestamp").cast("long")
     base = anchors.select(
@@ -261,19 +264,7 @@ def reorganize_sessions_distributed(
     # Chain materialization over the DISTINCT value space (the hop
     # target depends only on v, so per-anchor duplication multiplies
     # AFTER the iteration, in one join).  The hop map is persisted
-    # (one InMemoryRelation leaf reused by every level) and each
-    # level's frontier is LAZILY localCheckpoint-ed: the checkpoint
-    # truncates the logical plan to an RDD leaf, so level k's plan
-    # does not nest levels 1..k-1.  Without the truncation the nested
-    # self-referencing cached plans make Catalyst plan handling —
-    # notably the formatted-explain walk every execution description
-    # runs (ExplainUtils.generateOperatorIDs recursing into
-    # InMemoryRelation innerChildren, which the union references
-    # twice per level) — EXPONENTIAL in max_hops: measured 30+ min of
-    # driver CPU at 8 levels.  Trade documented: localCheckpoint
-    # blocks are not fault-tolerant on a real cluster (a lost
-    # executor re-fails the job instead of recomputing lineage); the
-    # frames are narrow (3 longs + key) and recompute is one rerun.
+    # (one InMemoryRelation leaf reused by every level).
     hop = hop.persist()
     if unpersist_with is not None:
         unpersist_with.append(hop)
@@ -284,40 +275,41 @@ def reorganize_sessions_distributed(
         entity_col, F.col("_v").alias("_cur"), "_rep_ts"
     )
 
-    frames = []
-    cur = dist.select(
-        entity_col,
-        F.col("_v").alias("chain_start_sec"),
-        F.col("_v").alias("_cur"),
+    levels = []
+
+    def hop_step(cur: DataFrame) -> DataFrame:
+        levels.append(cur)
+        return cur.join(hop, [entity_col, "_cur"]).select(
+            entity_col,
+            "chain_start_sec",
+            F.col("_nxt").alias("_cur"),
+            (F.col("seq") + 1).alias("seq"),
+        )
+
+    last, rounds, _ = fixed_point(
+        dist.select(
+            entity_col,
+            F.col("_v").alias("chain_start_sec"),
+            F.col("_v").alias("_cur"),
+            F.lit(0).alias("seq"),
+        ),
+        hop_step,
+        F.lit(True),
+        max_hops - 1,
     )
-    for seq in range(1, max_hops):
-        cur = (
-            cur.join(hop, [entity_col, "_cur"])
-            .select(
-                entity_col,
-                "chain_start_sec",
-                F.col("_nxt").alias("_cur"),
-            )
-            .localCheckpoint(eager=False)
-        )
-        frames.append(
-            cur.withColumn("seq", F.lit(seq).cast("int"))
-        )
 
     # distinct-space chains → per-anchor rows (duplicate anchors at
     # the same second emit duplicate chains, like the local path);
     # the full-precision representative ts joins ONCE over the union
-    seq0 = base.select(
+    out = base.select(
         entity_col,
         F.col("_v").alias("chain_start_sec"),
         F.lit(0).cast("int").alias("seq"),
         F.col(ts_col),
     )
-    out = seq0
-    if frames:
-        hops = frames[0]
-        for fr in frames[1:]:
-            hops = hops.unionByName(fr)
+    if rounds:
+        # levels[0] is the seq-0 start, which keeps each anchor's own ts
+        hops = reduce(DataFrame.unionByName, levels[1:] + [last])
         hops = hops.join(rep_cur, [entity_col, "_cur"])
         # duplicate-anchor expansion = a plain join against the anchor
         # rows themselves (one row per anchor at that second)
@@ -413,21 +405,16 @@ def linearize_conversation_tree(
     Emits one row per leaf with its full root→leaf path — the step
     that turns a conversation tree into trainable linear transcripts.
 
-    Spark-first iterative ascent (Pregel-lite, no recursion in the
-    engine): the frontier starts at the LEAVES (left-anti join
-    against the parent set) carrying ``path = [node]``; each round
-    joins the frontier's pending parent pointer against the node
-    table and PREPENDS — every round is one equi-join on
-    (conv, node), broadcast-able when the remaining frontier is
-    small, and rounds are bounded by the tree height (≤ max_depth,
-    enforced: leftover pending pointers after max_depth rounds raise
-    rather than silently truncate; a cycle or a dangling parent pointer
-    never resolves, so it trips the same guard, and the error names up
-    to 5 offending leaves with their pending parent ids).  Early exit
-    when a round leaves no pending rows — the driver-side loop does a
-    bounded count per round, the engine's accepted pattern for
-    iterative closure (reorganize_sessions' hop map, semdedup's Lloyd
-    rounds).
+    Spark-first ascent, no recursion in the engine: the frontier starts
+    at the LEAVES (left-anti join against the parent set) carrying
+    ``path = [node]`` and its pending parent pointer, and climbs by
+    binary lifting (comment below) — one equi-join on (conv, node) per
+    level, each level one ``iterate.fixed_point`` action that also
+    counts the rows still pending, early exit when none are.  A leaf
+    needing more than max_depth steps raises rather than silently
+    truncates; a cycle or a dangling parent pointer never resolves, so
+    it trips the same guard, and the error names up to 5 offending
+    leaves with their pending parent ids.
 
     Output: (conv_col, leaf_id, depth = path length, path
     array<node> root-first).
@@ -449,8 +436,6 @@ def linearize_conversation_tree(
             F.col("_p").alias("pending"),
         )
     )
-    done = frontier.where(F.col("pending").isNull())
-    todo = frontier.where(F.col("pending").isNotNull())
     # Binary lifting (pointer doubling), r6: O(log max_depth) join
     # rounds instead of O(height).  J_k maps a pending node y to the
     # root-first segment of its next up-to-2^k ancestors-chain
@@ -474,68 +459,73 @@ def linearize_conversation_tree(
         F.array(F.col("_n")).alias("_jseg"),
         F.col("_p").alias("_jnext"),
     ).localCheckpoint(eager=True)
-    jumps = [jump]
-    for _ in range(levels - 1):
-        if not jump.where(F.col("_jnext").isNotNull()).take(1):
-            break  # every chain already terminates within this level
-        nxt = jump.select(
+    jumps = []
+
+    def compose(table: DataFrame) -> DataFrame:
+        jumps.append(table)
+        nxt = table.select(
             F.col("_jc").alias("_kc"),
             F.col("_jy").alias("_ky"),
             F.col("_jseg").alias("_kseg"),
             F.col("_jnext").alias("_knext"),
         )
-        jump = (
-            jump.join(
-                nxt,
-                (F.col("_jc") == F.col("_kc"))
-                & (F.col("_jnext") == F.col("_ky")),
-                "left",
-            )
-            .select(
-                "_jc",
-                "_jy",
-                F.when(F.col("_ky").isNull(), F.col("_jseg"))
-                .otherwise(F.concat(F.col("_kseg"), F.col("_jseg")))
-                .alias("_jseg"),
-                # no match: terminal (_jnext already null) passes
-                # through; a DANGLING pointer keeps its id so the
-                # ascent leaves it pending and the guard raises
-                # (the old one-step loop silently dropped such rows)
-                F.when(F.col("_ky").isNull(), F.col("_jnext"))
-                .otherwise(F.col("_knext"))
-                .alias("_jnext"),
-            )
-            .localCheckpoint(eager=True)
+        return table.join(
+            nxt,
+            (F.col("_jc") == F.col("_kc"))
+            & (F.col("_jnext") == F.col("_ky")),
+            "left",
+        ).select(
+            "_jc",
+            "_jy",
+            F.when(F.col("_ky").isNull(), F.col("_jseg"))
+            .otherwise(F.concat(F.col("_kseg"), F.col("_jseg")))
+            .alias("_jseg"),
+            # no match: terminal (_jnext already null) passes through;
+            # a DANGLING pointer keeps its id so the ascent leaves it
+            # pending and the guard raises (the old one-step loop
+            # silently dropped such rows)
+            F.when(F.col("_ky").isNull(), F.col("_jnext"))
+            .otherwise(F.col("_knext"))
+            .alias("_jnext"),
         )
-        jumps.append(jump)
-    work = todo.withColumn("_nsteps", F.lit(0))
-    for jk in reversed(jumps):
-        if not work.where(F.col("pending").isNotNull()).take(1):
-            break
+
+    # build stops early once every chain terminates within a level
+    last, _, _ = fixed_point(
+        jump, compose, F.col("_jnext").isNotNull(), levels - 1
+    )
+    jumps.append(last)
+    tables = iter(reversed(jumps))
+
+    def ascend(work: DataFrame) -> DataFrame:
+        jk = next(tables)
         hit = F.col("_jy").isNotNull()
-        work = (
-            work.join(
-                jk,
-                (F.col("_c") == F.col("_jc"))
-                & (F.col("pending") == F.col("_jy")),
-                "left",
-            )
-            .select(
-                "_c",
-                "leaf_id",
-                F.when(hit, F.concat(F.col("_jseg"), F.col("path")))
-                .otherwise(F.col("path"))
-                .alias("path"),
-                F.when(hit, F.col("_jnext"))
-                .otherwise(F.col("pending"))
-                .alias("pending"),
-                (
-                    F.col("_nsteps")
-                    + F.when(hit, F.size("_jseg")).otherwise(F.lit(0))
-                ).alias("_nsteps"),
-            )
-            .localCheckpoint(eager=True)
+        return work.join(
+            jk,
+            (F.col("_c") == F.col("_jc"))
+            & (F.col("pending") == F.col("_jy")),
+            "left",
+        ).select(
+            "_c",
+            "leaf_id",
+            F.when(hit, F.concat(F.col("_jseg"), F.col("path")))
+            .otherwise(F.col("path"))
+            .alias("path"),
+            F.when(hit, F.col("_jnext"))
+            .otherwise(F.col("pending"))
+            .alias("pending"),
+            (
+                F.col("_nsteps")
+                + F.when(hit, F.size("_jseg")).otherwise(F.lit(0))
+            ).alias("_nsteps"),
         )
+
+    # leaves that are roots (pending null) match no jump and pass through
+    work, _, _ = fixed_point(
+        frontier.withColumn("_nsteps", F.lit(0)),
+        ascend,
+        F.col("pending").isNotNull(),
+        len(jumps),
+    )
     bad = work.where(
         F.col("pending").isNotNull() | (F.col("_nsteps") > int(max_depth))
     )
@@ -552,8 +542,7 @@ def linearize_conversation_tree(
             "pointer cycle, or a dangling parent pointer (a parent id with "
             f"no node row); offending leaves (up to 5): {named}"
         )
-    done = done.unionByName(work.select("_c", "leaf_id", "path", "pending"))
-    return done.select(
+    return work.select(
         F.col("_c").alias(conv_col),
         "leaf_id",
         F.size("path").alias("depth"),

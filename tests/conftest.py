@@ -1,5 +1,6 @@
 import os
 import sys
+import uuid
 
 import pytest
 
@@ -12,6 +13,30 @@ from sqlfeatureextraction_spark.session import get_spark  # noqa: E402
 def spark():
     s = get_spark("tests", parallelism=8, shuffle_partitions=8)
     yield s
+
+
+def count_actions(spark, fn):
+    """Run ``fn()`` under a fresh job group; return (result, jobs of the
+    group, SQL executions started).  Counted by execution id, not by an
+    ``executionsCount()`` delta, which the store's eviction breaks."""
+    sc = spark.sparkContext
+    bus = sc._jsc.sc().listenerBus()
+    store = spark._jsparkSession.sharedState().statusStore()
+
+    def execution_ids():
+        bus.waitUntilEmpty()
+        execs = store.executionsList()
+        return [execs.apply(i).executionId() for i in range(execs.size())]
+
+    before = max(execution_ids(), default=-1)
+    group = f"count_actions_{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        result = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    n_exec = sum(i > before for i in execution_ids())
+    return result, len(sc.statusTracker().getJobIdsForGroup(group)), n_exec
 
 
 def stage_slice_file(spark, tmp_path, pdf, name, mtime):

@@ -112,3 +112,24 @@ def test_linearize_random_forest(spark):
             p = None if i == 0 else int(rng.integers(0, i))
             rows.append((f"c{c}", i, p))
     _run(spark, rows)
+
+
+@pytest.mark.parametrize(
+    "rows, levels",
+    [
+        # nothing pending: one build level and one ascent level find it
+        ([], 1 + 1),
+        ([("a", 0, None), ("b", 3, None), ("b", 4, None)], 1 + 1),
+        # J_1..J_3 are built (J_3 resolves every chain at max_depth=8),
+        # then one J_3 jump lifts the leaf
+        ([("a", 0, None)] + [("a", i, i - 1) for i in range(1, 5)], 3 + 1),
+    ],
+    ids=["empty", "root_only", "chain5"],
+)
+def test_linearize_one_execution_per_level(spark, rows, levels):
+    """One SQL execution per jump-table level and per ascent level,
+    plus the J_0 checkpoint, the guard's probe and the collect."""
+    from conftest import count_actions
+
+    n_exec = count_actions(spark, lambda: _run(spark, rows, max_depth=8))[2]
+    assert n_exec == levels + 3

@@ -204,7 +204,12 @@ def test_reorganize_distributed_equals_local(transcripts_df):
 
 
 def test_reorganize_distributed_hand_case(spark):
+    """Every chain ends before max_hops=32, so the walk stops at the
+    first empty frontier: levels 1, 2 and the empty level 3 are 3 SQL
+    executions, not max_hops - 1 = 31."""
     import datetime as dt
+
+    from conftest import count_actions
 
     from sqlfeatureextraction_spark.operators.reorganize import (
         reorganize_sessions_distributed,
@@ -213,18 +218,26 @@ def test_reorganize_distributed_hand_case(spark):
     base = dt.datetime(2024, 1, 1)
     rows = [("c", base + dt.timedelta(seconds=s)) for s in (0, 100, 400, 900)]
     df = spark.createDataFrame(rows, "conv_id string, ts timestamp")
-    got = reorganize_sessions_distributed(
-        df, window_s=300, rows_per_bucket=2
-    ).toPandas()
-    base_sec = int(base.replace(tzinfo=dt.timezone.utc).timestamp())
-    got["ts_s"] = (
-        got["ts"].astype("datetime64[s]").astype("int64") - base_sec
+    dist, _, n_exec = count_actions(
+        spark,
+        lambda: reorganize_sessions_distributed(
+            df, window_s=300, rows_per_bucket=2
+        ),
     )
-    chains = {
-        int(s - base_sec): sorted(g.sort_values("seq")["ts_s"])
-        for s, g in got.groupby("chain_start_sec")
-    }
-    assert chains == {
+    assert n_exec == 3
+    base_sec = int(base.replace(tzinfo=dt.timezone.utc).timestamp())
+
+    def chains(out):
+        got = out.toPandas()
+        got["ts_s"] = (
+            got["ts"].astype("datetime64[s]").astype("int64") - base_sec
+        )
+        return {
+            int(s - base_sec): sorted(g.sort_values("seq")["ts_s"])
+            for s, g in got.groupby("chain_start_sec")
+        }
+
+    assert chains(dist) == chains(reorganize_sessions(df, window_s=300)) == {
         0: [0, 400, 900],
         100: [100, 900],
         400: [400, 900],

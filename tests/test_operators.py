@@ -337,82 +337,114 @@ def test_simhash_neardup_pairs_vs_bruteforce(spark, k):
     assert len(exp) > 0  # the planted near-dups make this non-vacuous
 
 
+def _union_find(pairs, vertices=()):
+    """{vertex: min id of its component} by pure-Python union-find."""
+    parent = {v: v for v in vertices}
+
+    def find(x):
+        while parent.setdefault(x, x) != x:
+            x = parent[x]
+        return x
+
+    for a, b in pairs:
+        ra, rb = find(a), find(b)
+        parent[max(ra, rb)] = min(ra, rb)
+    return {v: find(v) for v in parent}
+
+
+def _cc(spark, pairs, vertices=None, **kw):
+    to_df = spark.createDataFrame
+    out = D.connected_components(
+        to_df([tuple(map(int, p)) for p in pairs], "id_a long, id_b long"),
+        vertices and to_df([(v,) for v in vertices], "doc_id long"),
+        **kw,
+    )
+    return out.toPandas().set_index("doc_id")["cluster_id"].to_dict()
+
+
+def _path(ids):
+    return list(zip(ids, ids[1:]))
+
+
 def test_connected_components_chain(spark):
     # chain 1-2, 2-3, 3-4 plus isolated pair 10-11: the closure must
     # collapse the whole chain to min id 1 even though (1,4) is not a
     # pair (similarity is not transitive; the closure is the point)
-    pairs = spark.createDataFrame(
-        [(1, 2), (2, 3), (3, 4), (10, 11)], "id_a long, id_b long"
-    )
-    got = (
-        D.connected_components(pairs)
-        .toPandas()
-        .set_index("doc_id")["cluster_id"]
-    )
-    assert {got[i] for i in (1, 2, 3, 4)} == {1}
-    assert got[10] == got[11] == 10
+    got = _cc(spark, [(1, 2), (2, 3), (3, 4), (10, 11)])
+    assert got == {1: 1, 2: 1, 3: 1, 4: 1, 10: 10, 11: 10}
 
 
 def test_connected_components_max_iter_raises(spark):
-    # a 6-node path has diameter 5: min-label propagation needs 5
-    # changing rounds plus one unchanged round to confirm convergence
-    pairs = spark.createDataFrame(
-        [(i, i + 1) for i in range(5)], "id_a long, id_b long"
+    # hook+jump needs 7 rounds on a 64-node path (6 that change labels
+    # plus one that confirms); after round 2, 61 labels still change.
+    # The builder runs one SQL execution per round plus ONE for the
+    # edge-list checkpoint, whether it converges or raises.
+    from conftest import count_actions
+
+    pairs = spark.createDataFrame(_path(range(64)), "id_a long, id_b long")
+
+    def cut_short():
+        with pytest.raises(
+            ValueError, match=r"max_iter=2 rounds: 61 labels still changed"
+        ):
+            D.connected_components(pairs, max_iter=2)
+
+    assert count_actions(spark, cut_short)[2] == 2 + 1
+    out, n_jobs, n_exec = count_actions(
+        spark, lambda: D.connected_components(pairs)
     )
-    # round r changes the labels of vertices r..5
-    with pytest.raises(ValueError, match=r"max_iter=3 rounds: 3 labels"):
-        D.connected_components(pairs, max_iter=3)
-    got = (
-        D.connected_components(pairs, max_iter=6)
-        .toPandas()
-        .set_index("doc_id")["cluster_id"]
-    )
-    assert len(got) == 6 and set(got) == {0}
+    assert n_exec == 7 + 1 and n_jobs > n_exec
+    assert set(out.toPandas()["cluster_id"]) == {0} and out.count() == 64
+
+
+@pytest.mark.parametrize(
+    "ids, max_iter",
+    [
+        # min-label propagation alone needed diameter + 1 = 26 rounds
+        (np.arange(26), 25),
+        # logarithmic rounds: 2 * ceil(log2 1000) + 2 = 22
+        (np.random.RandomState(3).permutation(1000), 22),
+    ],
+    ids=["path26", "random_path1000"],
+)
+def test_connected_components_long_paths_converge(spark, ids, max_iter):
+    got = _cc(spark, _path(ids), max_iter=max_iter)
+    assert got == dict.fromkeys(range(len(ids)), 0)
+
+
+@pytest.mark.parametrize(
+    "pairs",
+    [[], [(1, 1), (4, 4)], [(1, 2), (2, 1), (1, 2), (3, 2), (6, 5), (5, 5)]],
+    ids=["empty", "self_loops", "duplicate_reversed"],
+)
+@pytest.mark.parametrize(
+    "vertices", [None, range(8)], ids=["pairs_only", "with_vertices"]
+)
+def test_connected_components_edge_inputs(spark, pairs, vertices):
+    got = _cc(spark, pairs, vertices)
+    assert got == _union_find(pairs, vertices or ())
 
 
 def test_star_vs_label_random_graph(spark):
-    # fixed-seed random graph: label propagation must produce the
-    # clustering of a pure-Python union-find (min id per component)
-    import numpy as np
-
-    rng = np.random.RandomState(7)
-    e = rng.randint(0, 60, size=(80, 2))
-    e = e[e[:, 0] != e[:, 1]]
-    pairs = spark.createDataFrame(
-        [(int(a), int(b)) for a, b in e], "id_a long, id_b long"
-    )
-    verts = spark.createDataFrame([(i,) for i in range(60)], "doc_id long")
-    got = (
-        D.connected_components(pairs, vertices=verts, max_iter=100)
-        .toPandas()
-        .set_index("doc_id")["cluster_id"]
-        .to_dict()
-    )
-    parent = list(range(60))
-
-    def find(x):
-        while parent[x] != x:
-            x = parent[x]
-        return x
-
-    for a, b in e:
-        ra, rb = find(int(a)), find(int(b))
-        parent[max(ra, rb)] = min(ra, rb)
-    assert got == {i: find(i) for i in range(60)}
+    # fixed-seed random graph: the closure must produce the clustering
+    # of a pure-Python union-find (min id per component), at 1 and at
+    # 8 shuffle partitions alike (DETERMINISM.md)
+    e = np.random.RandomState(7).randint(0, 60, size=(80, 2))
+    e = [(int(a), int(b)) for a, b in e if a != b]
+    old = spark.conf.get("spark.sql.shuffle.partitions")
+    try:
+        for n in (1, 8):
+            spark.conf.set("spark.sql.shuffle.partitions", str(n))
+            got = _cc(spark, e, range(60), max_iter=100)
+            assert got == _union_find(e, range(60))
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", old)
     assert len(set(got.values())) < 60  # non-vacuous: some merges
 
 
 def test_connected_components_singletons(spark):
-    pairs = spark.createDataFrame([(2, 5)], "id_a long, id_b long")
-    verts = spark.createDataFrame([(i,) for i in range(7)], "doc_id long")
-    got = (
-        D.connected_components(pairs, vertices=verts)
-        .toPandas()
-        .set_index("doc_id")["cluster_id"]
-    )
-    assert got[2] == got[5] == 2
-    for i in (0, 1, 3, 4, 6):
-        assert got[i] == i
+    got = _cc(spark, [(2, 5)], range(7))
+    assert got == {0: 0, 1: 1, 2: 2, 3: 3, 4: 4, 5: 2, 6: 6}
 
 
 def test_dedup_clusters_end_to_end(docs):
