@@ -1,12 +1,14 @@
 """Hot-key skew benchmark: one conversation holds ALL rows.
 
-Both paths run a member selector and the same dense finisher.  The JVM
-selector (window_features_builtin) partitions the window exec by
-conv_id — a single hot conversation pins one task (exactly like the
-reference's one-thread-per-session split,
-enc/APMFragmentIntent.java:1069-1097).  The salted pandas selector
+Both paths produce dense window vectors.  The JVM selector
+(window_features_builtin, then the dense finisher) partitions the
+window exec by conv_id — a single hot conversation pins one task
+(exactly like the reference's one-thread-per-session split,
+enc/APMFragmentIntent.java:1069-1097).  The salted Arrow pass
 (window_features_merge) splits it into ~n/65k time buckets with overlap
-replication and processes them in parallel.
+replication, processes them in parallel and scatters the window
+vectors in the same pass (the turn vectors, replicated context rows
+included, ride through its one shuffle).
 
 Each path runs in its own subprocess with a wall-clock cap so a
 pathological single task (the point of the demo) can't hang the

@@ -1,14 +1,22 @@
-"""Salted pandas member selector — the hot-key path, and the deployment
+"""Salted Arrow member selection — the hot-key path, and the deployment
 pipeline's window stage.
 
-Emits the same member rows as ``pit_window.select_members`` (the
-member-row contract in the pit_window module docstring) and feeds the
-same finishers; ``window_features_merge`` is its dense composition.
 Semantics are the reference's (enc/APMWindowFragmentIntent.java:
 266-493): trailing right-closed ``(ts−W, ts]`` window per distinct
 (conv_id, ts); dedupe intent-equal members summing cost; top-K
-entities; top-N members.  It runs as ONE narrow shuffle + ONE sorted
-pandas pass:
+entities; top-N members.  Two products share one selection core
+(``_select``: pairs, dedupe, top-K, top-N as numpy index arrays over
+one group's Arrow table):
+
+  * ``select_members_salted`` — member rows, the contract of the
+    pit_window module docstring (``transcript_wf_merge`` finishes them
+    with ``scalar_finish``);
+  * ``window_features_merge`` — finished anchor rows: the window vector
+    is scattered inside the same pass, so the wide turn vectors cross
+    exactly one exchange (the salted shuffle) and no join-back,
+    collect_list or per-anchor aggregate follows.
+
+Each runs as ONE salted shuffle + ONE grouped Arrow pass:
 
   1. adaptive time salting (``_salted``): a per-conversation stats pass
      (count, min/max ts) splits a conversation of n rows into
@@ -19,10 +27,11 @@ pandas pass:
      classic point-in-time-join trick (SURVEY §7.3).  The reference
      pins a hot session to one thread (enc/APMFragmentIntent.java:
      1069-1097 — it cannot split it; we can);
-  2. ``groupBy(_grp, salt).applyInPandas`` over coarse conversation
+  2. ``groupBy(_grp, salt).applyInArrow`` over coarse conversation
      buckets: inside, a two-pointer ``np.searchsorted`` builds
-     (anchor, member) pairs and dedupe / top-K / top-N are pandas
-     groupby + sorts — numpy column ops only, no per-row Python.
+     (anchor, member) pairs, and dedupe / top-K / top-N are
+     ``np.lexsort`` + ``np.add.reduceat`` over runs — numpy column ops
+     only, no per-row Python and no pandas.
 
 Against the JVM selector it wins on hot, dense windows (one
 conversation holding 100k rows, local[4] on 4 cores: 14.8 s vs 70.9 s,
@@ -32,16 +41,20 @@ if not replicated).
 
 from __future__ import annotations
 
+from typing import Iterator, NamedTuple
+
 import numpy as np
-import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from sqlfeatureextraction_spark.config import FeatureConfig
-from sqlfeatureextraction_spark.layout import VectorLayout
+from sqlfeatureextraction_spark.layout import VectorLayout, window_vector_width
 from sqlfeatureextraction_spark.operators.pit_window import (
     TURN_SUMS,
-    dense_finish,
+    window_scatter,
 )
 from sqlfeatureextraction_spark.vocab import Vocabulary
 
@@ -49,6 +62,13 @@ from sqlfeatureextraction_spark.vocab import Vocabulary
 # into ceil(n / ROWS_PER_BUCKET) buckets (one bucket and no replicated
 # rows when n fits).
 ROWS_PER_BUCKET = 65536
+
+# turn-table columns the selection core reads
+_SELECT_COLS = ("conv_id", "ts", "ts_sec", "turn_idx", "tool", "cost", "vec_hash")
+
+# Window-vector floats per output batch of window_features_merge
+# (64 MiB of float32): bounds the dense matrix a worker builds at once
+_BATCH_FLOATS = 1 << 24
 
 
 def _salted(vec: DataFrame, cfg: FeatureConfig) -> DataFrame:
@@ -68,11 +88,13 @@ def _salted(vec: DataFrame, cfg: FeatureConfig) -> DataFrame:
 
     so a normal conversation is exactly ONE group with ZERO replication
     and a hot conversation splits into ~n/64k tasks with ≤ (W−1)/8W ≈
-    12% replicated context rows.  The stats join and the groupBy that
-    follows share the conv_id partitioning.  Replicated rows carry
-    is_anchor=false and emit nothing themselves (the reference's
-    single-thread-per-session split, enc/APMFragmentIntent.java:
-    1069-1097, can never split a hot session; this can).
+    12% replicated context rows.  Replicated rows carry is_anchor=false
+    and emit nothing themselves (the reference's single-thread-per-
+    session split, enc/APMFragmentIntent.java:1069-1097, can never split
+    a hot session; this can).  The stats (one narrow row per
+    conversation) are broadcast explicitly: left to its size estimate
+    the planner may pick the turn table as the build side, and with
+    ``features`` carried that is a broadcast of every wide vector.
     """
     w = cfg.window_size_s
     stats = vec.groupBy("conv_id").agg(
@@ -89,159 +111,198 @@ def _salted(vec: DataFrame, cfg: FeatureConfig) -> DataFrame:
         "conv_id", F.col("_t0"), span.cast("long").alias("_span")
     )
 
-    vec = vec.join(stats, "conv_id")
     rel = F.col("ts_sec") - F.col("_t0")
-    bucket = F.floor(rel / F.col("_span")).cast("long")
-    base = vec.withColumn("salt", bucket).withColumn("is_anchor", F.lit(True))
-    repl = (
-        vec.where(rel % F.col("_span") >= F.col("_span") - (w - 1))
-        .withColumn("salt", (bucket + 1).cast("long"))
-        .withColumn("is_anchor", F.lit(False))
+    copies = F.when(
+        rel % F.col("_span") >= F.col("_span") - (w - 1),
+        F.array(F.lit(True), F.lit(False)),
+    ).otherwise(F.array(F.lit(True)))
+    # one join feeding one Generate: a union of a base and a replica
+    # branch would plan the stats aggregate and its broadcast twice.
+    # explode_outer (never empty here): a plain explode of a computed
+    # array lets Catalyst push a size() filter that re-evaluates it
+    return (
+        vec.join(F.broadcast(stats), "conv_id")
+        .withColumn("is_anchor", F.explode_outer(copies))
+        .withColumn(
+            "salt",
+            F.floor(rel / F.col("_span")).cast("long")
+            + F.when(F.col("is_anchor"), 0).otherwise(1),
+        )
+        .drop("_t0", "_span")
     )
-    return base.unionByName(repl).drop("_t0", "_span")
 
 
-def _window_merge_fn(cfg: FeatureConfig, sums: list[str]):
-    """Member-selection core of the merge path.
+class Selection(NamedTuple):
+    """One group's selection, as row indices into its Arrow table.
 
-    Returns member rows — (anchor conv_id, ts_sec, ts, slot_idx,
-    member_idx, tool, rep_turn_idx, *sums) — NOT assembled vectors:
-    shipping the wide feature arrays through the pandas stage (input
-    AND output) measured 30× slower than the narrow formulation at
-    local[2] (object-dtype vstack of millions of tiny ndarrays + Arrow
-    list-array materialization).  The finishers take it from there,
-    identically to the JVM selector, so no wide array enters this
-    stage.  ``sums`` (a subset of TURN_SUMS) pass through
-    the dedupe as the representative's segment sums."""
-    k, n = cfg.top_k_entities, cfg.top_n_members
-    win = cfg.window_size_s
+    Per anchor (distinct (conv_id, ts_sec) holding an is_anchor row):
+    ``first``/``last`` are its min- and max-turn_idx rows at ts_sec.
+    Per selected member, in (anchor, slot, member) order: ``anchor``
+    (ordinal into first/last), ``slot`` (slot_idx), ``member``
+    (member_idx) and ``rep`` (the representative turn's row)."""
 
-    def fn(pdf: pd.DataFrame) -> pd.DataFrame:
-        # A group is a HASH BUCKET of conversations (× time salt), not a
-        # single conversation: per-call pandas overhead (~5-10 ms) made
-        # one-conv-per-group 10× slower than the builtin path on many
-        # small conversations.  All conversations in the bucket are
-        # processed in ONE vectorized pass over a composite timeline:
-        # ts′ = ts + conv_ordinal · OFFSET with OFFSET > span + 2W, so a
-        # single searchsorted serves every conversation and windows can
-        # never cross conversation boundaries.
-        pdf = pdf.sort_values(
-            ["conv_id", "ts_sec", "turn_idx"], kind="mergesort"
-        ).reset_index(drop=True)
-        ts = pdf["ts_sec"].to_numpy(np.int64)
-        anchor_mask = pdf["is_anchor"].to_numpy(bool)
-        empty = {
-            "conv_id": pd.Series(dtype=object),
-            "ts_sec": pd.Series(dtype=np.int64),
-            "ts": pd.Series(dtype="datetime64[us]"),
-            "slot_idx": pd.Series(dtype=np.int32),
-            "member_idx": pd.Series(dtype=np.int32),
-            "tool": pd.Series(dtype=object),
-            "rep_turn_idx": pd.Series(dtype=np.int64),
-            **{s: pd.Series(dtype=np.int32) for s in sums},
-        }
-        if len(ts) == 0 or not anchor_mask.any():
-            return pd.DataFrame(empty)
-        conv_arr = pdf["conv_id"].to_numpy()
-        # ordinal per conversation (input is conv-sorted)
-        new_conv = np.empty(len(ts), dtype=bool)
-        new_conv[0] = True
-        new_conv[1:] = conv_arr[1:] != conv_arr[:-1]
-        ordinal = np.cumsum(new_conv) - 1
-        off = np.int64(int(ts.max()) - int(ts.min()) + 2 * win + 10)
-        tsx = ts + ordinal * off
-        anchor_tsx = np.unique(tsx[anchor_mask])
-        lo = np.searchsorted(tsx, anchor_tsx - win, side="right")
-        hi = np.searchsorted(tsx, anchor_tsx, side="right")
-        counts = hi - lo
-        total = int(counts.sum())
-        # vectorized ragged ranges: member row index per (anchor, member)
-        ridx = np.repeat(np.arange(len(anchor_tsx)), counts)
-        offs = np.arange(total) - np.repeat(np.cumsum(counts) - counts, counts)
-        midx = np.repeat(lo, counts) + offs
+    first: np.ndarray
+    last: np.ndarray
+    anchor: np.ndarray
+    slot: np.ndarray
+    member: np.ndarray
+    rep: np.ndarray
 
-        pairs = pd.DataFrame(
-            {
-                "a": ridx,
-                "tool": pdf["tool"].fillna("").to_numpy()[midx],
-                "h": pdf["vec_hash"].to_numpy(np.int64)[midx],
-                "cost": pdf["cost"].to_numpy(np.int64)[midx],
-                "mts": ts[midx],
-                "mturn": pdf["turn_idx"].to_numpy(np.int64)[midx],
-                **{s: pdf[s].to_numpy()[midx] for s in sums},
-            }
-        )
-        # A2 dedupe: first (ts, turn) representative + summed cost per
-        # (anchor, tool, vec_hash) — input is ts/turn-sorted already;
-        # the sums depend on vec_hash alone, so "first" is exact
-        grp = pairs.groupby(["a", "tool", "h"], sort=False)
-        dd = grp.agg(
-            cost=("cost", "sum"),
-            mts=("mts", "first"),
-            mturn=("mturn", "first"),
-            **{s: (s, "first") for s in sums},
-        ).reset_index()
 
-        # W6 top-K tools by summed cost (cost desc, tool asc)
-        tc = dd.groupby(["a", "tool"], sort=False)["cost"].sum().reset_index()
-        tc = tc.sort_values(["a", "cost", "tool"], ascending=[True, False, True], kind="mergesort")
-        tc["slot"] = tc.groupby("a", sort=False).cumcount()
-        tc = tc[tc["slot"] < k]
+def _runs(*keys: np.ndarray) -> np.ndarray:
+    """Start positions of the runs of equal key tuples in sorted arrays."""
+    brk = np.zeros(len(keys[0]), dtype=bool)
+    brk[:1] = True
+    for key in keys:
+        brk[1:] |= key[1:] != key[:-1]
+    return np.flatnonzero(brk)
 
-        # W7 top-N members per selected tool (cost desc, ts, turn asc)
-        mm = dd.merge(tc[["a", "tool", "slot"]], on=["a", "tool"])
-        mm = mm.sort_values(
-            ["a", "slot", "cost", "mts", "mturn"],
-            ascending=[True, True, False, True, True],
-            kind="mergesort",
-        )
-        mm["mi"] = mm.groupby(["a", "slot"], sort=False).cumcount()
-        mm = mm[mm["mi"] < n]
 
-        # anchor representative = first (min turn_idx) row at each
-        # anchor epoch — same convention as the builtin path/oracle
-        first_at = np.searchsorted(tsx, anchor_tsx, side="left")
-        a = mm["a"].to_numpy()
-        res = {
-            "conv_id": conv_arr[first_at[a]],
-            "ts_sec": ts[first_at[a]],
-            "ts": pdf["ts"].to_numpy()[first_at[a]],
-            "slot_idx": mm["slot"].to_numpy().astype(np.int32),
-            "member_idx": mm["mi"].to_numpy().astype(np.int32),
-            "tool": mm["tool"].to_numpy(),
-            "rep_turn_idx": mm["mturn"].to_numpy(np.int64),
-            **{s: mm[s].to_numpy(np.int32) for s in sums},
-        }
-        return pd.DataFrame(res)
+def _rank(starts: np.ndarray, n: int) -> np.ndarray:
+    """Position of each of n elements within its run."""
+    return np.arange(n) - np.repeat(starts, np.diff(np.append(starts, n)))
 
-    return fn
+
+def _string_rank(col: pa.ChunkedArray) -> np.ndarray:
+    """Per row, the rank of its value (NULL as "") among the column's
+    distinct values in byte order — Spark's string order."""
+    enc = pc.dictionary_encode(pc.fill_null(col.combine_chunks(), ""))
+    rank = np.empty(len(enc.dictionary), dtype=np.int64)
+    rank[pc.array_sort_indices(enc.dictionary).to_numpy()] = np.arange(
+        len(enc.dictionary)
+    )
+    return rank[enc.indices.to_numpy()]
+
+
+def _select(table: pa.Table, cfg: FeatureConfig) -> Selection:
+    """The member-selection core of both salted passes.
+
+    A group is a HASH BUCKET of conversations (× time salt), not a
+    single conversation: per-call overhead made one-conv-per-group 10×
+    slower than the builtin path on many small conversations.  All
+    conversations in the bucket are processed in ONE vectorized pass
+    over a composite timeline: ts′ = ts + conv_code · OFFSET with
+    OFFSET > span + 2W, so a single searchsorted serves every
+    conversation and windows can never cross conversation boundaries.
+
+    Tie-breaking is the JVM selector's: dedupe representative =
+    earliest (ts, turn_idx) member; tools by (summed cost desc, tool
+    asc); members by (cost desc, ts asc, turn_idx asc)."""
+    k, n, win = cfg.top_k_entities, cfg.top_n_members, cfg.window_size_s
+    empty = np.zeros(0, dtype=np.int64)
+    is_anchor = table["is_anchor"].to_numpy()
+    if not is_anchor.any():
+        return Selection(empty, empty, empty, empty, empty, empty)
+    conv = pc.dictionary_encode(
+        table["conv_id"].combine_chunks()
+    ).indices.to_numpy()
+    ts = table["ts_sec"].to_numpy()
+    # sorted row space: (conv, ts_sec, turn_idx); `order` maps back
+    order = np.lexsort((table["turn_idx"].to_numpy(), ts, conv))
+    ts = ts[order]
+    tsx = ts + conv[order].astype(np.int64) * np.int64(
+        int(ts.max()) - int(ts.min()) + 2 * win + 10
+    )
+    anchor_tsx = np.unique(tsx[is_anchor[order]])
+    first = np.searchsorted(tsx, anchor_tsx, side="left")
+    lo = np.searchsorted(tsx, anchor_tsx - win, side="right")
+    hi = np.searchsorted(tsx, anchor_tsx, side="right")
+
+    # (anchor, member) pairs: vectorized ragged ranges lo..hi-1
+    counts = hi - lo
+    a = np.repeat(np.arange(len(anchor_tsx)), counts)
+    m = np.repeat(lo - np.cumsum(counts) + counts, counts) + np.arange(
+        counts.sum()
+    )
+    src = order[m]
+    tool = _string_rank(table["tool"])[src]
+    vh = table["vec_hash"].to_numpy()[src]
+    cost = table["cost"].to_numpy()[src]
+
+    # A2 dedupe per (anchor, tool, vec_hash): stable sort keeps each
+    # run in member (ts, turn) order, so its first row is the
+    # representative; cost sums over the run
+    o = np.lexsort((vh, tool, a))
+    a, tool, m = a[o], tool[o], m[o]
+    g = _runs(a, tool, vh[o])
+    g_a, g_tool, g_rep = a[g], tool[g], m[g]
+    g_cost = np.add.reduceat(cost[o], g)
+
+    # W6 top-K tools by summed cost (cost desc, tool asc); a tool's
+    # dedupe groups are one run of the (anchor, tool, vec_hash) order
+    t = _runs(g_a, g_tool)
+    t_a = g_a[t]
+    o = np.lexsort((g_tool[t], -np.add.reduceat(g_cost, t), t_a))
+    t_slot = np.empty(len(t), dtype=np.int64)
+    t_slot[o] = _rank(_runs(t_a[o]), len(t))
+    g_slot = np.repeat(t_slot, np.diff(np.append(t, len(g))))
+
+    # W7 top-N members per selected tool (cost desc, ts, turn asc —
+    # the sorted row order)
+    keep = g_slot < k
+    g_a, g_slot, g_cost, g_rep = (
+        g_a[keep], g_slot[keep], g_cost[keep], g_rep[keep]
+    )
+    o = np.lexsort((g_rep, -g_cost, g_slot, g_a))
+    g_a, g_slot, g_rep = g_a[o], g_slot[o], g_rep[o]
+    g_member = _rank(_runs(g_a, g_slot), len(o))
+    sel = g_member < n
+    return Selection(
+        order[first],
+        order[hi - 1],
+        g_a[sel],
+        g_slot[sel],
+        g_member[sel],
+        order[g_rep[sel]],
+    )
+
+
+def _grouped(vec: DataFrame, cfg: FeatureConfig):
+    """``_salted`` rows grouped by (coarse conversation bucket, salt):
+    many conversations per Arrow call (per-call overhead amortized
+    ~300×), vectorized inside over the composite timeline; the time
+    salt still splits hot conversations."""
+    n_grp = max(vec.sparkSession.sparkContext.defaultParallelism * 4, 8)
+    return (
+        _salted(vec, cfg)
+        .withColumn("_grp", F.pmod(F.xxhash64("conv_id"), F.lit(n_grp)))
+        .groupBy("_grp", "salt")
+    )
 
 
 def select_members_salted(vec: DataFrame, cfg: FeatureConfig) -> DataFrame:
-    """Salted pandas member selector: turn table → member rows.
-
-    Stage plan (all NARROW — feature arrays are never selected in):
-      1. per-conv stats + adaptive time salting (`_salted`);
-      2. ONE narrow shuffle into coarse conversation buckets
-         ((hash(conv_id) % 4·cores, salt)) → vectorized pandas member
-         selection (searchsorted over the composite timeline, dedupe,
-         top-K/top-N) emitting ≤ k·n member rows per anchor."""
+    """Salted member selector: turn table → member rows (the pit_window
+    module docstring's contract), narrow — feature arrays are never
+    selected in.  Stage plan: per-conv stats + adaptive time salting
+    (`_salted`), ONE narrow shuffle into coarse conversation buckets,
+    then ``_select`` emitting ≤ k·n member rows per anchor."""
     sums = [c for c in TURN_SUMS if c in vec.columns]
-    cols = ["conv_id", "ts", "ts_sec", "turn_idx", "tool", "cost", "vec_hash"]
-    salted = _salted(vec.select(*cols, *sums), cfg)
-    # coarse conversation buckets: many conversations per pandas call
-    # (per-call overhead amortized ~300×), vectorized inside over the
-    # composite timeline; the time salt still splits hot conversations
-    n_grp = max(vec.sparkSession.sparkContext.defaultParallelism * 4, 8)
-    salted = salted.withColumn(
-        "_grp", F.pmod(F.xxhash64("conv_id"), F.lit(n_grp))
-    )
+
+    def members(table: pa.Table) -> pa.Table:
+        sel = _select(table, cfg)
+        at = sel.first[sel.anchor]
+        return pa.table(
+            {
+                "conv_id": table["conv_id"].take(at),
+                "ts_sec": table["ts_sec"].take(at),
+                "ts": table["ts"].take(at),
+                "slot_idx": pa.array(sel.slot, pa.int32()),
+                "member_idx": pa.array(sel.member, pa.int32()),
+                "tool": pc.fill_null(table["tool"].take(sel.rep), ""),
+                "rep_turn_idx": pc.cast(
+                    table["turn_idx"].take(sel.rep), pa.int64()
+                ),
+                **{s: table[s].take(sel.rep) for s in sums},
+            }
+        )
+
+    ts_type = vec.schema["ts"].dataType.simpleString()
     member_schema = (
-        "conv_id string, ts_sec long, ts timestamp, slot_idx int,"
+        f"conv_id string, ts_sec long, ts {ts_type}, slot_idx int,"
         " member_idx int, tool string, rep_turn_idx long"
     ) + "".join(f", {s} int" for s in sums)
-    return salted.groupBy("_grp", "salt").applyInPandas(
-        _window_merge_fn(cfg, sums), member_schema
+    return _grouped(vec.select(*_SELECT_COLS, *sums), cfg).applyInArrow(
+        members, member_schema
     )
 
 
@@ -251,10 +312,60 @@ def window_features_merge(
     cfg: FeatureConfig,
     layout: VectorLayout,
 ) -> DataFrame:
-    """(conv_id, ts) → window_features — the salted selector and the
-    dense finisher (the selected representatives join their feature
-    vectors back by (conv_id, turn_idx); ``dense_finish`` says where
-    the wide array crosses the wire)."""
-    return dense_finish(
-        select_members_salted(vec, cfg), vec, vocab, cfg, layout
+    """Turn table → one finished row per anchor: (conv_id, ts_sec,
+    features, session_id, turn_idx, ts, window_features) — ``session_id``
+    only when the turn table has it.
+
+    One salted pass: the turns' ``features`` (and ``session_id``) ride
+    through the ``(_grp, salt)`` shuffle, replicated context rows
+    included, and each group's Arrow call runs ``_select`` and then
+    ``window_scatter`` on the selected representatives.  ``features``,
+    ``session_id`` and ``turn_idx`` are the anchor's LAST turn at ts_sec
+    (max turn_idx), ``ts`` its first (min turn_idx) — the oracle's and
+    ``dense_finish``'s convention.  That shuffle is the only exchange
+    the wide array crosses: no join-back, no ``collect_list`` exchange,
+    no per-anchor aggregate.  Output batches hold at most
+    ``_BATCH_FLOATS`` window-vector floats, so a hot group's dense
+    matrix is built in slices."""
+    carry = [c for c in ("session_id",) if c in vec.columns]
+    fill = window_scatter(vocab, cfg, layout)
+    per_batch = max(
+        1,
+        _BATCH_FLOATS
+        // window_vector_width(layout, cfg.top_k_entities, cfg.top_n_members),
     )
+    out = ["conv_id", "ts_sec", "features", *carry, "turn_idx", "ts"]
+
+    def finish(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        table = pa.Table.from_batches(list(batches))
+        sel = _select(table, cfg)
+        bounds = np.searchsorted(sel.anchor, np.arange(len(sel.first) + 1))
+        for lo in range(0, len(sel.first), per_batch):
+            hi = min(lo + per_batch, len(sel.first))
+            mem = slice(bounds[lo], bounds[hi])
+            rep = sel.rep[mem]
+            wf = fill(
+                hi - lo,
+                sel.anchor[mem] - lo,
+                sel.slot[mem],
+                sel.member[mem],
+                table["tool"].take(rep).combine_chunks(),
+                table["features"].take(rep).combine_chunks(),
+            )
+            first, last = sel.first[lo:hi], sel.last[lo:hi]
+            yield pa.RecordBatch.from_arrays(
+                [
+                    table[c].take(first if c == "ts" else last).combine_chunks()
+                    for c in out
+                ]
+                + [wf],
+                names=out + ["window_features"],
+            )
+
+    schema = T.StructType(
+        [vec.schema[c] for c in out]
+        + [T.StructField("window_features", T.ArrayType(T.FloatType()))]
+    )
+    return _grouped(
+        vec.select(*_SELECT_COLS, "features", *carry), cfg
+    ).applyInArrow(finish, schema)

@@ -19,18 +19,21 @@ plus the representative's per-segment sums ``s_time … s_lag`` when the
 turn table carries them (``vectorize.with_turn_scalars``).  Producers:
 
   * ``select_members`` (here) — the JVM selector;
-  * ``asof_merge.select_members_salted`` — the salted pandas selector,
+  * ``asof_merge.select_members_salted`` — the salted Arrow selector,
     which wins on hot, dense conversations (scripts/skew_bench.py).
 
 Finishers:
 
   * ``dense_finish`` — the representatives' feature vectors join back
-    and one Arrow pandas UDF assembles the fixed-width window vector;
+    and one Arrow UDF scatters the fixed-width window vector
+    (``window_scatter``);
   * ``scalar_finish`` — ``SCALAR_FIELDS`` by exact integer sums on the
     JVM, no vector and no Python stage.
 
-``window_features_builtin`` (here) and ``asof_merge.
-window_features_merge`` are the two dense compositions.
+``window_features_builtin`` (here) is the JVM selector's dense
+composition.  ``asof_merge.window_features_merge`` does not go through
+the member rows: its salted Arrow pass selects and scatters in one go
+(the same ``window_scatter``) and emits finished anchor rows.
 
 JVM selector formulation:
 
@@ -61,7 +64,8 @@ order, SURVEY §4.4.4): entities by (cost desc, tool asc); members by
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -210,44 +214,87 @@ def select_members(vec: DataFrame, cfg: FeatureConfig) -> DataFrame:
     )
 
 
-def _assemble_udf(vocab: Vocabulary, cfg: FeatureConfig, layout: VectorLayout):
-    """W8 fixed-width assembler: one Arrow pandas UDF over each
-    anchor's collected (slot_idx, member_idx, tool, features) slots."""
-    turn_w = layout.width
+def window_scatter(vocab: Vocabulary, cfg: FeatureConfig, layout: VectorLayout):
+    """W8 fixed-width scatter shared by every dense finisher: returns
+    ``fill(n_anchors, anchor, slot, member, tool, features)``, which
+    writes the selected members (one entry per member in the numpy
+    index arrays ``anchor``/``slot``/``member`` and the aligned Arrow
+    arrays ``tool`` and ``features``) into an (n_anchors, width)
+    float32 matrix and returns it as a ``list<float>`` Arrow array.
+
+    Layout: tool_intent(|T|) ‖ slot-major, member-minor turn vectors,
+    zero-padded (enc/APMWindowFragmentIntent.java:487-490).  Numpy
+    index arithmetic only: the tool bits and the member vectors are
+    each one fancy-indexed assignment, whatever the member count.
+    ``features`` is the dense ``list<float>`` or the sparse
+    ``struct<idx, val>`` transport; the sparse cells are densified
+    here, at the only place the fixed-width form is needed."""
+    k, n = cfg.top_k_entities, cfg.top_n_members
     tool_bits = dict(vocab.tools)
+    turn_w = layout.width
     n_tools = layout.seg("tool").width
-    n = cfg.top_n_members
-    out_w = window_vector_width(layout, cfg.top_k_entities, n)
+    out_w = window_vector_width(layout, k, n)
 
-    def _fill(slots: pd.Series) -> np.ndarray:
-        """tool_intent(|T|) ‖ slot-major, member-minor turn vectors,
-        zero-padded (layout formula enc/APMWindowFragmentIntent.java:487-490).
-        """
-        n_rows = len(slots)
+    def fill(
+        n_anchors: int,
+        anchor: np.ndarray,
+        slot: np.ndarray,
+        member: np.ndarray,
+        tool: pa.Array,
+        features: pa.Array,
+    ) -> pa.Array:
         # float32 like the turn vectors (exact for 0/1 bits + small counts)
-        mat = np.zeros((n_rows, out_w), dtype=np.float32)
-        for i, members in enumerate(slots.to_numpy()):
-            for mrec in members:  # ≤ k*n small structs per anchor
-                si = mrec["slot_idx"]
-                mi = mrec["member_idx"]
-                bit = tool_bits.get(mrec["tool"])
-                if bit is not None:
-                    mat[i, bit] = 1.0
-                start = n_tools + (si * n + mi) * turn_w
-                f = mrec["features"]
-                if isinstance(f, dict):
-                    # sparse struct<idx,val> turn vector: densify here,
-                    # at the only place the fixed-width form is needed
-                    mat[
-                        i, start + np.asarray(f["idx"], dtype=np.int64)
-                    ] = f["val"]
-                else:
-                    mat[i, start : start + turn_w] = f
-        return mat
+        mat = np.zeros((n_anchors, out_w), dtype=np.float32)
+        # a view: splitting the contiguous last axis never copies
+        body = mat[:, n_tools:].reshape(n_anchors, k * n, turn_w)
+        cell = slot.astype(np.int64) * n + member
+        codes = pc.dictionary_encode(pc.fill_null(tool, ""))
+        bits = np.array(
+            [tool_bits.get(t, -1) for t in codes.dictionary.to_pylist()],
+            dtype=np.int64,
+        )[codes.indices.to_numpy(zero_copy_only=False)]
+        known = bits >= 0
+        mat[anchor[known], bits[known]] = 1.0
+        if pa.types.is_struct(features.type):
+            idx, val = features.flatten()
+            off = idx.offsets.to_numpy()
+            owner = np.repeat(np.arange(len(idx)), np.diff(off))
+            body[anchor[owner], cell[owner], _list_values(idx)] = (
+                _list_values(val)
+            )
+        else:
+            body[anchor, cell] = _list_values(features).reshape(
+                len(features), turn_w
+            )
+        bounds = pa.array(np.arange(n_anchors + 1) * out_w, pa.int32())
+        return pa.ListArray.from_arrays(bounds, pa.array(mat.ravel()))
 
-    @F.pandas_udf(T.ArrayType(T.FloatType()))
-    def assemble(slots: pd.Series) -> pd.Series:
-        return pd.Series(list(_fill(slots)))
+    return fill
+
+
+def _list_values(lst: pa.Array) -> np.ndarray:
+    """The flat values of a (possibly sliced) list array, as numpy."""
+    off = lst.offsets.to_numpy()
+    return lst.values.to_numpy(zero_copy_only=False)[off[0] : off[-1]]
+
+
+def _assemble_udf(vocab: Vocabulary, cfg: FeatureConfig, layout: VectorLayout):
+    """One Arrow UDF over each anchor's collected (slot_idx, member_idx,
+    tool, features) slots: the slot structs flatten to aligned member
+    arrays, and ``window_scatter`` fills the whole batch at once."""
+    fill = window_scatter(vocab, cfg, layout)
+
+    @F.arrow_udf(T.ArrayType(T.FloatType()))
+    def assemble(slots: pa.Array) -> pa.Array:
+        slot_idx, member_idx, tool, features = slots.flatten().flatten()
+        return fill(
+            len(slots),
+            slots.value_parent_indices().to_numpy(),
+            slot_idx.to_numpy(),
+            member_idx.to_numpy(),
+            tool,
+            features,
+        )
 
     return assemble
 
@@ -266,13 +313,12 @@ def dense_finish(
     of this join (a shuffle, or a broadcast when vec is small), and
     again when the per-anchor ``collect_list`` sends its partial
     buffers through an exchange on (conv_id, ts_sec, ts) — unless the
-    joined rows are already clustered by conv_id, which the salted
-    selector's (partitioned by bucket and salt) are not.
-    ``FeaturePipeline.transform`` moves it twice more (its per-anchor
-    ``last`` aggregate and, at small sizes, the broadcast of it for the
-    final join).
-    `vec` should be cached/materialized by the caller (FeaturePipeline
-    does) since it feeds both the selector and this join.  ts_sec rides
+    joined rows are already clustered by conv_id.  The deployment
+    pipeline does not run this finisher: ``asof_merge.
+    window_features_merge`` scatters inside its salted pass, so there
+    the wide array crosses that one shuffle only.
+    `vec` should be cached/materialized by the caller since it feeds
+    both the selector and this join.  ts_sec rides
     along (1:1 with ts per conv — the anchor key family) so downstream
     joins can normalize on the epoch key even with sub-second
     timestamps."""

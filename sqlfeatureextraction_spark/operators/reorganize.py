@@ -106,7 +106,6 @@ def reorganize_sessions_distributed(
     entity_col: str = "conv_id",
     ts_col: str = "ts",
     rows_per_bucket: int = 65536,
-    unpersist_with: list | None = None,
 ) -> DataFrame:
     """Scale path of W9 lead-chaining — same output as
     ``reorganize_sessions`` with NO per-conversation single task.
@@ -145,19 +144,16 @@ def reorganize_sessions_distributed(
     reorganize_sessions (equality-pinned in tests).
 
     Cache lifecycle: two intermediates (the distinct value space and
-    the hop map) are persisted because every level reads the hop map;
-    the returned frame reads neither.  Pass ``unpersist_with=[]`` to
-    receive them and call ``.unpersist()`` on each; without it they
-    stay cached for the session (CacheManager entries are not
-    GC-reclaimed)."""
+    the hop map) are persisted while the levels run, because every
+    level reads the hop map.  The levels are eagerly checkpointed, so
+    the returned frame reads neither, and both are unpersisted before
+    returning: a call leaves no CacheManager entry behind."""
     ent_ddl = anchors.schema[entity_col].dataType.simpleString()
     sec = F.col(ts_col).cast("timestamp").cast("long")
     base = anchors.select(
         F.col(entity_col), F.col(ts_col), sec.alias("_v")
     )
     dist = base.select(entity_col, "_v").distinct().persist()
-    if unpersist_with is not None:
-        unpersist_with.append(dist)
     stats = dist.groupBy(entity_col).agg(
         F.count("*").alias("_n"),
         F.min("_v").alias("_t0"),
@@ -266,8 +262,6 @@ def reorganize_sessions_distributed(
     # AFTER the iteration, in one join).  The hop map is persisted
     # (one InMemoryRelation leaf reused by every level).
     hop = hop.persist()
-    if unpersist_with is not None:
-        unpersist_with.append(hop)
     rep = base.groupBy(entity_col, "_v").agg(
         F.min(ts_col).alias("_rep_ts")
     )
@@ -297,6 +291,8 @@ def reorganize_sessions_distributed(
         F.lit(True),
         max_hops - 1,
     )
+    dist.unpersist()
+    hop.unpersist()
 
     # distinct-space chains → per-anchor rows (duplicate anchors at
     # the same second emit duplicate chains, like the local path);

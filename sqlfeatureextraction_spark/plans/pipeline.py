@@ -2,16 +2,20 @@
 APMWindowFragmentIntent.main, SURVEY §3.1, re-planned for Spark).
 
 fit:        vocabulary dimension table (driver-side dict, broadcast)
-transform:  per-turn vectors → sessionize → point-in-time window
-            features (merge path), joined to each anchor's last turn
+transform:  sessionize → per-turn vectors → point-in-time window
+            features (merge path), finished per anchor in one pass
 split:      deterministic per-conversation train/test split
             (reference 0.8 per session, APMWindowFragmentIntent.java:
             506,560-581 — theirs consumes a shared Random; ours hashes
             conv_id so the split is stable under any partitioning)
 
-Shuffle budget of the whole transform: conv_id window (vectorize lag)
-→ conv_id stats+salt groupBy (window features).  AQE handles residual
-skew; explicit salting handles the hot conversations.
+Shuffle budget of the whole transform: ONE conv_id exchange feeds the
+session and lag windows below the Arrow encoder; the salting stats take
+a narrow conv_id exchange and are broadcast; the (_grp, salt) shuffle of
+the window pass is the only exchange the wide ``features`` array
+crosses — no join-back, no per-anchor aggregate, no broadcast of the
+turn table.  ``split`` and ``write`` add no exchange.  AQE handles
+residual skew; explicit salting handles the hot conversations.
 """
 
 from __future__ import annotations
@@ -41,35 +45,29 @@ class FeaturePipeline:
         return self
 
     def turn_features(self, transcripts: DataFrame) -> DataFrame:
+        """Sessionized per-turn vectors.  ``sessionize`` runs before the
+        encoder so its window and the lag window share one conv_id
+        exchange below the Arrow encoder, which cannot advertise a
+        partitioning to anything above it."""
         assert self.vocab is not None, "call fit() first"
-        vec, self.layout = with_turn_features(transcripts, self.vocab, self.cfg)
-        return sessionize(
-            vec, gap_s=self.cfg.session_gap_s
-        )
+        sess = sessionize(transcripts, gap_s=self.cfg.session_gap_s)
+        vec, self.layout = with_turn_features(sess, self.vocab, self.cfg)
+        return vec
 
     def window_features(self, vec: DataFrame) -> DataFrame:
         assert self.vocab is not None and self.layout is not None
         return window_features_merge(vec, self.vocab, self.cfg, self.layout)
 
     def transform(self, transcripts: DataFrame) -> DataFrame:
-        """Full per-(conv_id, ts) feature table: turn-level features of
-        the LAST turn at each distinct ts + the trailing window vector.
+        """Full per-(conv_id, ts_sec) feature table: (conv_id, ts_sec,
+        features, session_id, turn_idx, ts, window_features) — the LAST
+        turn's features at each distinct epoch second + the trailing
+        window vector, finished by the window pass itself.
 
-        The turn-feature table is cached: it feeds the turn-level
-        output, the narrow window pass AND the representative-feature
-        join (at cluster scale: materialize it as a table instead)."""
-        vec = self.turn_features(transcripts).cache()
-        wf = self.window_features(vec)
-        # join on the epoch key (conv_id, ts_sec) — the window anchors
-        # are per distinct epoch second; joining on full-precision ts
-        # would silently drop rows when timestamps carry sub-second
-        # components (window output ts = the min-turn_idx row's ts)
-        last = vec.groupBy("conv_id", "ts_sec").agg(
-            F.max_by("features", "turn_idx").alias("features"),
-            F.max_by("session_id", "turn_idx").alias("session_id"),
-            F.max("turn_idx").alias("turn_idx"),
-        )
-        return last.join(wf, ["conv_id", "ts_sec"])
+        The turn-feature table is cached: it feeds both the salting
+        stats pass and the window pass (at cluster scale: materialize
+        it as a table instead)."""
+        return self.window_features(self.turn_features(transcripts).cache())
 
     def split(self, features: DataFrame) -> DataFrame:
         """Deterministic per-conversation split: xxhash64(conv_id)

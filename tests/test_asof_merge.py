@@ -1,10 +1,13 @@
 """One pin for every point-in-time window path: both member selectors
-(the JVM ``pit_window.select_members`` and the salted pandas
-``asof_merge.select_members_salted``) × both finishers, across configs.
+(the JVM ``pit_window.select_members`` and the salted Arrow
+``asof_merge.select_members_salted``) × both finishers, across configs,
+and the salted pass that finishes anchor rows itself
+(``asof_merge.window_features_merge``).
 
   * the dense finisher's window vectors equal the pandas oracle's;
   * the scalar finisher equals a numpy reduction of those vectors;
-  * the two selectors emit the same member rows, row for row."""
+  * the two selectors emit the same member rows, row for row;
+  * the finished anchor rows equal the oracle's on edge inputs."""
 
 import numpy as np
 import pandas as pd
@@ -212,3 +215,114 @@ def test_merge_salt_boundary_anchor(spark):
     m = np.vstack(b.sort_values("ts")["window_features"].to_numpy())
     n_tools = layout.seg("tool").width
     assert m[2, n_tools:].sum() > layout.width / 10  # members present
+
+
+def _edge_transcripts() -> pd.DataFrame:
+    """Hand-built turns for the finished-row pass:
+      * "a": three turns in one epoch second whose turn_idx order is not
+        their ts order, different vectors, NULL tools and a NULL text,
+        and a session break before them;
+      * "b": a one-turn conversation;
+      * "c": 12 turns 250 s apart — with ROWS_PER_BUCKET = 8 it splits
+        into two salt buckets and the row at +2250 s is replicated."""
+    base = pd.Timestamp("2024-01-01 00:00:00")
+    a = [
+        (0, 0.0, "user", "hello world", None, 100),
+        (1, 0.4, "assistant", "search docs", "search", 200),
+        (2, 0.9, "tool", "result one", "search", 50),
+        (3, 30.2, "assistant", "hello world", None, 100),
+        # session break (gap > 1800 s), then one second holding three
+        # turns; turn 6 is stamped before turn 5
+        (4, 4000.1, "user", "new session", "calc", 10),
+        (6, 4000.2, "tool", "calc two", "calc", 30),
+        (5, 4000.5, "assistant", "calc two", "calc", 10),
+        (7, 4100.0, "user", None, None, None),
+    ]
+    rows = [("a", *r) for r in a]
+    rows.append(("b", 0, 50.0, "user", "lonely turn", "search", 5))
+    rows += [
+        ("c", i, 250.0 * i, "user" if i % 2 else "assistant",
+         f"step {i % 3}", ("search", "calc", None)[i % 3], 10 * (i % 4) + 1)
+        for i in range(12)
+    ]
+    pdf = pd.DataFrame(
+        rows,
+        columns=["conv_id", "turn_idx", "off", "role", "text", "tool",
+                 "duration_ms"],
+    )
+    pdf["ts"] = base + pd.to_timedelta(pdf.pop("off"), unit="s")
+    pdf["duration_ms"] = pdf["duration_ms"].astype("Int64")
+    return pdf
+
+
+def _dense(f, width: int) -> np.ndarray:
+    """A turn vector from either transport, dense."""
+    if isinstance(f, dict):
+        v = np.zeros(width, dtype=np.float32)
+        v[np.asarray(f["idx"], dtype=np.int64)] = f["val"]
+        return v
+    return np.asarray(f, dtype=np.float32)
+
+
+@pytest.mark.parametrize(
+    "sparse,rows_per_bucket",
+    [(False, 65536), (False, 8), (True, 8)],
+    ids=["dense", "dense-salt8", "sparse-salt8"],
+)
+def test_window_merge_finished_rows_edges(
+    monkeypatch, spark, sparse, rows_per_bucket
+):
+    """window_features_merge's finished anchor rows against the pandas
+    oracle: the window vector, and the last turn's (max turn_idx)
+    features, session_id and turn_idx at each epoch second, with ts
+    from its first turn."""
+    from pyspark.sql import types as T
+
+    from sqlfeatureextraction_spark.operators.sessionize import sessionize
+
+    monkeypatch.setattr(asof_merge, "ROWS_PER_BUCKET", rows_per_bucket)
+    cfg = FeatureConfig()
+    pdf = _edge_transcripts()
+    schema = T.StructType(
+        [
+            T.StructField("conv_id", T.StringType(), False),
+            T.StructField("turn_idx", T.IntegerType(), False),
+            T.StructField("role", T.StringType(), True),
+            T.StructField("text", T.StringType(), True),
+            T.StructField("tool", T.StringType(), True),
+            T.StructField("duration_ms", T.LongType(), True),
+            T.StructField("ts", T.TimestampType(), False),
+        ]
+    )
+    df = spark.createDataFrame(pdf[[f.name for f in schema.fields]], schema)
+    v = fit_vocabulary(df)
+    vec, layout = with_turn_features(sessionize(df), v, cfg, sparse=sparse)
+    got = (
+        window_features_merge(vec, v, cfg, layout)
+        .toPandas()
+        .sort_values(["conv_id", "ts_sec"])
+        .reset_index(drop=True)
+    )
+    assert list(got.columns) == [
+        "conv_id", "ts_sec", "features", "session_id", "turn_idx", "ts",
+        "window_features",
+    ]
+
+    pdf["duration_ms"] = pdf["duration_ms"].astype(float)
+    tokens, roles, tools = O.fit_vocab(pdf)
+    tv = O.turn_vectors(pdf, tokens, roles, tools)
+    tv["session_id"] = O.sessionize(pdf)["session_id"].to_numpy()
+    last = tv.sort_values("turn_idx").groupby(["conv_id", "ts_sec"]).tail(1)
+    exp = _by_anchor(O.window_features(tv, tools))
+    exp["ts_sec"] = exp["ts"].astype("datetime64[s]").astype("int64")
+    exp = exp.merge(
+        last[["conv_id", "ts_sec", "vector", "session_id", "turn_idx"]],
+        on=["conv_id", "ts_sec"],
+    )
+    assert len(exp) == 17  # distinct seconds: a 4, b 1, c 12
+    _assert_vectors_equal(got, exp)
+    assert (got["ts_sec"].to_numpy() == exp["ts_sec"].to_numpy()).all()
+    assert (got["turn_idx"].to_numpy() == exp["turn_idx"].to_numpy()).all()
+    assert (got["session_id"].to_numpy() == exp["session_id"].to_numpy()).all()
+    feats = np.vstack([_dense(f, layout.width) for f in got["features"]])
+    assert np.allclose(feats, np.vstack(exp["vector"].to_numpy()))

@@ -248,8 +248,9 @@ def test_reorganize_distributed_hand_case(spark):
 def test_reorganize_distributed_long_entity_and_cache_cleanup(spark):
     """The generic entity API must hold for non-string entity columns
     (output schema is derived from the input, not hardcoded string),
-    and unpersist_with must hand back exactly the two persisted
-    intermediates so callers can free them."""
+    and the call must free the two intermediates it persists: the
+    CacheManager holds no new entry after it, nor after the result is
+    read."""
     import datetime as dt
 
     from sqlfeatureextraction_spark.operators.reorganize import (
@@ -264,14 +265,15 @@ def test_reorganize_distributed_long_entity_and_cache_cleanup(spark):
         for s in (0, 100, 400, 900)
     ]
     df = spark.createDataFrame(rows, "user_id long, ts timestamp")
-    caches = []
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    n_cached = cache.numCachedEntries()
     got = reorganize_sessions_distributed(
         df,
         window_s=300,
         rows_per_bucket=2,
         entity_col="user_id",
-        unpersist_with=caches,
     )
+    assert cache.numCachedEntries() == n_cached
     assert got.schema["user_id"].dataType.simpleString() == "bigint"
     loc = reorganize_sessions(
         df, window_s=300, entity_col="user_id"
@@ -282,11 +284,7 @@ def test_reorganize_distributed_long_entity_and_cache_cleanup(spark):
         got.toPandas().sort_values(key, kind="mergesort").reset_index(drop=True)
     )
     pd.testing.assert_frame_equal(lo[key], di[key], check_dtype=False)
-    assert len(caches) == 2
-    for c in caches:
-        assert c.storageLevel.useMemory  # persisted...
-        c.unpersist(blocking=True)
-    assert not any(c.storageLevel.useMemory for c in caches)  # ...freed
+    assert cache.numCachedEntries() == n_cached
 
 
 # ----------------------------------------------------------- A4 OR-combine

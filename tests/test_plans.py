@@ -196,3 +196,108 @@ def test_substr_dup_frac_single_corpus_scan(plans):
 
     n_gen = len(re.findall(r"\(\d+\) Generate", plans["substr_dup_frac"]))
     assert n_gen == 1, plans["substr_dup_frac"]
+
+
+def _tiny_pipeline(spark):
+    """A fitted FeaturePipeline and a 6-conversation transcript frame
+    that no other test builds (so no cached plan of it exists yet)."""
+    from pyspark.sql import types as T
+
+    from sqlfeatureextraction_spark.config import FeatureConfig
+    from sqlfeatureextraction_spark.plans.pipeline import FeaturePipeline
+    from sqlfeatureextraction_spark.synth import make_transcripts_pdf
+
+    schema = T.StructType(
+        [
+            T.StructField("conv_id", T.StringType(), False),
+            T.StructField("turn_idx", T.IntegerType(), False),
+            T.StructField("role", T.StringType(), True),
+            T.StructField("text", T.StringType(), True),
+            T.StructField("tool", T.StringType(), True),
+            T.StructField("duration_ms", T.LongType(), True),
+            T.StructField("ts", T.TimestampType(), False),
+        ]
+    )
+    pdf = make_transcripts_pdf(n_convs=6, seed=3)
+    tiny = spark.createDataFrame(pdf[[f.name for f in schema.fields]], schema)
+    return FeaturePipeline(FeatureConfig()).fit(tiny), tiny
+
+
+def _plan_nodes(p: str) -> tuple[list, dict]:
+    """Formatted explain → (tree lines as (depth, name, id), per-id
+    detail text)."""
+    import re
+
+    tree, details = p.split("\n\n", 1)
+    nodes = []
+    for line in tree.splitlines()[1:]:
+        m = re.match(r"^([\s:+\-]*)(\w+).*\((\d+)\)$", line)
+        if m:
+            nodes.append((len(m.group(1)), m.group(2), int(m.group(3))))
+    detail = {
+        int(m.group(1)): m.group(2)
+        for m in re.finditer(
+            r"^\((\d+)\) \w+.*?\n(.*?)(?=\n\n|\Z)", details, re.M | re.S
+        )
+    }
+    return nodes, detail
+
+
+def test_deployment_plan_moves_features_once(spark):
+    """FeaturePipeline.split(transform(...)): the wide ``features`` array
+    crosses exactly one exchange, the (_grp, salt) shuffle of the window
+    pass — no join-back, no per-anchor aggregate, no broadcast of the
+    turn table — and the session and lag windows share one conv_id
+    exchange below the Arrow encoder."""
+    pipe, tiny = _tiny_pipeline(spark)
+    nodes, detail = _plan_nodes(_explain(pipe.split(pipe.transform(tiny))))
+    ids = lambda name: {i for _, n, i in nodes if n == name}  # noqa: E731
+
+    wide = [i for i in ids("Exchange") if "features#" in detail[i]]
+    assert len(wide) == 1, wide
+    assert "hashpartitioning(_grp#" in detail[wide[0]]
+    assert "salt#" in detail[wide[0]].split("hashpartitioning(")[1]
+    assert not [i for i in ids("BroadcastExchange") if "features#" in detail[i]]
+    assert not ids("SortAggregate") and not ids("ObjectHashAggregate")
+
+    # the encoder's subtree: the nodes printed below it, deeper
+    # indented (the cached subplan is printed once per reader)
+    below = set()
+    for at, (depth, name, _) in enumerate(nodes):
+        if name != "ArrowEvalPython":
+            continue
+        for d, n, i in nodes[at + 1 :]:
+            if d <= depth:
+                break
+            if n == "Exchange":
+                below.add(i)
+    assert len(below) == 1, below
+    assert "hashpartitioning(conv_id#" in detail[below.pop()]
+
+    python = {
+        (n, i) for _, n, i in nodes if "Python" in n or "Arrow" in n or "Pandas" in n
+    }
+    assert sorted(n for n, _ in python) == [
+        "ArrowEvalPython",
+        "FlatMapGroupsInArrow",
+    ], python
+
+
+def test_deployment_write_job_budget(spark, tmp_path):
+    """Job budget of one cold deployment pass (fit excluded): the jobs
+    and SQL executions of write(split(transform(tiny))), counted from
+    the call.  The turn table is cached by transform; it is uncached
+    afterwards so the count never depends on test order."""
+    from conftest import count_actions
+
+    pipe, tiny = _tiny_pipeline(spark)
+    try:
+        _, jobs, executions = count_actions(
+            spark,
+            lambda: pipe.write(
+                pipe.split(pipe.transform(tiny)), str(tmp_path / "out")
+            ),
+        )
+    finally:
+        pipe.turn_features(tiny).unpersist()
+    assert (jobs, executions) == (7, 1)
