@@ -261,7 +261,6 @@ def _q_transcript_wf_merge(spark, sf_dir):
     tx = events_as_transcripts(spark, sf_dir)
     vocab = fit_vocabulary(tx, max_tokens=256)
     vec_s, layout = with_turn_scalars(tx, vocab, cfg)
-    vec_s = vec_s.cache()  # used by the stats pass + base/replica branches
     members = select_members_salted(vec_s, cfg)
     return scalar_finish(members, vocab, cfg, layout)
 

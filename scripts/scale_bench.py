@@ -10,9 +10,10 @@ high-N efficiency under-reads what separate executors would achieve.
 Phases:
   prepare: replicate the sf events table into a transcripts parquet
            (rep x conversations) at /tmp/scale_input_<rep> (once).
-  measure: per level, subprocess runs fit -> vectorize (cached) ->
-           point-in-time window features -> count; reps timed after one
-           warm-up run.
+  measure: per level, subprocess runs fit -> vectorize (cached; the
+           merge path caches the raw turns and encodes inside its
+           window pass) -> point-in-time window features -> count;
+           reps timed after one warm-up run.
 
 Usage: python scripts/scale_bench.py [sf_dir] [rep] [n_lo] [n_hi] [reps]
 """
@@ -78,12 +79,15 @@ wf = window_features_builtin if path_name == "builtin" else window_features_merg
 def job():
     tx = spark.read.parquet(path)
     vocab = fit_vocabulary(tx, max_tokens=256)
-    vec, layout = with_turn_features(tx, vocab, cfg)
-    vec = vec.cache()
+    if path_name == "builtin":
+        turns, layout = with_turn_features(tx, vocab, cfg)
+    else:  # the salted pass encodes the raw turns itself
+        turns, layout = tx, vocab.layout(n_grans=len(cfg.granularities_s))
+    turns = turns.cache()
     try:
-        return wf(vec, vocab, cfg, layout).count()
+        return wf(turns, vocab, cfg, layout).count()
     finally:
-        vec.unpersist(True)
+        turns.unpersist(True)
 
 n = job()  # warm-up (JIT, parquet footers, Arrow init)
 if mode == "executors":

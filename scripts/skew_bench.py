@@ -6,9 +6,10 @@ window exec by conv_id — a single hot conversation pins one task
 (exactly like the reference's one-thread-per-session split,
 enc/APMFragmentIntent.java:1069-1097).  The salted Arrow pass
 (window_features_merge) splits it into ~n/65k time buckets with overlap
-replication, processes them in parallel and scatters the window
-vectors in the same pass (the turn vectors, replicated context rows
-included, ride through its one shuffle).
+replication, processes them in parallel, and encodes the raw turns and
+scatters the window vectors in the same pass (the JVM selector's timed
+part starts from cached turn vectors, the salted pass's from cached
+raw turns, so its time includes the encoding).
 
 Each path runs in its own subprocess with a wall-clock cap so a
 pathological single task (the point of the demo) can't hang the
@@ -48,11 +49,15 @@ hot = tx.withColumn("conv_id", F.lit("hot")).withColumn(
     ),
 )
 vocab = fit_vocabulary(hot, max_tokens=256)
-vec, layout = with_turn_features(hot, vocab, cfg)
-vec = vec.cache(); n = vec.count()
-fn = window_features_builtin if path_name == "builtin" else window_features_merge
+if path_name == "builtin":
+    fn = window_features_builtin
+    turns, layout = with_turn_features(hot, vocab, cfg)
+else:  # the salted pass encodes the raw turns itself
+    fn = window_features_merge
+    turns, layout = hot, vocab.layout(n_grans=len(cfg.granularities_s))
+turns = turns.cache(); n = turns.count()
 t = time.perf_counter()
-cnt = fn(vec, vocab, cfg, layout).count()
+cnt = fn(turns, vocab, cfg, layout).count()
 print(f"RESULT {path_name} {n} {cnt} {round(time.perf_counter()-t, 2)}")
 """
 

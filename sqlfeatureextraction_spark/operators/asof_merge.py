@@ -1,5 +1,5 @@
 """Salted Arrow member selection — the hot-key path, and the deployment
-pipeline's window stage.
+pipeline's whole window stage.
 
 Semantics are the reference's (enc/APMWindowFragmentIntent.java:
 266-493): trailing right-closed ``(ts−W, ts]`` window per distinct
@@ -8,23 +8,24 @@ entities; top-N members.  Two products share one selection core
 (``_select``: pairs, dedupe, top-K, top-N as numpy index arrays over
 one group's Arrow table):
 
-  * ``select_members_salted`` — member rows, the contract of the
-    pit_window module docstring (``transcript_wf_merge`` finishes them
-    with ``scalar_finish``);
-  * ``window_features_merge`` — finished anchor rows: the window vector
-    is scattered inside the same pass, so the wide turn vectors cross
-    exactly one exchange (the salted shuffle) and no join-back,
+  * ``select_members_salted`` — member rows from a turn table that
+    carries vec_hash, the contract of the pit_window module docstring
+    (``transcript_wf_merge`` finishes them with ``scalar_finish``);
+  * ``window_features_merge`` — finished anchor rows from raw turns:
+    the turns are encoded inside the pass (the vectorize module's one
+    cell builder and fingerprint) and the window vector is scattered
+    there too, so no turn vector crosses an exchange and no join-back,
     collect_list or per-anchor aggregate follows.
 
 Each runs as ONE salted shuffle + ONE grouped Arrow pass:
 
-  1. adaptive time salting (``_salted``): a per-conversation stats pass
-     (count, min/max ts) splits a conversation of n rows into
-     ``ceil(n / ROWS_PER_BUCKET)`` time-range buckets; rows
-     in the trailing ``W−1`` seconds of a bucket are REPLICATED into
-     the next bucket as context-only (is_anchor=false) so every anchor
-     still sees its full trailing window — overlap replication, the
-     classic point-in-time-join trick (SURVEY §7.3).  The reference
+  1. adaptive time salting (``_salted``): per-conversation count and
+     min/max ts (window aggregates over conv_id) split a conversation
+     of n rows into ``ceil(n / ROWS_PER_BUCKET)`` time-range buckets;
+     rows in the trailing ``W−1`` seconds of a bucket are REPLICATED
+     into the next bucket as context-only (is_anchor=false) so every
+     anchor still sees its full trailing window — overlap replication,
+     the classic point-in-time-join trick (SURVEY §7.3).  The reference
      pins a hot session to one thread (enc/APMFragmentIntent.java:
      1069-1097 — it cannot split it; we can);
   2. ``groupBy(_grp, salt).applyInArrow`` over coarse conversation
@@ -46,7 +47,7 @@ from typing import Iterator, NamedTuple
 import numpy as np
 import pyarrow as pa
 import pyarrow.compute as pc
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -55,6 +56,16 @@ from sqlfeatureextraction_spark.layout import VectorLayout, window_vector_width
 from sqlfeatureextraction_spark.operators.pit_window import (
     TURN_SUMS,
     window_scatter,
+)
+from sqlfeatureextraction_spark.operators.vectorize import (
+    CELL_INPUTS,
+    _cell_builder,
+    _cell_inputs,
+    _cost,
+    _fingerprint,
+    _with_lag,
+    dense_rows,
+    sparse_rows,
 )
 from sqlfeatureextraction_spark.vocab import Vocabulary
 
@@ -66,21 +77,21 @@ ROWS_PER_BUCKET = 65536
 # turn-table columns the selection core reads
 _SELECT_COLS = ("conv_id", "ts", "ts_sec", "turn_idx", "tool", "cost", "vec_hash")
 
-# Window-vector floats per output batch of window_features_merge
-# (64 MiB of float32): bounds the dense matrix a worker builds at once
+# Vector floats (turn + window vectors) per output batch of
+# window_features_merge (64 MiB of float32): bounds the dense matrices
+# a worker builds at once
 _BATCH_FLOATS = 1 << 24
 
 
-def _salted(vec: DataFrame, cfg: FeatureConfig) -> DataFrame:
+def _salted(turns: DataFrame, cfg: FeatureConfig) -> DataFrame:
     """Adaptive time-range salting with overlap replication.
 
     A fixed global span is wrong at both ends: tied to the window width
     it shatters sparse long-lived conversations into millions of tiny
     groups (measured 34× slower than the built-in path at sf0.1); tied
-    to the data span it leaves hot conversations unsplit.  Instead a
-    cheap per-conversation stats pass (count, min/max ts — one
-    map-side-combined shuffle on conv_id, NOT a driver-side census)
-    sizes the span per conversation:
+    to the data span it leaves hot conversations unsplit.  Instead the
+    span is sized per conversation from its count and min/max ts_sec,
+    taken as ``Window.partitionBy("conv_id")`` aggregates:
 
       buckets = ceil(n_rows / ROWS_PER_BUCKET)
       span    = max(ceil(lifetime / buckets), 8·W)   if buckets > 1
@@ -91,44 +102,41 @@ def _salted(vec: DataFrame, cfg: FeatureConfig) -> DataFrame:
     12% replicated context rows.  Replicated rows carry is_anchor=false
     and emit nothing themselves (the reference's single-thread-per-
     session split, enc/APMFragmentIntent.java:1069-1097, can never split
-    a hot session; this can).  The stats (one narrow row per
-    conversation) are broadcast explicitly: left to its size estimate
-    the planner may pick the turn table as the build side, and with
-    ``features`` carried that is a broadcast of every wide vector.
-    """
+    a hot session; this can).  On turns already partitioned by conv_id
+    (the deployment pipeline's sessionized turns) the aggregates reuse
+    that exchange: no aggregate, broadcast or join; otherwise they
+    shuffle the turns once on conv_id."""
     w = cfg.window_size_s
-    stats = vec.groupBy("conv_id").agg(
-        F.count("*").alias("_n"),
-        F.min("ts_sec").alias("_t0"),
-        F.max("ts_sec").alias("_t1"),
-    )
+    conv = Window.partitionBy("conv_id")
     nb = F.ceil(F.col("_n") / ROWS_PER_BUCKET)
     life = F.col("_t1") - F.col("_t0")
     span = F.when(nb <= 1, life + w + 2).otherwise(
         F.greatest(F.ceil(life / nb), F.lit(8 * w))
     )
-    stats = stats.select(
-        "conv_id", F.col("_t0"), span.cast("long").alias("_span")
-    )
-
     rel = F.col("ts_sec") - F.col("_t0")
     copies = F.when(
         rel % F.col("_span") >= F.col("_span") - (w - 1),
         F.array(F.lit(True), F.lit(False)),
     ).otherwise(F.array(F.lit(True)))
-    # one join feeding one Generate: a union of a base and a replica
-    # branch would plan the stats aggregate and its broadcast twice.
-    # explode_outer (never empty here): a plain explode of a computed
-    # array lets Catalyst push a size() filter that re-evaluates it
+    # one Generate builds the replicas.  explode_outer (never empty
+    # here): a plain explode of a computed array lets Catalyst push a
+    # size() filter that re-evaluates it
     return (
-        vec.join(F.broadcast(stats), "conv_id")
+        turns.withColumns(
+            {
+                "_n": F.count(F.lit(1)).over(conv),
+                "_t0": F.min("ts_sec").over(conv),
+                "_t1": F.max("ts_sec").over(conv),
+            }
+        )
+        .withColumn("_span", span.cast("long"))
         .withColumn("is_anchor", F.explode_outer(copies))
         .withColumn(
             "salt",
             F.floor(rel / F.col("_span")).cast("long")
             + F.when(F.col("is_anchor"), 0).otherwise(1),
         )
-        .drop("_t0", "_span")
+        .drop("_n", "_t0", "_t1", "_span")
     )
 
 
@@ -273,9 +281,10 @@ def _grouped(vec: DataFrame, cfg: FeatureConfig):
 def select_members_salted(vec: DataFrame, cfg: FeatureConfig) -> DataFrame:
     """Salted member selector: turn table → member rows (the pit_window
     module docstring's contract), narrow — feature arrays are never
-    selected in.  Stage plan: per-conv stats + adaptive time salting
-    (`_salted`), ONE narrow shuffle into coarse conversation buckets,
-    then ``_select`` emitting ≤ k·n member rows per anchor."""
+    selected in.  Stage plan: adaptive time salting (``_salted``, whose
+    window aggregates shuffle the turns on conv_id unless they already
+    are), ONE narrow shuffle into coarse conversation buckets, then
+    ``_select`` emitting ≤ k·n member rows per anchor."""
     sums = [c for c in TURN_SUMS if c in vec.columns]
 
     def members(table: pa.Table) -> pa.Table:
@@ -307,37 +316,51 @@ def select_members_salted(vec: DataFrame, cfg: FeatureConfig) -> DataFrame:
 
 
 def window_features_merge(
-    vec: DataFrame,
+    turns: DataFrame,
     vocab: Vocabulary,
     cfg: FeatureConfig,
     layout: VectorLayout,
 ) -> DataFrame:
-    """Turn table → one finished row per anchor: (conv_id, ts_sec,
-    features, session_id, turn_idx, ts, window_features) — ``session_id``
-    only when the turn table has it.
+    """Raw turns (conv_id, turn_idx, role, text, tool, duration_ms, ts
+    and, when sessionized, session_id) → one finished row per anchor:
+    (conv_id, ts_sec, features, session_id, turn_idx, ts,
+    window_features) — ``session_id`` only when the turns have it.
 
-    One salted pass: the turns' ``features`` (and ``session_id``) ride
-    through the ``(_grp, salt)`` shuffle, replicated context rows
-    included, and each group's Arrow call runs ``_select`` and then
-    ``window_scatter`` on the selected representatives.  ``features``,
-    ``session_id`` and ``turn_idx`` are the anchor's LAST turn at ts_sec
-    (max turn_idx), ``ts`` its first (min turn_idx) — the oracle's and
-    ``dense_finish``'s convention.  That shuffle is the only exchange
-    the wide array crosses: no join-back, no ``collect_list`` exchange,
-    no per-anchor aggregate.  Output batches hold at most
-    ``_BATCH_FLOATS`` window-vector floats, so a hot group's dense
-    matrix is built in slices."""
-    carry = [c for c in ("session_id",) if c in vec.columns]
+    The whole window stage is one salted pass.  Below the ``(_grp,
+    salt)`` shuffle, on the conv_id partitioning the turns already have
+    (``sessionize``'s) or take here: ts_sec, lag_sec, cost, dow, hour
+    and the tokens, and ``_salted``'s per-conversation aggregates.  Each
+    group's Arrow call then encodes its turns (``_cell_builder`` cells,
+    ``_fingerprint`` vec_hash), runs ``_select`` and ``window_scatter``
+    over the selected representatives' cells.  ``features`` (the
+    anchor's dense turn vector), ``session_id`` and ``turn_idx`` are the
+    anchor's LAST turn at ts_sec (max turn_idx), ``ts`` its first (min
+    turn_idx) — the oracle's and ``dense_finish``'s convention.  No
+    turn vector crosses an exchange.  Output batches hold at most
+    ``_BATCH_FLOATS`` vector floats, so a hot group's dense matrices
+    are built in slices."""
+    _, cells = _cell_builder(vocab, cfg)
+    carry = [c for c in ("session_id",) if c in turns.columns]
     fill = window_scatter(vocab, cfg, layout)
+    width = layout.width
     per_batch = max(
         1,
         _BATCH_FLOATS
-        // window_vector_width(layout, cfg.top_k_entities, cfg.top_n_members),
+        // (
+            width
+            + window_vector_width(layout, cfg.top_k_entities, cfg.top_n_members)
+        ),
     )
     out = ["conv_id", "ts_sec", "features", *carry, "turn_idx", "ts"]
 
     def finish(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         table = pa.Table.from_batches(list(batches))
+        n = table.num_rows
+        r, c, v = cells(*(table[k].combine_chunks() for k in CELL_INPUTS))
+        table = table.append_column(
+            "vec_hash", pa.array(_fingerprint(r, c, v, n), pa.int64())
+        )
+        feats = sparse_rows(r, c, v, n)
         sel = _select(table, cfg)
         bounds = np.searchsorted(sel.anchor, np.arange(len(sel.first) + 1))
         for lo in range(0, len(sel.first), per_batch):
@@ -350,22 +373,44 @@ def window_features_merge(
                 sel.slot[mem],
                 sel.member[mem],
                 table["tool"].take(rep).combine_chunks(),
-                table["features"].take(rep).combine_chunks(),
+                feats.take(rep),
             )
             first, last = sel.first[lo:hi], sel.last[lo:hi]
+            idx, val = feats.take(last).flatten()
+            own = dense_rows(
+                pc.list_parent_indices(idx).to_numpy(),
+                pc.list_flatten(idx).to_numpy(),
+                pc.list_flatten(val).to_numpy(),
+                hi - lo,
+                width,
+            )
             yield pa.RecordBatch.from_arrays(
                 [
-                    table[c].take(first if c == "ts" else last).combine_chunks()
-                    for c in out
+                    own
+                    if name == "features"
+                    else table[name].take(first if name == "ts" else last)
+                    .combine_chunks()
+                    for name in out
                 ]
                 + [wf],
                 names=out + ["window_features"],
             )
 
-    schema = T.StructType(
-        [vec.schema[c] for c in out]
-        + [T.StructField("window_features", T.ArrayType(T.FloatType()))]
+    df = _with_lag(turns).select(
+        "conv_id",
+        "ts",
+        "ts_sec",
+        "turn_idx",
+        _cost().alias("cost"),
+        *carry,
+        *_cell_inputs(),
     )
-    return _grouped(
-        vec.select(*_SELECT_COLS, "features", *carry), cfg
-    ).applyInArrow(finish, schema)
+    vector = T.ArrayType(T.FloatType())
+    schema = T.StructType(
+        [
+            T.StructField(name, vector) if name == "features" else df.schema[name]
+            for name in out
+        ]
+        + [T.StructField("window_features", vector)]
+    )
+    return _grouped(df, cfg).applyInArrow(finish, schema)

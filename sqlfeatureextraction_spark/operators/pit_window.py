@@ -32,8 +32,9 @@ Finishers:
 
 ``window_features_builtin`` (here) is the JVM selector's dense
 composition.  ``asof_merge.window_features_merge`` does not go through
-the member rows: its salted Arrow pass selects and scatters in one go
-(the same ``window_scatter``) and emits finished anchor rows.
+the member rows: its salted Arrow pass encodes raw turns, selects and
+scatters in one go (the same ``window_scatter``) and emits finished
+anchor rows.
 
 JVM selector formulation:
 
@@ -315,8 +316,8 @@ def dense_finish(
     buffers through an exchange on (conv_id, ts_sec, ts) — unless the
     joined rows are already clustered by conv_id.  The deployment
     pipeline does not run this finisher: ``asof_merge.
-    window_features_merge`` scatters inside its salted pass, so there
-    the wide array crosses that one shuffle only.
+    window_features_merge`` encodes and scatters inside its salted
+    pass, so there no turn vector crosses an exchange.
     `vec` should be cached/materialized by the caller since it feeds
     both the selector and this join.  ts_sec rides
     along (1:1 with ts per conv — the anchor key family) so downstream

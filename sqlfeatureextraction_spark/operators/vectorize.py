@@ -151,6 +151,29 @@ def _fingerprint(r: np.ndarray, c: np.ndarray, v: np.ndarray, n: int):
     return _mix64(acc ^ (cnt * np.uint64(0x9E3779B97F4A7C15))).astype(np.int64)
 
 
+def sparse_rows(r: np.ndarray, c: np.ndarray, v: np.ndarray, n: int) -> pa.Array:
+    """n rows' canonical cells as the sparse ``struct<idx, val>``
+    transport (idx strictly ascending per row)."""
+    bounds = pa.array(np.searchsorted(r, np.arange(n + 1)), pa.int32())
+    return pa.StructArray.from_arrays(
+        [
+            pa.ListArray.from_arrays(bounds, c.astype(np.int32)),
+            pa.ListArray.from_arrays(bounds, v),
+        ],
+        names=["idx", "val"],
+    )
+
+
+def dense_rows(
+    r: np.ndarray, c: np.ndarray, v: np.ndarray, n: int, width: int
+) -> pa.Array:
+    """n rows' cells as the dense fixed-width ``list<float>``."""
+    mat = np.zeros((n, width), dtype=np.float32)
+    mat[r, c] = v
+    bounds = pa.array(np.arange(n + 1) * width, pa.int32())
+    return pa.ListArray.from_arrays(bounds, mat.ravel())
+
+
 def _with_lag(transcripts: DataFrame) -> DataFrame:
     """Appends ts_sec and lag_sec (null on a conversation's first turn).
     The lag window shuffles once on conv_id; the encoders are
@@ -164,8 +187,12 @@ def _with_lag(transcripts: DataFrame) -> DataFrame:
     ).withColumn("lag_sec", F.col("ts_sec") - F.lag("ts_sec").over(w))
 
 
+# the cell builder's argument columns, in its parameter order
+CELL_INPUTS = ("dow", "hour", "role", "tool", "_toks", "lag_sec")
+
+
 def _cell_inputs() -> list:
-    """The cell builder's argument columns, in its parameter order."""
+    """The expressions of ``CELL_INPUTS``."""
     return [
         # ISO day-of-week, Monday=bit 0 — matches the reference's
         # getDayOfWeek().getValue()-1 (enc/APMFragmentIntent.java:752-777)
@@ -209,13 +236,12 @@ def with_turn_scalars(
     layout, cells = _cell_builder(vocab, cfg)
     starts = np.asarray([s.offset for s in layout.segments])
     n_seg = len(starts)
-    inputs = ["dow", "hour", "role", "tool", "_toks", "lag_sec"]
     passthrough = ["conv_id", "turn_idx", "tool", "ts", "ts_sec", "cost"]
 
     def encode_batches(batches):
         for b in batches:
             n = b.num_rows
-            r, c, v = cells(*(b.column(k) for k in inputs))
+            r, c, v = cells(*(b.column(k) for k in CELL_INPUTS))
             # zero-width segments hold no cells, so side="right" maps
             # every col to its own segment
             seg = np.searchsorted(starts, c, side="right") - 1
@@ -288,20 +314,7 @@ def with_turn_features(
     ) -> pa.Array:
         n = len(dow)
         r, c, v = cells(dow, hour, role, tool, toks, lag_sec)
-        if sparse:
-            bounds = pa.array(np.searchsorted(r, np.arange(n + 1)), pa.int32())
-            features = pa.StructArray.from_arrays(
-                [
-                    pa.ListArray.from_arrays(bounds, c.astype(np.int32)),
-                    pa.ListArray.from_arrays(bounds, v),
-                ],
-                names=["idx", "val"],
-            )
-        else:
-            mat = np.zeros((n, width), dtype=np.float32)
-            mat[r, c] = v
-            bounds = pa.array(np.arange(n + 1) * width, pa.int32())
-            features = pa.ListArray.from_arrays(bounds, mat.ravel())
+        features = sparse_rows(r, c, v, n) if sparse else dense_rows(r, c, v, n, width)
         return pa.StructArray.from_arrays(
             [features, pa.array(_fingerprint(r, c, v, n))],
             names=["features", "vec_hash"],

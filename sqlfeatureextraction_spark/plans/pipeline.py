@@ -2,20 +2,21 @@
 APMWindowFragmentIntent.main, SURVEY §3.1, re-planned for Spark).
 
 fit:        vocabulary dimension table (driver-side dict, broadcast)
-transform:  sessionize → per-turn vectors → point-in-time window
-            features (merge path), finished per anchor in one pass
+transform:  sessionize → one salted pass that encodes the turns and
+            finishes each anchor's point-in-time window vector
 split:      deterministic per-conversation train/test split
             (reference 0.8 per session, APMWindowFragmentIntent.java:
             506,560-581 — theirs consumes a shared Random; ours hashes
             conv_id so the split is stable under any partitioning)
 
 Shuffle budget of the whole transform: ONE conv_id exchange feeds the
-session and lag windows below the Arrow encoder; the salting stats take
-a narrow conv_id exchange and are broadcast; the (_grp, salt) shuffle of
-the window pass is the only exchange the wide ``features`` array
-crosses — no join-back, no per-anchor aggregate, no broadcast of the
-turn table.  ``split`` and ``write`` add no exchange.  AQE handles
-residual skew; explicit salting handles the hot conversations.
+session and lag windows and the per-conversation salting aggregates
+(Window nodes, no aggregate, broadcast or join); ONE (_grp, salt)
+exchange feeds the window pass, a single Python stage that encodes the
+turns and emits finished rows, so the wide ``features`` array crosses
+no exchange at all.  Nothing is cached.  ``split`` and ``write`` add no
+exchange.  AQE handles residual skew; explicit salting handles the hot
+conversations.
 """
 
 from __future__ import annotations
@@ -29,7 +30,6 @@ from sqlfeatureextraction_spark.config import FeatureConfig
 from sqlfeatureextraction_spark.layout import VectorLayout
 from sqlfeatureextraction_spark.operators.asof_merge import window_features_merge
 from sqlfeatureextraction_spark.operators.sessionize import sessionize
-from sqlfeatureextraction_spark.operators.vectorize import with_turn_features
 from sqlfeatureextraction_spark.vocab import Vocabulary, fit_vocabulary
 
 
@@ -45,29 +45,22 @@ class FeaturePipeline:
         return self
 
     def turn_features(self, transcripts: DataFrame) -> DataFrame:
-        """Sessionized per-turn vectors.  ``sessionize`` runs before the
-        encoder so its window and the lag window share one conv_id
-        exchange below the Arrow encoder, which cannot advertise a
-        partitioning to anything above it."""
-        assert self.vocab is not None, "call fit() first"
-        sess = sessionize(transcripts, gap_s=self.cfg.session_gap_s)
-        vec, self.layout = with_turn_features(sess, self.vocab, self.cfg)
-        return vec
+        """Sessionized turns, not yet encoded: the window pass encodes
+        them after the conv_id exchange of this session window."""
+        return sessionize(transcripts, gap_s=self.cfg.session_gap_s)
 
-    def window_features(self, vec: DataFrame) -> DataFrame:
-        assert self.vocab is not None and self.layout is not None
-        return window_features_merge(vec, self.vocab, self.cfg, self.layout)
+    def window_features(self, turns: DataFrame) -> DataFrame:
+        assert self.vocab is not None and self.layout is not None, (
+            "call fit() first"
+        )
+        return window_features_merge(turns, self.vocab, self.cfg, self.layout)
 
     def transform(self, transcripts: DataFrame) -> DataFrame:
         """Full per-(conv_id, ts_sec) feature table: (conv_id, ts_sec,
         features, session_id, turn_idx, ts, window_features) — the LAST
         turn's features at each distinct epoch second + the trailing
-        window vector, finished by the window pass itself.
-
-        The turn-feature table is cached: it feeds both the salting
-        stats pass and the window pass (at cluster scale: materialize
-        it as a table instead)."""
-        return self.window_features(self.turn_features(transcripts).cache())
+        window vector, encoded and finished by the window pass itself."""
+        return self.window_features(self.turn_features(transcripts))
 
     def split(self, features: DataFrame) -> DataFrame:
         """Deterministic per-conversation split: xxhash64(conv_id)
@@ -89,7 +82,9 @@ class FeaturePipeline:
         rolling, no global sort, no single-reducer row_number."""
         bs = batch_size or self.cfg.batch_size
         (
-            features.sortWithinPartitions("conv_id", "ts")
+            # the planned write sorts each task by the partition column;
+            # led by it, this order is the one that sort keeps
+            features.sortWithinPartitions("split", "conv_id", "ts")
             .write.mode("overwrite")
             .option("maxRecordsPerFile", bs)
             .partitionBy("split")

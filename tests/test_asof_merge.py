@@ -208,7 +208,7 @@ def test_merge_salt_boundary_anchor(spark):
     v = fit_vocabulary(df)
     vec, layout = with_turn_features(df, v, cfg)
     a = window_features_builtin(vec, v, cfg, layout).toPandas()
-    b = window_features_merge(vec, v, cfg, layout).toPandas()
+    b = window_features_merge(df, v, cfg, layout).toPandas()
     _assert_vectors_equal(_by_anchor(a), _by_anchor(b))
     # the anchor at span+10 must include the (span-250, span-100) members:
     # its window vector cannot be all-zero beyond the tool intent bits
@@ -255,27 +255,14 @@ def _edge_transcripts() -> pd.DataFrame:
     return pdf
 
 
-def _dense(f, width: int) -> np.ndarray:
-    """A turn vector from either transport, dense."""
-    if isinstance(f, dict):
-        v = np.zeros(width, dtype=np.float32)
-        v[np.asarray(f["idx"], dtype=np.int64)] = f["val"]
-        return v
-    return np.asarray(f, dtype=np.float32)
-
-
 @pytest.mark.parametrize(
-    "sparse,rows_per_bucket",
-    [(False, 65536), (False, 8), (True, 8)],
-    ids=["dense", "dense-salt8", "sparse-salt8"],
+    "rows_per_bucket", [65536, 8], ids=["dense", "dense-salt8"]
 )
-def test_window_merge_finished_rows_edges(
-    monkeypatch, spark, sparse, rows_per_bucket
-):
-    """window_features_merge's finished anchor rows against the pandas
-    oracle: the window vector, and the last turn's (max turn_idx)
-    features, session_id and turn_idx at each epoch second, with ts
-    from its first turn."""
+def test_window_merge_finished_rows_edges(monkeypatch, spark, rows_per_bucket):
+    """window_features_merge's finished anchor rows, from sessionized
+    raw turns, against the pandas oracle: the window vector, and the
+    last turn's (max turn_idx) features, session_id and turn_idx at
+    each epoch second, with ts from its first turn."""
     from pyspark.sql import types as T
 
     from sqlfeatureextraction_spark.operators.sessionize import sessionize
@@ -296,9 +283,9 @@ def test_window_merge_finished_rows_edges(
     )
     df = spark.createDataFrame(pdf[[f.name for f in schema.fields]], schema)
     v = fit_vocabulary(df)
-    vec, layout = with_turn_features(sessionize(df), v, cfg, sparse=sparse)
+    layout = v.layout(n_grans=len(cfg.granularities_s))
     got = (
-        window_features_merge(vec, v, cfg, layout)
+        window_features_merge(sessionize(df), v, cfg, layout)
         .toPandas()
         .sort_values(["conv_id", "ts_sec"])
         .reset_index(drop=True)
@@ -324,5 +311,5 @@ def test_window_merge_finished_rows_edges(
     assert (got["ts_sec"].to_numpy() == exp["ts_sec"].to_numpy()).all()
     assert (got["turn_idx"].to_numpy() == exp["turn_idx"].to_numpy()).all()
     assert (got["session_id"].to_numpy() == exp["session_id"].to_numpy()).all()
-    feats = np.vstack([_dense(f, layout.width) for f in got["features"]])
+    feats = np.vstack(got["features"].to_numpy())
     assert np.allclose(feats, np.vstack(exp["vector"].to_numpy()))

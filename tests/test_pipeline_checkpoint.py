@@ -11,6 +11,7 @@ from sqlfeatureextraction_spark.audit import audit_member_bound, audit_truncatio
 from sqlfeatureextraction_spark.checkpoint import CheckpointedRun
 from sqlfeatureextraction_spark.config import FeatureConfig
 from sqlfeatureextraction_spark.operators.asof_merge import select_members_salted
+from sqlfeatureextraction_spark.operators.vectorize import with_turn_features
 from sqlfeatureextraction_spark.plans.pipeline import FeaturePipeline
 
 CFG = FeatureConfig()
@@ -49,7 +50,7 @@ def test_split_deterministic_and_ratio(fitted, transcripts_df):
 def test_audit_member_bound(fitted, transcripts_df):
     """Provenance on the salted selector's member rows: every selected
     representative lies inside its anchor's window (ts − W, ts]."""
-    vec = fitted.turn_features(transcripts_df)
+    vec, _ = with_turn_features(transcripts_df, fitted.vocab, CFG)
     members = select_members_salted(vec, CFG).join(
         vec.select(
             "conv_id",

@@ -114,8 +114,7 @@ def test_flagship_no_object_hash_aggregate(plans):
 
 def test_wf_merge_scalar_path_has_no_feature_join(plans):
     # salted selector + scalar finisher: no wide vector, so no
-    # representative-feature join-back and no assembly UDF; the only
-    # joins left are _salted's per-conversation stats joins on conv_id
+    # representative-feature join-back and no assembly UDF
     import re
 
     p = plans["transcript_wf_merge"]
@@ -244,60 +243,113 @@ def _plan_nodes(p: str) -> tuple[list, dict]:
 
 
 def test_deployment_plan_moves_features_once(spark):
-    """FeaturePipeline.split(transform(...)): the wide ``features`` array
-    crosses exactly one exchange, the (_grp, salt) shuffle of the window
-    pass — no join-back, no per-anchor aggregate, no broadcast of the
-    turn table — and the session and lag windows share one conv_id
-    exchange below the Arrow encoder."""
+    """FeaturePipeline.split(transform(...)) is scan → one conv_id
+    exchange → Window nodes → Generate → one (_grp, salt) exchange →
+    one Arrow pass: the turns are encoded inside the pass, so no
+    exchange carries ``features``, and nothing is cached, aggregated or
+    broadcast."""
     pipe, tiny = _tiny_pipeline(spark)
     nodes, detail = _plan_nodes(_explain(pipe.split(pipe.transform(tiny))))
     ids = lambda name: {i for _, n, i in nodes if n == name}  # noqa: E731
+    python = sorted(
+        n for _, n, _ in nodes if "Python" in n or "Arrow" in n or "Pandas" in n
+    )
+    assert python == ["FlatMapGroupsInArrow"], python
+    names = {n for _, n, _ in nodes}
+    for banned in ("InMemoryRelation", "InMemoryTableScan", "BroadcastExchange"):
+        assert banned not in names, banned
+    assert not [n for n in names if "Aggregate" in n], names
 
-    wide = [i for i in ids("Exchange") if "features#" in detail[i]]
-    assert len(wide) == 1, wide
-    assert "hashpartitioning(_grp#" in detail[wide[0]]
-    assert "salt#" in detail[wide[0]].split("hashpartitioning(")[1]
-    assert not [i for i in ids("BroadcastExchange") if "features#" in detail[i]]
-    assert not ids("SortAggregate") and not ids("ObjectHashAggregate")
+    exchanges = ids("Exchange")
+    assert len(exchanges) == 2, exchanges
+    assert not [i for i in exchanges if "features#" in detail[i]]
+    (conv,) = [i for i in exchanges if "hashpartitioning(conv_id#" in detail[i]]
+    (salt,) = [i for i in exchanges if "hashpartitioning(_grp#" in detail[i]]
+    assert "salt#" in detail[salt].split("hashpartitioning(")[1]
 
-    # the encoder's subtree: the nodes printed below it, deeper
-    # indented (the cached subplan is printed once per reader)
-    below = set()
-    for at, (depth, name, _) in enumerate(nodes):
-        if name != "ArrowEvalPython":
-            continue
-        for d, n, i in nodes[at + 1 :]:
-            if d <= depth:
-                break
-            if n == "Exchange":
-                below.add(i)
-    assert len(below) == 1, below
-    assert "hashpartitioning(conv_id#" in detail[below.pop()]
-
-    python = {
-        (n, i) for _, n, i in nodes if "Python" in n or "Arrow" in n or "Pandas" in n
-    }
-    assert sorted(n for n, _ in python) == [
-        "ArrowEvalPython",
-        "FlatMapGroupsInArrow",
-    ], python
+    # the tree is one chain: the conv_id exchange sits below every
+    # Window node, the (_grp, salt) exchange above them and below the
+    # Arrow pass
+    order = [n for _, n, _ in nodes]  # top (the write side) first
+    at = {i: k for k, (_, _, i) in enumerate(nodes)}
+    windows = [k for k, n in enumerate(order) if n == "Window"]
+    assert windows
+    assert order.index("FlatMapGroupsInArrow") < at[salt] < min(windows)
+    assert max(windows) < at[conv]
 
 
 def test_deployment_write_job_budget(spark, tmp_path):
     """Job budget of one cold deployment pass (fit excluded): the jobs
     and SQL executions of write(split(transform(tiny))), counted from
-    the call.  The turn table is cached by transform; it is uncached
-    afterwards so the count never depends on test order."""
+    the call."""
     from conftest import count_actions
 
     pipe, tiny = _tiny_pipeline(spark)
-    try:
-        _, jobs, executions = count_actions(
-            spark,
-            lambda: pipe.write(
-                pipe.split(pipe.transform(tiny)), str(tmp_path / "out")
-            ),
+    _, jobs, executions = count_actions(
+        spark,
+        lambda: pipe.write(pipe.split(pipe.transform(tiny)), str(tmp_path / "out")),
+    )
+    assert (jobs, executions) == (3, 1)
+
+
+def test_refresh_write_job_budget(spark, tmp_path):
+    """Job budget of one cold refresh: the jobs and SQL executions of
+    writing incremental_snapshot_update's output after a one-turn
+    delta on one conversation of a tiny snapshot table."""
+    from conftest import count_actions
+    from pyspark.sql import functions as F
+
+    from sqlfeatureextraction_spark.operators.incremental import (
+        incremental_snapshot_update,
+    )
+    from sqlfeatureextraction_spark.sources import snaptable
+
+    pipe, tiny = _tiny_pipeline(spark)
+    root, base = str(tmp_path / "snap"), str(tmp_path / "base")
+    s0 = snaptable.append(tiny, root)
+    pipe.write(pipe.split(pipe.transform(tiny)), base)
+    delta = (
+        tiny.where(F.col("conv_id") == "conv_000001")
+        .where(F.col("turn_idx") == 0)
+        .select(
+            "conv_id",
+            (F.col("turn_idx") + 1000).alias("turn_idx"),
+            "role",
+            "text",
+            "tool",
+            "duration_ms",
+            (F.col("ts") + F.expr("INTERVAL 1 DAY")).alias("ts"),
         )
-    finally:
-        pipe.turn_features(tiny).unpersist()
-    assert (jobs, executions) == (7, 1)
+    )
+    assert delta.count() == 1
+    snaptable.append(delta, root)
+    old = spark.read.parquet(base)
+    _, jobs, executions = count_actions(
+        spark,
+        lambda: pipe.write(
+            incremental_snapshot_update(
+                spark, root, s0, old, lambda part: pipe.split(pipe.transform(part))
+            ),
+            str(tmp_path / "out"),
+        ),
+    )
+    assert spark.read.parquet(str(tmp_path / "out")).count() > 0
+    assert (jobs, executions) == (5, 1)
+
+
+def test_written_files_sorted_by_conversation_and_time(spark, tmp_path):
+    """Every file FeaturePipeline.write leaves is in (conv_id, ts)
+    order."""
+    import glob
+
+    import pyarrow.parquet as pq
+
+    pipe, tiny = _tiny_pipeline(spark)
+    out = tmp_path / "out"
+    pipe.write(pipe.split(pipe.transform(tiny)), str(out), batch_size=10)
+    files = glob.glob(str(out / "split=*" / "*.parquet"))
+    assert len(files) > 2
+    for path in files:
+        t = pq.read_table(path, columns=["conv_id", "ts"]).to_pandas()
+        keys = list(zip(t["conv_id"], t["ts"]))
+        assert keys == sorted(keys), path
