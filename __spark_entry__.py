@@ -45,19 +45,17 @@ def entry(spark: SparkSession) -> DataFrame:
     """Flagship: end-to-end point-in-time window features over the
     transcript-shaped view of events at sf0.001."""
     from sqlfeatureextraction_spark.config import FeatureConfig
-    from sqlfeatureextraction_spark.operators.pit_window import (
-        window_features_builtin,
+    from sqlfeatureextraction_spark.operators.asof_merge import (
+        window_features_merge,
     )
-    from sqlfeatureextraction_spark.operators.vectorize import with_turn_features
     from sqlfeatureextraction_spark.synth import events_as_transcripts
     from sqlfeatureextraction_spark.vocab import fit_vocabulary
 
     cfg = FeatureConfig()
     tx = events_as_transcripts(spark, "/root/testdata/sf0.001")
     vocab = fit_vocabulary(tx, max_tokens=256)
-    vec, layout = with_turn_features(tx, vocab, cfg)
-    vec = vec.cache()
-    wf = window_features_builtin(vec, vocab, cfg, layout)
+    layout = vocab.layout(n_grans=len(cfg.granularities_s))
+    wf = window_features_merge(tx, vocab, cfg, layout)
     return wf.select("conv_id", "ts", F.size("window_features").alias("width"))
 
 
@@ -70,7 +68,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # and every row hardened this round.  Keep new queries
         # inside the first 50 when they need driver certification.
         "transcript_window_features": windows._q_transcript_window_features,
-        "transcript_wf_merge": windows._q_transcript_wf_merge,
+        "transcript_wf_merge": windows._q_transcript_window_features,
         "pit_window_sum": windows._q_pit_window_sum,
         "sessionize": windows._q_sessionize,
         "asof_join_orders": windows._q_asof_join_orders,

@@ -159,41 +159,33 @@ def _q_backfill_spine(spark, sf_dir):
 
 
 def _q_transcript_window_features(spark, sf_dir):
-    """Flagship pipeline via the built-in window path, projected to
-    oracle-checkable scalars (width / tool-segment sum / vector sum
-    per (conv_id, ts_sec) anchor).
+    """Flagship point-in-time window features over the transcript view
+    of events, projected to oracle-checkable scalars (width, tool-intent
+    bits, per-segment sums and the vector sum per (conv_id, ts_sec)
+    anchor).  The gate rows ``transcript_window_features`` and
+    ``transcript_wf_merge`` both run it.
 
-    Runs with_turn_scalars → the JVM member selector → the scalar
-    finisher — identical output to reducing the dense window vectors
-    (pinned by tests/test_asof_merge.py::test_selectors_and_finishers),
-    with no wide vector payload, no feature join-back and no assembly
-    ArrowEvalPython.  The transcript view is
-    spread (single-row-group scans are effectively serial) and cached
-    ONCE for its three consumers — the vocabulary-fit token job, the
-    role/tool-distinct job and the encode pipeline — so the serial
-    file read happens exactly once per run."""
+    The window engine's member rows (``select_members_salted`` over the
+    raw turns: encode, select and per-segment sums in one salted Arrow
+    pass) reduced by the scalar finisher's JVM sums — equal to reducing
+    the dense window vectors (pinned by
+    tests/test_asof_merge.py::test_selectors_and_finishers).  Nothing
+    is cached: the vocabulary fit and the pass each scan the
+    transcripts."""
     from sqlfeatureextraction_spark.config import FeatureConfig
-    from sqlfeatureextraction_spark.operators.pit_window import (
-        scalar_finish,
-        select_members,
+    from sqlfeatureextraction_spark.operators.asof_merge import (
+        select_members_salted,
     )
-    from sqlfeatureextraction_spark.operators.vectorize import with_turn_scalars
-    from sqlfeatureextraction_spark.scanspread import spread_small_scan
+    from sqlfeatureextraction_spark.operators.pit_window import scalar_finish
     from sqlfeatureextraction_spark.synth import events_as_transcripts
     from sqlfeatureextraction_spark.vocab import fit_vocabulary
 
     cfg = FeatureConfig()
     tx = events_as_transcripts(spark, sf_dir)
-    # spread BY conv_id: the cached InMemoryRelation then advertises
-    # hashpartitioning(conv_id), which the pre-encode lag window
-    # requires — so its Exchange disappears from the plan (one less
-    # full-data shuffle); ~15k convs hash evenly across the cores
-    tx = spread_small_scan(
-        tx, F.col("conv_id")
-    ).cache()  # three consumers: fit tokens, fit role/tool, encode
     vocab = fit_vocabulary(tx, max_tokens=256)
-    vec_s, layout = with_turn_scalars(tx, vocab, cfg)
-    return scalar_finish(select_members(vec_s, cfg), vocab, cfg, layout)
+    layout = vocab.layout(n_grans=len(cfg.granularities_s))
+    members = select_members_salted(tx, vocab, cfg)
+    return scalar_finish(members, vocab, cfg, layout)
 
 
 def _q_tumbling_window_agg(spark, sf_dir):
@@ -241,28 +233,6 @@ def _q_session_stats(spark, sf_dir):
         F.max("ts_sec").alias("end_sec"),
         (F.max("ts_sec") - F.min("ts_sec")).alias("duration_s"),
     )
-
-
-def _q_transcript_wf_merge(spark, sf_dir):
-    """Flagship via the salted pandas member selector and the scalar
-    finisher, projected to the same oracle-checkable scalars (equality
-    of the two selectors' member rows and of the full vectors is
-    additionally pinned by pytest)."""
-    from sqlfeatureextraction_spark.config import FeatureConfig
-    from sqlfeatureextraction_spark.operators.asof_merge import (
-        select_members_salted,
-    )
-    from sqlfeatureextraction_spark.operators.pit_window import scalar_finish
-    from sqlfeatureextraction_spark.operators.vectorize import with_turn_scalars
-    from sqlfeatureextraction_spark.synth import events_as_transcripts
-    from sqlfeatureextraction_spark.vocab import fit_vocabulary
-
-    cfg = FeatureConfig()
-    tx = events_as_transcripts(spark, sf_dir)
-    vocab = fit_vocabulary(tx, max_tokens=256)
-    vec_s, layout = with_turn_scalars(tx, vocab, cfg)
-    members = select_members_salted(vec_s, cfg)
-    return scalar_finish(members, vocab, cfg, layout)
 
 
 def _q_fixed_window_expand(spark, sf_dir):
@@ -335,18 +305,17 @@ def _q_or_combine(spark, sf_dir):
     oracle re-derives from the generating columns (OR popcount =
     |union of member bit sets| per segment)."""
     from sqlfeatureextraction_spark.config import FeatureConfig
-    from sqlfeatureextraction_spark.operators.reorganize import (
+    from sqlfeatureextraction_spark.operators.asof_merge import (
         or_combine_window_features,
     )
-    from sqlfeatureextraction_spark.operators.vectorize import with_turn_features
     from sqlfeatureextraction_spark.synth import events_as_transcripts
     from sqlfeatureextraction_spark.vocab import fit_vocabulary
 
     cfg = FeatureConfig()
     tx = events_as_transcripts(spark, sf_dir)
     vocab = fit_vocabulary(tx, max_tokens=256)
-    vec, layout = with_turn_features(tx, vocab, cfg)
-    wf = or_combine_window_features(vec, cfg)
+    layout = vocab.layout(n_grans=len(cfg.granularities_s))
+    wf = or_combine_window_features(tx, vocab, cfg)
 
     def seg_sum(name):
         s = layout.seg(name)

@@ -10,12 +10,13 @@ high-N efficiency under-reads what separate executors would achieve.
 Phases:
   prepare: replicate the sf events table into a transcripts parquet
            (rep x conversations) at /tmp/scale_input_<rep> (once).
-  measure: per level, subprocess runs fit -> vectorize (cached; the
-           merge path caches the raw turns and encodes inside its
-           window pass) -> point-in-time window features -> count;
-           reps timed after one warm-up run.
+  measure: per level, subprocess runs fit -> cache the raw turns ->
+           point-in-time window features (the window engine's salted
+           pass, which encodes the turns itself) -> count; reps timed
+           after one warm-up run.
 
 Usage: python scripts/scale_bench.py [sf_dir] [rep] [n_lo] [n_hi] [reps]
+       [threads|executors]
 """
 
 from __future__ import annotations
@@ -44,8 +45,7 @@ CHILD = r"""
 import json, os, sys, time
 sys.path.insert(0, os.environ["REPO_ROOT"])
 par, path, reps = int(sys.argv[1]), sys.argv[2], int(sys.argv[3])
-path_name = sys.argv[4] if len(sys.argv) > 4 else "builtin"
-mode = sys.argv[5] if len(sys.argv) > 5 else "threads"
+mode = sys.argv[4] if len(sys.argv) > 4 else "threads"
 
 # the SAME host-noise sentinel bench.py uses — imported, not copied,
 # so the two benches' calibration series stay comparable if it is
@@ -54,8 +54,6 @@ from bench import _calibrate
 from sqlfeatureextraction_spark.session import get_spark
 from sqlfeatureextraction_spark.config import FeatureConfig
 from sqlfeatureextraction_spark.vocab import fit_vocabulary
-from sqlfeatureextraction_spark.operators.vectorize import with_turn_features
-from sqlfeatureextraction_spark.operators.pit_window import window_features_builtin
 from sqlfeatureextraction_spark.operators.asof_merge import window_features_merge
 
 if mode == "executors":
@@ -74,18 +72,14 @@ if mode == "executors":
 else:
     spark = get_spark("scale", parallelism=par, shuffle_partitions=par)
 cfg = FeatureConfig()
-wf = window_features_builtin if path_name == "builtin" else window_features_merge
 
 def job():
     tx = spark.read.parquet(path)
     vocab = fit_vocabulary(tx, max_tokens=256)
-    if path_name == "builtin":
-        turns, layout = with_turn_features(tx, vocab, cfg)
-    else:  # the salted pass encodes the raw turns itself
-        turns, layout = tx, vocab.layout(n_grans=len(cfg.granularities_s))
-    turns = turns.cache()
+    layout = vocab.layout(n_grans=len(cfg.granularities_s))
+    turns = tx.cache()
     try:
-        return wf(turns, vocab, cfg, layout).count()
+        return window_features_merge(turns, vocab, cfg, layout).count()
     finally:
         turns.unpersist(True)
 
@@ -169,9 +163,7 @@ def prepare(sf_dir: str, rep: int) -> str:
     return out
 
 
-def run_level(
-    par: int, path: str, reps: int, path_name: str, mode: str = "threads"
-) -> dict:
+def run_level(par: int, path: str, reps: int, mode: str = "threads") -> dict:
     env = _env()
     if mode == "executors":
         # work happens in the executor JVMs; a 48g driver heap (the
@@ -203,7 +195,6 @@ def run_level(
                 str(par),
                 path,
                 str(reps),
-                path_name,
                 mode,
             ],
             stdout=so,
@@ -266,12 +257,11 @@ def main() -> None:
     n_lo = int(sys.argv[3]) if len(sys.argv) > 3 else 8
     n_hi = int(sys.argv[4]) if len(sys.argv) > 4 else 32
     reps = int(sys.argv[5]) if len(sys.argv) > 5 else 3
-    path_name = sys.argv[6] if len(sys.argv) > 6 else "builtin"
-    mode = sys.argv[7] if len(sys.argv) > 7 else "threads"
+    mode = sys.argv[6] if len(sys.argv) > 6 else "threads"
     label = "executors" if mode == "executors" else "local"
     path = prepare(sf_dir, rep)
-    lo = run_level(n_lo, path, reps, path_name, mode)
-    hi = run_level(n_hi, path, reps, path_name, mode)
+    lo = run_level(n_lo, path, reps, mode)
+    hi = run_level(n_hi, path, reps, mode)
     ratio = n_hi / n_lo
     eff = (hi["rows_per_sec_min"] / lo["rows_per_sec_min"]) / ratio
     eff_med = (hi["rows_per_sec_median"] / lo["rows_per_sec_median"]) / ratio
@@ -279,7 +269,6 @@ def main() -> None:
         "metric": f"scaling efficiency {label}[{n_lo}] -> {label}[{n_hi}]",
         "sf_dir": sf_dir,
         "replication": rep,
-        "path": path_name,
         "mode": mode,
         "lo": lo,
         "hi": hi,

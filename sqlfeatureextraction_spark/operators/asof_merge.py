@@ -1,23 +1,48 @@
-"""Salted Arrow member selection — the hot-key path, and the deployment
-pipeline's whole window stage.
+"""The one trailing-window engine: a salted Arrow pass over raw turns.
 
 Semantics are the reference's (enc/APMWindowFragmentIntent.java:
-266-493): trailing right-closed ``(ts−W, ts]`` window per distinct
-(conv_id, ts); dedupe intent-equal members summing cost; top-K
-entities; top-N members.  Two products share one selection core
-(``_select``: pairs, dedupe, top-K, top-N as numpy index arrays over
-one group's Arrow table):
+266-493, ``processPerQueryWindows``): a trailing right-closed
+``(ts−W, ts]`` window per distinct (conv_id, ts) — membership test at
+:340-347; dedupe intent-equal members summing cost (:306-337); top-K
+entities by cost (:369-374); top-N members per entity (:376-386).  The
+reference re-filters the whole event list per window and re-parses
+every SQL per window; here every turn is encoded once per pass and one
+sort-based selection serves all of its windows.
 
-  * ``select_members_salted`` — member rows from a turn table that
-    carries vec_hash, the contract of the pit_window module docstring
-    (``transcript_wf_merge`` finishes them with ``scalar_finish``);
-  * ``window_features_merge`` — finished anchor rows from raw turns:
-    the turns are encoded inside the pass (the vectorize module's one
-    cell builder and fingerprint) and the window vector is scattered
-    there too, so no turn vector crosses an exchange and no join-back,
-    collect_list or per-anchor aggregate follows.
+The membership rule, the anchor convention and the tie order live in
+``_select`` alone:
 
-Each runs as ONE salted shuffle + ONE grouped Arrow pass:
+  * one anchor per distinct (conv_id, ts_sec) holding an is_anchor row;
+    its ``ts`` is the min-turn_idx row's full-precision timestamp (the
+    reference skips a window whose end equals the previous one,
+    :280-284);
+  * dedupe representative = earliest (ts, turn_idx) member of the
+    intent-equal (tool, vec_hash) group; tools by (summed cost desc,
+    tool asc); members by (cost desc, ts asc, turn_idx asc) — a
+    defined total order (the reference's is JVM-HashMap order, SURVEY
+    §4.4.4).
+
+Three products share one input projection (``_inputs``: ts_sec,
+lag_sec, cost and the cell-builder inputs, below the shuffle), one
+salted shuffle (``_grouped``), one per-group encode step (``_encode``:
+the vectorize module's ``_cell_builder`` cells and ``_fingerprint``
+vec_hash) and that one core:
+
+  * ``select_members_salted`` — one row per SELECTED member,
+    (conv_id, ts_sec, ts, slot_idx, member_idx, tool, rep_turn_idx,
+    s_time … s_lag), the representative's per-segment sums from one
+    ``np.bincount`` over the cells; ``pit_window.scalar_finish``
+    reduces them (the flagship gate rows);
+  * ``window_features_merge`` — finished anchor rows with the dense
+    window vector, scattered from the representatives' cells by
+    ``pit_window.window_scatter`` (the deployment pipeline's window
+    stage);
+  * ``or_combine_window_features`` — the element-wise OR of the
+    window's member vectors (the reference's "merge" combine mode).
+
+No turn vector crosses an exchange in any of them, and no join-back
+or collect_list follows the pass.  Each runs as ONE salted shuffle +
+ONE grouped Arrow pass:
 
   1. adaptive time salting (``_salted``): per-conversation count and
      min/max ts (window aggregates over conv_id) split a conversation
@@ -34,14 +59,20 @@ Each runs as ONE salted shuffle + ONE grouped Arrow pass:
      ``np.lexsort`` + ``np.add.reduceat`` over runs — numpy column ops
      only, no per-row Python and no pandas.
 
-Against the JVM selector it wins on hot, dense windows (one
-conversation holding 100k rows, local[4] on 4 cores: 14.8 s vs 70.9 s,
-scripts/skew_bench.py) and shuffles each input row at most twice (once
-if not replicated).
+History: this pass replaced a JVM selector (a range-frame
+``collect_list`` member listing, a hash dedupe and rank windows) and
+the dense finisher that joined the representatives' vectors back.  On
+a hot key (one conversation holding 100k rows, local[4] on 4 cores,
+``scripts/skew_bench.py``) the salted pass took 14.8 s against the JVM
+selector's 70.9 s; on the normal layout (sf0.1, local[4],
+``bench_extra.py count``, min of 3 reps, 3 runs each) the flagship row
+read 1.91-2.13 s against 3.82-4.23 s and ``or_combine`` 1.70-2.35 s
+against 5.05-5.50 s.
 """
 
 from __future__ import annotations
 
+import dataclasses
 from typing import Iterator, NamedTuple
 
 import numpy as np
@@ -74,13 +105,12 @@ from sqlfeatureextraction_spark.vocab import Vocabulary
 # rows when n fits).
 ROWS_PER_BUCKET = 65536
 
-# turn-table columns the selection core reads
-_SELECT_COLS = ("conv_id", "ts", "ts_sec", "turn_idx", "tool", "cost", "vec_hash")
-
-# Vector floats (turn + window vectors) per output batch of
-# window_features_merge (64 MiB of float32): bounds the dense matrices
-# a worker builds at once
+# Vector floats per output batch of the passes that emit vectors
+# (64 MiB of float32): bounds the dense matrices a worker builds at once
 _BATCH_FLOATS = 1 << 24
+
+# top-K / top-N bound that keeps every tool and every dedupe group
+_UNBOUNDED = np.iinfo(np.int64).max
 
 
 def _salted(turns: DataFrame, cfg: FeatureConfig) -> DataFrame:
@@ -88,8 +118,9 @@ def _salted(turns: DataFrame, cfg: FeatureConfig) -> DataFrame:
 
     A fixed global span is wrong at both ends: tied to the window width
     it shatters sparse long-lived conversations into millions of tiny
-    groups (measured 34× slower than the built-in path at sf0.1); tied
-    to the data span it leaves hot conversations unsplit.  Instead the
+    groups (measured 34× slower than the JVM selector this pass
+    replaced, at sf0.1); tied to the data span it leaves hot
+    conversations unsplit.  Instead the
     span is sized per conversation from its count and min/max ts_sec,
     taken as ``Window.partitionBy("conv_id")`` aggregates:
 
@@ -102,10 +133,9 @@ def _salted(turns: DataFrame, cfg: FeatureConfig) -> DataFrame:
     12% replicated context rows.  Replicated rows carry is_anchor=false
     and emit nothing themselves (the reference's single-thread-per-
     session split, enc/APMFragmentIntent.java:1069-1097, can never split
-    a hot session; this can).  On turns already partitioned by conv_id
-    (the deployment pipeline's sessionized turns) the aggregates reuse
-    that exchange: no aggregate, broadcast or join; otherwise they
-    shuffle the turns once on conv_id."""
+    a hot session; this can).  The aggregates reuse the conv_id
+    exchange below them (``_inputs``' lag window, or ``sessionize``'s):
+    no aggregate, broadcast, join or second conv_id shuffle."""
     w = cfg.window_size_s
     conv = Window.partitionBy("conv_id")
     nb = F.ceil(F.col("_n") / ROWS_PER_BUCKET)
@@ -183,19 +213,19 @@ def _string_rank(col: pa.ChunkedArray) -> np.ndarray:
 
 
 def _select(table: pa.Table, cfg: FeatureConfig) -> Selection:
-    """The member-selection core of both salted passes.
+    """The member-selection core of every product (the membership rule,
+    anchor convention and tie order of the module docstring).
 
     A group is a HASH BUCKET of conversations (× time salt), not a
     single conversation: per-call overhead made one-conv-per-group 10×
-    slower than the builtin path on many small conversations.  All
+    slower than the JVM selector on many small conversations.  All
     conversations in the bucket are processed in ONE vectorized pass
     over a composite timeline: ts′ = ts + conv_code · OFFSET with
     OFFSET > span + 2W, so a single searchsorted serves every
     conversation and windows can never cross conversation boundaries.
 
-    Tie-breaking is the JVM selector's: dedupe representative =
-    earliest (ts, turn_idx) member; tools by (summed cost desc, tool
-    asc); members by (cost desc, ts asc, turn_idx asc)."""
+    Reads conv_id, ts_sec, turn_idx, is_anchor, tool, cost and
+    vec_hash."""
     k, n, win = cfg.top_k_entities, cfg.top_n_members, cfg.window_size_s
     empty = np.zeros(0, dtype=np.int64)
     is_anchor = table["is_anchor"].to_numpy()
@@ -265,54 +295,117 @@ def _select(table: pa.Table, cfg: FeatureConfig) -> Selection:
     )
 
 
-def _grouped(vec: DataFrame, cfg: FeatureConfig):
+def _inputs(turns: DataFrame, *carry: str) -> DataFrame:
+    """The one input projection of every product: raw turns → conv_id,
+    ts, ts_sec, turn_idx, cost, the ``carry`` columns and the cell
+    builder's inputs, computed below the salted shuffle on the conv_id
+    partitioning the lag window takes (``sessionize``'s, when the turns
+    are sessionized)."""
+    return _with_lag(turns).select(
+        "conv_id",
+        "ts",
+        "ts_sec",
+        "turn_idx",
+        _cost().alias("cost"),
+        *carry,
+        *_cell_inputs(),
+    )
+
+
+def _grouped(df: DataFrame, cfg: FeatureConfig):
     """``_salted`` rows grouped by (coarse conversation bucket, salt):
     many conversations per Arrow call (per-call overhead amortized
     ~300×), vectorized inside over the composite timeline; the time
     salt still splits hot conversations."""
-    n_grp = max(vec.sparkSession.sparkContext.defaultParallelism * 4, 8)
+    n_grp = max(df.sparkSession.sparkContext.defaultParallelism * 4, 8)
     return (
-        _salted(vec, cfg)
+        _salted(df, cfg)
         .withColumn("_grp", F.pmod(F.xxhash64("conv_id"), F.lit(n_grp)))
         .groupBy("_grp", "salt")
     )
 
 
-def select_members_salted(vec: DataFrame, cfg: FeatureConfig) -> DataFrame:
-    """Salted member selector: turn table → member rows (the pit_window
-    module docstring's contract), narrow — feature arrays are never
-    selected in.  Stage plan: adaptive time salting (``_salted``, whose
-    window aggregates shuffle the turns on conv_id unless they already
-    are), ONE narrow shuffle into coarse conversation buckets, then
-    ``_select`` emitting ≤ k·n member rows per anchor."""
-    sums = [c for c in TURN_SUMS if c in vec.columns]
+def _encode(batches: Iterator[pa.RecordBatch], cells):
+    """One group's ``_inputs`` rows → (table + vec_hash, cells): the
+    canonical (row, col, val) cells of its turn vectors and their
+    fingerprint."""
+    table = pa.Table.from_batches(list(batches))
+    n = table.num_rows
+    r, c, v = cells(*(table[k].combine_chunks() for k in CELL_INPUTS))
+    table = table.append_column(
+        "vec_hash", pa.array(_fingerprint(r, c, v, n), pa.int64())
+    )
+    return table, (r, c, v)
 
-    def members(table: pa.Table) -> pa.Table:
+
+def _batches(sel: Selection, row_floats: int):
+    """(anchor range, member slice) per output batch: consecutive
+    anchors holding at most ``_BATCH_FLOATS`` vector floats."""
+    per_batch = max(1, _BATCH_FLOATS // row_floats)
+    bounds = np.searchsorted(sel.anchor, np.arange(len(sel.first) + 1))
+    for lo in range(0, len(sel.first), per_batch):
+        hi = min(lo + per_batch, len(sel.first))
+        yield lo, hi, slice(bounds[lo], bounds[hi])
+
+
+def _take(table: pa.Table, name: str, rows: np.ndarray) -> pa.Array:
+    return table[name].take(rows).combine_chunks()
+
+
+def select_members_salted(
+    turns: DataFrame, vocab: Vocabulary, cfg: FeatureConfig
+) -> DataFrame:
+    """Raw turns (conv_id, turn_idx, role, text, tool, duration_ms, ts)
+    → one row per SELECTED member: (conv_id, ts_sec, ts, slot_idx,
+    member_idx, tool, rep_turn_idx, s_time … s_lag).  ``ts`` is the
+    anchor's (min turn_idx at ts_sec), ``tool`` is "" for NULL, and
+    ``s_*`` are the representative turn's per-segment vector sums —
+    exact small integers (0/1 bits and small counts), one
+    ``np.bincount`` over the group's cells."""
+    layout, cells = _cell_builder(vocab, cfg)
+    starts = np.asarray([s.offset for s in layout.segments])
+    n_seg = len(starts)
+
+    def members(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        table, (r, c, v) = _encode(batches, cells)
+        n = table.num_rows
         sel = _select(table, cfg)
+        # zero-width segments hold no cells, so side="right" maps every
+        # col to its own segment
+        seg = np.searchsorted(starts, c, side="right") - 1
+        sums = np.bincount(
+            r * n_seg + seg, weights=v, minlength=n * n_seg
+        ).reshape(n, n_seg)[sel.rep].astype(np.int32)
         at = sel.first[sel.anchor]
-        return pa.table(
-            {
-                "conv_id": table["conv_id"].take(at),
-                "ts_sec": table["ts_sec"].take(at),
-                "ts": table["ts"].take(at),
-                "slot_idx": pa.array(sel.slot, pa.int32()),
-                "member_idx": pa.array(sel.member, pa.int32()),
-                "tool": pc.fill_null(table["tool"].take(sel.rep), ""),
-                "rep_turn_idx": pc.cast(
-                    table["turn_idx"].take(sel.rep), pa.int64()
-                ),
-                **{s: table[s].take(sel.rep) for s in sums},
-            }
+        yield pa.RecordBatch.from_arrays(
+            [
+                _take(table, "conv_id", at),
+                _take(table, "ts_sec", at),
+                _take(table, "ts", at),
+                pa.array(sel.slot, pa.int32()),
+                pa.array(sel.member, pa.int32()),
+                pc.fill_null(_take(table, "tool", sel.rep), ""),
+                pc.cast(_take(table, "turn_idx", sel.rep), pa.int64()),
+                *[pa.array(sums[:, i]) for i in range(n_seg)],
+            ],
+            names=[
+                "conv_id", "ts_sec", "ts", "slot_idx", "member_idx", "tool",
+                "rep_turn_idx", *TURN_SUMS,
+            ],
         )
 
-    ts_type = vec.schema["ts"].dataType.simpleString()
-    member_schema = (
-        f"conv_id string, ts_sec long, ts {ts_type}, slot_idx int,"
-        " member_idx int, tool string, rep_turn_idx long"
-    ) + "".join(f", {s} int" for s in sums)
-    return _grouped(vec.select(*_SELECT_COLS, *sums), cfg).applyInArrow(
-        members, member_schema
+    df = _inputs(turns)
+    schema = T.StructType(
+        [df.schema[c] for c in ("conv_id", "ts_sec", "ts")]
+        + [
+            T.StructField("slot_idx", T.IntegerType()),
+            T.StructField("member_idx", T.IntegerType()),
+            T.StructField("tool", T.StringType()),
+            T.StructField("rep_turn_idx", T.LongType()),
+        ]
+        + [T.StructField(s, T.IntegerType()) for s in TURN_SUMS]
     )
+    return _grouped(df, cfg).applyInArrow(members, schema)
 
 
 def window_features_merge(
@@ -326,53 +419,34 @@ def window_features_merge(
     (conv_id, ts_sec, features, session_id, turn_idx, ts,
     window_features) — ``session_id`` only when the turns have it.
 
-    The whole window stage is one salted pass.  Below the ``(_grp,
-    salt)`` shuffle, on the conv_id partitioning the turns already have
-    (``sessionize``'s) or take here: ts_sec, lag_sec, cost, dow, hour
-    and the tokens, and ``_salted``'s per-conversation aggregates.  Each
-    group's Arrow call then encodes its turns (``_cell_builder`` cells,
-    ``_fingerprint`` vec_hash), runs ``_select`` and ``window_scatter``
-    over the selected representatives' cells.  ``features`` (the
-    anchor's dense turn vector), ``session_id`` and ``turn_idx`` are the
-    anchor's LAST turn at ts_sec (max turn_idx), ``ts`` its first (min
-    turn_idx) — the oracle's and ``dense_finish``'s convention.  No
-    turn vector crosses an exchange.  Output batches hold at most
-    ``_BATCH_FLOATS`` vector floats, so a hot group's dense matrices
-    are built in slices."""
+    Each group's Arrow call encodes its turns, runs ``_select`` and
+    ``window_scatter`` over the selected representatives' cells.
+    ``features`` (the anchor's dense turn vector), ``session_id`` and
+    ``turn_idx`` are the anchor's LAST turn at ts_sec (max turn_idx),
+    ``ts`` its first (min turn_idx) — the oracle's convention.  Output
+    batches hold at most ``_BATCH_FLOATS`` vector floats, so a hot
+    group's dense matrices are built in slices."""
     _, cells = _cell_builder(vocab, cfg)
     carry = [c for c in ("session_id",) if c in turns.columns]
     fill = window_scatter(vocab, cfg, layout)
     width = layout.width
-    per_batch = max(
-        1,
-        _BATCH_FLOATS
-        // (
-            width
-            + window_vector_width(layout, cfg.top_k_entities, cfg.top_n_members)
-        ),
+    row_floats = width + window_vector_width(
+        layout, cfg.top_k_entities, cfg.top_n_members
     )
     out = ["conv_id", "ts_sec", "features", *carry, "turn_idx", "ts"]
 
     def finish(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        table = pa.Table.from_batches(list(batches))
-        n = table.num_rows
-        r, c, v = cells(*(table[k].combine_chunks() for k in CELL_INPUTS))
-        table = table.append_column(
-            "vec_hash", pa.array(_fingerprint(r, c, v, n), pa.int64())
-        )
-        feats = sparse_rows(r, c, v, n)
+        table, (r, c, v) = _encode(batches, cells)
+        feats = sparse_rows(r, c, v, table.num_rows)
         sel = _select(table, cfg)
-        bounds = np.searchsorted(sel.anchor, np.arange(len(sel.first) + 1))
-        for lo in range(0, len(sel.first), per_batch):
-            hi = min(lo + per_batch, len(sel.first))
-            mem = slice(bounds[lo], bounds[hi])
+        for lo, hi, mem in _batches(sel, row_floats):
             rep = sel.rep[mem]
             wf = fill(
                 hi - lo,
                 sel.anchor[mem] - lo,
                 sel.slot[mem],
                 sel.member[mem],
-                table["tool"].take(rep).combine_chunks(),
+                _take(table, "tool", rep),
                 feats.take(rep),
             )
             first, last = sel.first[lo:hi], sel.last[lo:hi]
@@ -388,23 +462,14 @@ def window_features_merge(
                 [
                     own
                     if name == "features"
-                    else table[name].take(first if name == "ts" else last)
-                    .combine_chunks()
+                    else _take(table, name, first if name == "ts" else last)
                     for name in out
                 ]
                 + [wf],
                 names=out + ["window_features"],
             )
 
-    df = _with_lag(turns).select(
-        "conv_id",
-        "ts",
-        "ts_sec",
-        "turn_idx",
-        _cost().alias("cost"),
-        *carry,
-        *_cell_inputs(),
-    )
+    df = _inputs(turns, *carry)
     vector = T.ArrayType(T.FloatType())
     schema = T.StructType(
         [
@@ -414,3 +479,59 @@ def window_features_merge(
         + [T.StructField("window_features", vector)]
     )
     return _grouped(df, cfg).applyInArrow(finish, schema)
+
+
+def or_combine_window_features(
+    turns: DataFrame, vocab: Vocabulary, cfg: FeatureConfig
+) -> DataFrame:
+    """Raw turns → (conv_id, ts, window_features_or): per anchor, the
+    element-wise OR (max) of every member turn vector in the trailing
+    ``(ts−W, ts]`` window — the reference's "merge" combine mode
+    (enc/MinWindowQueryIntent.java:124-153 ``updateMinBitSet``; the
+    declared-but-unimplemented branch at APMWindowFragmentIntent.java:
+    449-451), where the window vector is the OR of the member vectors
+    instead of the concat-and-pad layout.
+
+    OR is idempotent, so only distinct member vectors matter: ``_select``
+    with unbounded top-K / top-N keeps one representative per (tool,
+    vec_hash), and one ``np.maximum.at`` scatter of the representatives'
+    cells per output batch builds the dense vectors."""
+    layout, cells = _cell_builder(vocab, cfg)
+    width = layout.width
+    every = dataclasses.replace(
+        cfg, top_k_entities=_UNBOUNDED, top_n_members=_UNBOUNDED
+    )
+
+    def combine(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        table, (r, c, v) = _encode(batches, cells)
+        feats = sparse_rows(r, c, v, table.num_rows)
+        sel = _select(table, every)
+        for lo, hi, mem in _batches(sel, width):
+            idx, val = feats.take(sel.rep[mem]).flatten()
+            owner = sel.anchor[mem][pc.list_parent_indices(idx).to_numpy()]
+            mat = np.zeros((hi - lo, width), dtype=np.float32)
+            np.maximum.at(
+                mat,
+                (owner - lo, pc.list_flatten(idx).to_numpy()),
+                pc.list_flatten(val).to_numpy(),
+            )
+            first = sel.first[lo:hi]
+            bounds = pa.array(np.arange(hi - lo + 1) * width, pa.int32())
+            yield pa.RecordBatch.from_arrays(
+                [
+                    _take(table, "conv_id", first),
+                    _take(table, "ts", first),
+                    pa.ListArray.from_arrays(bounds, mat.ravel()),
+                ],
+                names=["conv_id", "ts", "window_features_or"],
+            )
+
+    df = _inputs(turns)
+    schema = T.StructType(
+        [
+            df.schema["conv_id"],
+            df.schema["ts"],
+            T.StructField("window_features_or", T.ArrayType(T.FloatType())),
+        ]
+    )
+    return _grouped(df, cfg).applyInArrow(combine, schema)

@@ -1,4 +1,5 @@
-"""W9: session re-organization (lead-chaining) + A4 OR-combine.
+"""W9: session re-organization (lead-chaining) and conversation-tree
+linearization.
 
 reorganize_sessions — reference ``reorganizeSqlList``
 (enc/APMWindowFragmentIntent.java:590-688, exercised by
@@ -18,14 +19,6 @@ pinned to that task).  ``reorganize_sessions_distributed`` below is
 the scale path: the unbounded forward lookup is decomposed into a
 bounded in-bucket search plus a bucket-spine suffix-min, so no task
 ever holds more than one bucket.
-
-or_combine_window_features — reference "merge" combine mode
-(enc/MinWindowQueryIntent.java:124-153 ``updateMinBitSet``; the
-declared-but-unimplemented branch at APMWindowFragmentIntent.java:
-449-451): the window vector is the bitwise OR of all member turn
-vectors instead of the concat-and-pad layout.  Relational member
-pairing is shared with pit_window; the OR itself is one numpy
-``maximum.reduce`` per anchor inside an Arrow UDF.
 """
 
 from __future__ import annotations
@@ -36,11 +29,8 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
-from sqlfeatureextraction_spark.config import FeatureConfig
 from sqlfeatureextraction_spark.operators.iterate import fixed_point
-from sqlfeatureextraction_spark.operators.pit_window import pit_member_pairs
 
 
 def reorganize_sessions(
@@ -322,70 +312,6 @@ def reorganize_sessions_distributed(
         )
         out = out.unionByName(hops)
     return out.select(entity_col, "chain_start_sec", "seq", ts_col)
-
-
-def or_combine_window_features(
-    vec: DataFrame, cfg: FeatureConfig, width: int | None = None
-) -> DataFrame:
-    """(conv_id, ts) → element-wise OR (max) of all member turn vectors
-    in the trailing (ts−W, ts] window.
-
-    OR is idempotent, so only DISTINCT member vectors matter per
-    anchor: memberships are deduped by (conv_id, ts, vec_hash) while
-    still NARROW (8-byte hash, never the ~KB array), and the wide
-    vectors join back once per distinct (conv_id, vec_hash) — the same
-    narrow-structs-then-one-wide-join-back shape as the flagship W8
-    path, instead of shipping the full array once per (anchor, member)
-    pair (mean-window-size amplification).
-
-    Accepts either turn-vector transport format (matching
-    vectorize.with_turn_features): dense ``array<float>`` rows, or
-    sparse ``struct<idx,val>`` rows — sparse input additionally
-    requires ``width`` (the turn layout width) so the OR result can be
-    densified; the output is always the dense array."""
-    is_sparse = isinstance(vec.schema["features"].dataType, T.StructType)
-    if is_sparse and width is None:
-        raise ValueError(
-            "sparse turn vectors require width=layout.width so the OR "
-            "result can be densified"
-        )
-    # the pair stage already carries each member's vec_hash (the one
-    # turn-vector fingerprint), so no second hash and no join-back
-    distinct_members = pit_member_pairs(vec, cfg).select(
-        "conv_id", "ts", F.col("m_vec_hash").alias("vh")
-    ).distinct()
-    reps = vec.select(
-        "conv_id", F.col("vec_hash").alias("vh"), "features"
-    ).dropDuplicates(["conv_id", "vh"])
-    wide = distinct_members.join(reps, ["conv_id", "vh"])
-
-    @F.pandas_udf(T.ArrayType(T.FloatType()))
-    def or_reduce(vlists: pd.Series) -> pd.Series:
-        out = []
-        for vl in vlists.to_numpy():
-            if len(vl) == 0:
-                out.append(np.zeros(0, dtype=np.float32))
-            elif isinstance(vl[0], dict):
-                # sparse struct<idx,val> members: densify + scatter-max
-                # (mirrors pit_window._assemble_udf's dict branch)
-                acc = np.zeros(width, dtype=np.float32)
-                for f in vl:
-                    np.maximum.at(
-                        acc,
-                        np.asarray(f["idx"], dtype=np.int64),
-                        np.asarray(f["val"], dtype=np.float32),
-                    )
-                out.append(acc)
-            else:
-                out.append(np.maximum.reduce(np.vstack(vl)))
-        return pd.Series(out)
-
-    grouped = wide.groupBy("conv_id", "ts").agg(
-        F.collect_list("features").alias("vecs")
-    )
-    return grouped.select(
-        "conv_id", "ts", or_reduce(F.col("vecs")).alias("window_features_or")
-    )
 
 
 def linearize_conversation_tree(

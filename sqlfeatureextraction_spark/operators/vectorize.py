@@ -17,11 +17,12 @@ Spark-first restatement:
     ``index_in`` calls and the rest is numpy segment ops — no per-row
     Python objects anywhere;
   * ONE fingerprint (``_fingerprint``) over those cells defines
-    ``vec_hash``, the window dedupe key, for every encoder;
-  * both encoders are thin Arrow shells over the two:
-    ``with_turn_features`` (one scalar Arrow UDF → dense array or
-    sparse struct<idx,val>) and ``with_turn_scalars`` (one
-    ``mapInArrow`` pass → per-segment sums);
+    ``vec_hash``, the window dedupe key;
+  * ONE encoder shell: ``with_turn_features`` (one scalar Arrow UDF →
+    the dense array and vec_hash).  The window engine
+    (``asof_merge``) runs the same cell builder and fingerprint inside
+    its salted pass, carrying the cells as the sparse ``struct<idx,
+    val>`` transport (``sparse_rows``);
   * the vocabulary rides inside the closure — Spark pickles it once
     per task (equivalent to a broadcast for a dict this small).
 """
@@ -209,73 +210,10 @@ def _cost() -> Column:
     return F.coalesce(F.col("duration_ms"), F.lit(1)).cast("long")
 
 
-_TURN_SCALAR_SCHEMA = (
-    "conv_id string, turn_idx int, tool string, ts {ts}, ts_sec bigint,"
-    " cost bigint, vec_hash bigint, s_time int, s_role int, s_tool int,"
-    " s_bow int, s_lag int"
-)
-
-
-def with_turn_scalars(
-    transcripts: DataFrame,
-    vocab: Vocabulary,
-    cfg: FeatureConfig,
-) -> tuple[DataFrame, VectorLayout]:
-    """Narrow per-turn encoding for scalar-projection consumers: the
-    same cells and vec_hash as ``with_turn_features``, reduced in one
-    ``mapInArrow`` pass to (vec_hash, per-segment sums) — the full
-    vector never leaves the Python worker (guide §2.3: shuffle keys and
-    metadata, not payloads).  The per-segment sums are exact small
-    integers (0/1 bits + small counts), identical to summing the dense
-    float32 vector.
-
-    Output columns: conv_id, turn_idx, tool, ts, ts_sec, cost,
-    vec_hash, s_time, s_role, s_tool, s_bow, s_lag (``ts`` passes
-    through with its input type, so window anchors keep their
-    full-precision timestamp)."""
-    layout, cells = _cell_builder(vocab, cfg)
-    starts = np.asarray([s.offset for s in layout.segments])
-    n_seg = len(starts)
-    passthrough = ["conv_id", "turn_idx", "tool", "ts", "ts_sec", "cost"]
-
-    def encode_batches(batches):
-        for b in batches:
-            n = b.num_rows
-            r, c, v = cells(*(b.column(k) for k in CELL_INPUTS))
-            # zero-width segments hold no cells, so side="right" maps
-            # every col to its own segment
-            seg = np.searchsorted(starts, c, side="right") - 1
-            sums = np.bincount(
-                r * n_seg + seg, weights=v, minlength=n * n_seg
-            ).reshape(n, n_seg).astype(np.int32)
-            yield pa.RecordBatch.from_arrays(
-                [b.column(k) for k in passthrough]
-                + [pa.array(_fingerprint(r, c, v, n), type=pa.int64())]
-                + [pa.array(sums[:, i]) for i in range(n_seg)],
-                names=passthrough
-                + ["vec_hash"]
-                + [f"s_{s.name}" for s in layout.segments],
-            )
-
-    df = _with_lag(transcripts).select(
-        "conv_id",
-        "turn_idx",
-        "ts",
-        "ts_sec",
-        _cost().alias("cost"),
-        *_cell_inputs(),
-    )
-    ts_type = df.schema["ts"].dataType.simpleString()
-    return df.mapInArrow(
-        encode_batches, _TURN_SCALAR_SCHEMA.format(ts=ts_type)
-    ), layout
-
-
 def with_turn_features(
     transcripts: DataFrame,
     vocab: Vocabulary,
     cfg: FeatureConfig,
-    sparse: bool | str = False,
 ) -> tuple[DataFrame, VectorLayout]:
     """Append per-turn feature vectors: ts_sec:long, lag_sec:long (null
     on the first turn), features, cost:long, vec_hash:long.
@@ -284,26 +222,13 @@ def with_turn_features(
     per-partition (no further shuffle).  At scale the input should
     already be bucketed/partitioned by conv_id so this is shuffle-free.
 
-    sparse=False → dense array<float> `features` (the reference's
-    fixed-width format, right for narrow vocabularies; float32 halves
-    the dominant cache/shuffle bytes); sparse=True → the canonical cell
-    set as struct<idx:array<int>, val:array<float>> (idx strictly
-    ascending; ~nonzeros×8 bytes per turn instead of width×4);
-    sparse="auto" → sparse iff the turn width exceeds 1024.  Window
-    paths accept either; full window vectors are bit-identical (pinned
-    by tests).  Both formats come from the same cells, so vec_hash is
-    the same either way."""
+    ``features`` is the dense float32 ``array<float>`` of the layout's
+    width — the reference's fixed-width format; float32 halves the
+    bytes of a double array."""
     layout, cells = _cell_builder(vocab, cfg)
     width = layout.width
-    if sparse == "auto":
-        sparse = width > 1024
-    feature_type = (
-        "struct<idx:array<int>, val:array<float>>"
-        if sparse
-        else "array<float>"
-    )
 
-    @F.arrow_udf(f"struct<features:{feature_type}, vec_hash:bigint>")
+    @F.arrow_udf("struct<features:array<float>, vec_hash:bigint>")
     def encode(
         dow: pa.Array,
         hour: pa.Array,
@@ -314,9 +239,8 @@ def with_turn_features(
     ) -> pa.Array:
         n = len(dow)
         r, c, v = cells(dow, hour, role, tool, toks, lag_sec)
-        features = sparse_rows(r, c, v, n) if sparse else dense_rows(r, c, v, n, width)
         return pa.StructArray.from_arrays(
-            [features, pa.array(_fingerprint(r, c, v, n))],
+            [dense_rows(r, c, v, n, width), pa.array(_fingerprint(r, c, v, n))],
             names=["features", "vec_hash"],
         )
 

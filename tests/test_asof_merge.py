@@ -1,12 +1,10 @@
-"""One pin for every point-in-time window path: both member selectors
-(the JVM ``pit_window.select_members`` and the salted Arrow
-``asof_merge.select_members_salted``) × both finishers, across configs,
-and the salted pass that finishes anchor rows itself
-(``asof_merge.window_features_merge``).
+"""One pin for the window engine (``asof_merge``): its products across
+configs, and its finished anchor rows on edge inputs.
 
-  * the dense finisher's window vectors equal the pandas oracle's;
-  * the scalar finisher equals a numpy reduction of those vectors;
-  * the two selectors emit the same member rows, row for row;
+  * ``window_features_merge``'s window vectors equal the pandas
+    oracle's;
+  * ``scalar_finish`` over ``select_members_salted``'s member rows
+    equals a numpy reduction of the oracle's window vectors;
   * the finished anchor rows equal the oracle's on edge inputs."""
 
 import numpy as np
@@ -22,46 +20,36 @@ from sqlfeatureextraction_spark.operators.asof_merge import (
 )
 from sqlfeatureextraction_spark.operators.pit_window import (
     SCALAR_FIELDS,
-    dense_finish,
     scalar_finish,
-    select_members,
-    window_features_builtin,
-)
-from sqlfeatureextraction_spark.operators.vectorize import (
-    with_turn_features,
-    with_turn_scalars,
 )
 from sqlfeatureextraction_spark.vocab import fit_vocabulary
 
-SELECTORS = {"jvm": select_members, "salted": select_members_salted}
+# the engine's products: finished window vectors, and the scalar
+# finisher over the member rows
+PRODUCTS = ("merge", "salted")
 
-# id → (config, sparse turn-vector transport)
 CONFIGS = {
-    "default": (FeatureConfig(), False),
-    "k2n3": (FeatureConfig(top_k_entities=2, top_n_members=3), False),
+    "default": FeatureConfig(),
+    "k2n3": FeatureConfig(top_k_entities=2, top_n_members=3),
     # W=61s: salting span shrinks, replication kicks in at many edges
-    "w61": (FeatureConfig(window_size_s=61), False),
+    "w61": FeatureConfig(window_size_s=61),
     # every conversation splits into many salt buckets — overlap
     # replication is exercised everywhere (ROWS_PER_BUCKET = 8, set in
     # the test)
-    "salt8": (FeatureConfig(), False),
-    "counts": (FeatureConfig(binary_bow=False), False),
-    # the sparse struct only changes the transport format; the
-    # assembler densifies per representative
-    "sparse": (FeatureConfig(), True),
+    "salt8": FeatureConfig(),
+    "counts": FeatureConfig(binary_bow=False),
 }
 
 
 @pytest.fixture(scope="module")
 def cache():
-    """Results shared by the parametrized cases: oracle vectors per
-    config, member rows per (config, selector)."""
+    """Oracle window vectors per config, shared by the parametrized
+    cases."""
     return {}
 
 
 def _oracle(cache, transcripts_pdf, cfg):
     key = (
-        "oracle",
         cfg.window_size_s,
         cfg.top_k_entities,
         cfg.top_n_members,
@@ -86,16 +74,6 @@ def _oracle(cache, transcripts_pdf, cfg):
 
 def _by_anchor(pdf: pd.DataFrame) -> pd.DataFrame:
     return pdf.sort_values(["conv_id", "ts"]).reset_index(drop=True)
-
-
-def _member_rows(cache, config_id, selector_id, vec_s, cfg) -> pd.DataFrame:
-    key = ("members", config_id, selector_id)
-    if key not in cache:
-        rows = SELECTORS[selector_id](vec_s, cfg).toPandas()
-        cache[key] = rows.sort_values(
-            ["conv_id", "ts_sec", "slot_idx", "member_idx"]
-        ).reset_index(drop=True)
-    return cache[key]
 
 
 def _assert_vectors_equal(got: pd.DataFrame, exp: pd.DataFrame):
@@ -128,50 +106,40 @@ def _reduce(mat: np.ndarray, n_tools: int, cfg, layout) -> dict:
     return {c: v.astype(np.int64) for c, v in out.items()}
 
 
-@pytest.mark.parametrize("selector_id", list(SELECTORS))
+@pytest.mark.parametrize("product", PRODUCTS)
 @pytest.mark.parametrize("config_id", list(CONFIGS))
 def test_selectors_and_finishers(
-    monkeypatch, cache, transcripts_df, transcripts_pdf, config_id, selector_id
+    monkeypatch, cache, transcripts_df, transcripts_pdf, config_id, product
 ):
-    cfg, sparse = CONFIGS[config_id]
+    cfg = CONFIGS[config_id]
     if config_id == "salt8":
         monkeypatch.setattr(asof_merge, "ROWS_PER_BUCKET", 8)
-    select = SELECTORS[selector_id]
     v = fit_vocabulary(transcripts_df)
-    vec, layout = with_turn_features(transcripts_df, v, cfg, sparse=sparse)
+    layout = v.layout(n_grans=len(cfg.granularities_s))
+    exp = _oracle(cache, transcripts_pdf, cfg)
 
-    # dense finisher == the independent pandas oracle
-    dense = _by_anchor(
-        dense_finish(select(vec, cfg), vec, v, cfg, layout).toPandas()
-    )
-    _assert_vectors_equal(dense, _oracle(cache, transcripts_pdf, cfg))
+    if product == "merge":
+        # finished window vectors == the independent pandas oracle
+        got = window_features_merge(transcripts_df, v, cfg, layout)
+        _assert_vectors_equal(_by_anchor(got.toPandas()), exp)
+        return
 
-    # scalar finisher == numpy reduction of the dense vectors
-    vec_s, layout_s = with_turn_scalars(transcripts_df, v, cfg)
+    # scalar finisher over the member rows == numpy reduction of the
+    # oracle's window vectors
     sc = (
-        scalar_finish(select(vec_s, cfg), v, cfg, layout_s)
+        scalar_finish(select_members_salted(transcripts_df, v, cfg), v, cfg, layout)
         .toPandas()
         .sort_values(["conv_id", "ts_sec"])
         .reset_index(drop=True)
     )
     assert list(sc.columns) == ["conv_id", "ts_sec", *SCALAR_FIELDS]
-    assert (sc["conv_id"].to_numpy() == dense["conv_id"].to_numpy()).all()
-    assert (sc["ts_sec"].to_numpy() == dense["ts_sec"].to_numpy()).all()
-    mat = np.vstack(dense["window_features"].to_numpy())
+    exp_ts_sec = pd.to_datetime(exp["ts"]).astype("datetime64[s]").astype("int64")
+    assert (sc["conv_id"].to_numpy() == exp["conv_id"].to_numpy()).all()
+    assert (sc["ts_sec"].to_numpy() == exp_ts_sec.to_numpy()).all()
+    mat = np.vstack(exp["window_features"].to_numpy())
     expect = _reduce(mat, len(v.tools), cfg, layout)
     for col in SCALAR_FIELDS:
         assert np.array_equal(sc[col].to_numpy(), expect[col]), col
-
-    # both selectors emit the same member rows, segment sums included
-    mine = _member_rows(cache, config_id, selector_id, vec_s, cfg)
-    other_id = next(s for s in SELECTORS if s != selector_id)
-    other = _member_rows(cache, config_id, other_id, vec_s, cfg)
-    assert list(mine.columns) == list(other.columns)
-    assert len(mine) == len(other), (len(mine), len(other))
-    for col in mine.columns:
-        assert np.array_equal(
-            mine[col].to_numpy(), other[col].to_numpy()
-        ), col
 
 
 def test_merge_salt_boundary_anchor(spark):
@@ -206,10 +174,12 @@ def test_merge_salt_boundary_anchor(spark):
     )
     df = spark.createDataFrame(pdf[[f.name for f in schema.fields]], schema)
     v = fit_vocabulary(df)
-    vec, layout = with_turn_features(df, v, cfg)
-    a = window_features_builtin(vec, v, cfg, layout).toPandas()
+    layout = v.layout(n_grans=len(cfg.granularities_s))
     b = window_features_merge(df, v, cfg, layout).toPandas()
-    _assert_vectors_equal(_by_anchor(a), _by_anchor(b))
+    tokens, roles, tools = O.fit_vocab(pdf)
+    tv = O.turn_vectors(pdf, tokens, roles, tools)
+    exp = O.window_features(tv, tools, window_s=cfg.window_size_s)
+    _assert_vectors_equal(_by_anchor(b), _by_anchor(exp))
     # the anchor at span+10 must include the (span-250, span-100) members:
     # its window vector cannot be all-zero beyond the tool intent bits
     m = np.vstack(b.sort_values("ts")["window_features"].to_numpy())

@@ -73,20 +73,17 @@ def test_incremental_equals_full_flagship(spark, turns):
     """Same invariant through the real vectorize → window-features
     flagship path (per-conv PIT contract end-to-end)."""
     from sqlfeatureextraction_spark.config import FeatureConfig
-    from sqlfeatureextraction_spark.operators.pit_window import (
-        window_features_builtin,
-    )
-    from sqlfeatureextraction_spark.operators.vectorize import (
-        with_turn_features,
+    from sqlfeatureextraction_spark.operators.asof_merge import (
+        window_features_merge,
     )
     from sqlfeatureextraction_spark.vocab import fit_vocabulary
 
     cfg = FeatureConfig()
     vocab = fit_vocabulary(turns)  # fit ONCE on the full table
+    layout = vocab.layout(n_grans=len(cfg.granularities_s))
 
     def fn(df):
-        vec, layout = with_turn_features(df, vocab, cfg)
-        return window_features_builtin(vec, vocab, cfg, layout).select(
+        return window_features_merge(df, vocab, cfg, layout).select(
             "conv_id",
             "ts",
             F.round(

@@ -11,10 +11,8 @@ from sqlfeatureextraction_spark.operators.multimodal import (
     sample_frames,
     synth_media,
 )
-from sqlfeatureextraction_spark.operators.reorganize import (
-    or_combine_window_features,
-    reorganize_sessions,
-)
+from sqlfeatureextraction_spark.operators import asof_merge
+from sqlfeatureextraction_spark.operators.reorganize import reorganize_sessions
 
 
 # -------------------------------------------------------------- multimodal
@@ -290,20 +288,15 @@ def test_reorganize_distributed_long_entity_and_cache_cleanup(spark):
 # ----------------------------------------------------------- A4 OR-combine
 
 
-def test_or_combine_matches_oracle(transcripts_df, transcripts_pdf):
+def test_or_combine_matches_oracle(monkeypatch, transcripts_df, transcripts_pdf):
+    """The window engine's OR product equals the per-anchor OR of the
+    oracle's member vectors — also when every conversation splits into
+    salt buckets and replicated context rows reach the OR."""
     from oracle import pandas_oracle as O
-    from sqlfeatureextraction_spark.operators.vectorize import with_turn_features
     from sqlfeatureextraction_spark.vocab import fit_vocabulary
 
     cfg = FeatureConfig()
     v = fit_vocabulary(transcripts_df)
-    vec, layout = with_turn_features(transcripts_df, v, cfg)
-    got = (
-        or_combine_window_features(vec, cfg)
-        .toPandas()
-        .sort_values(["conv_id", "ts"])
-        .reset_index(drop=True)
-    )
 
     tokens, roles, tools = O.fit_vocab(transcripts_pdf)
     tv = O.turn_vectors(transcripts_pdf, tokens, roles, tools)
@@ -323,42 +316,21 @@ def test_or_combine_matches_oracle(transcripts_df, transcripts_pdf):
     exp = pd.DataFrame(exp_rows).sort_values(["conv_id", "ts_sec"]).reset_index(
         drop=True
     )
-    assert len(got) == len(exp)
-    gm = np.vstack(got["window_features_or"].to_numpy())
     em = np.vstack(exp["v"].to_numpy())
-    assert np.allclose(gm, em)
 
-
-def test_or_combine_sparse_equals_dense(transcripts_df):
-    """Sparse struct<idx,val> turn vectors through or_combine must
-    yield the same dense OR vectors as the dense transport (the
-    ADVICE-flagged crash path)."""
-    import pytest
-
-    from sqlfeatureextraction_spark.operators.vectorize import with_turn_features
-    from sqlfeatureextraction_spark.vocab import fit_vocabulary
-
-    cfg = FeatureConfig()
-    v = fit_vocabulary(transcripts_df)
-    vec_d, layout = with_turn_features(transcripts_df, v, cfg)
-    vec_s, _ = with_turn_features(transcripts_df, v, cfg, sparse=True)
-
-    with pytest.raises(ValueError, match="width"):
-        or_combine_window_features(vec_s, cfg)
-
-    got_d = (
-        or_combine_window_features(vec_d, cfg)
-        .toPandas()
-        .sort_values(["conv_id", "ts"])
-        .reset_index(drop=True)
-    )
-    got_s = (
-        or_combine_window_features(vec_s, cfg, width=layout.width)
-        .toPandas()
-        .sort_values(["conv_id", "ts"])
-        .reset_index(drop=True)
-    )
-    assert len(got_d) == len(got_s)
-    dm = np.vstack(got_d["window_features_or"].to_numpy())
-    sm = np.vstack(got_s["window_features_or"].to_numpy())
-    assert np.array_equal(dm, sm)
+    n_turns = transcripts_df.count()
+    for rows_per_bucket in (asof_merge.ROWS_PER_BUCKET, 8):
+        monkeypatch.setattr(asof_merge, "ROWS_PER_BUCKET", rows_per_bucket)
+        salted = asof_merge._salted(asof_merge._inputs(transcripts_df), cfg)
+        # 8 rows per bucket replicates context rows; the default none
+        assert (salted.count() > n_turns) == (rows_per_bucket == 8)
+        got = (
+            asof_merge.or_combine_window_features(transcripts_df, v, cfg)
+            .toPandas()
+            .sort_values(["conv_id", "ts"])
+            .reset_index(drop=True)
+        )
+        assert len(got) == len(exp), rows_per_bucket
+        assert (got["conv_id"] == exp["conv_id"]).all()
+        gm = np.vstack(got["window_features_or"].to_numpy())
+        assert np.array_equal(gm, em), rows_per_bucket

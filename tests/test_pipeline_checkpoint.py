@@ -11,7 +11,6 @@ from sqlfeatureextraction_spark.audit import audit_member_bound, audit_truncatio
 from sqlfeatureextraction_spark.checkpoint import CheckpointedRun
 from sqlfeatureextraction_spark.config import FeatureConfig
 from sqlfeatureextraction_spark.operators.asof_merge import select_members_salted
-from sqlfeatureextraction_spark.operators.vectorize import with_turn_features
 from sqlfeatureextraction_spark.plans.pipeline import FeaturePipeline
 
 CFG = FeatureConfig()
@@ -48,14 +47,13 @@ def test_split_deterministic_and_ratio(fitted, transcripts_df):
 
 
 def test_audit_member_bound(fitted, transcripts_df):
-    """Provenance on the salted selector's member rows: every selected
+    """Provenance on the window engine's member rows: every selected
     representative lies inside its anchor's window (ts − W, ts]."""
-    vec, _ = with_turn_features(transcripts_df, fitted.vocab, CFG)
-    members = select_members_salted(vec, CFG).join(
-        vec.select(
+    members = select_members_salted(transcripts_df, fitted.vocab, CFG).join(
+        transcripts_df.select(
             "conv_id",
             F.col("turn_idx").cast("long").alias("rep_turn_idx"),
-            F.col("ts_sec").alias("m_ts_sec"),
+            F.col("ts").cast("timestamp").cast("long").alias("m_ts_sec"),
         ),
         ["conv_id", "rep_turn_idx"],
     )

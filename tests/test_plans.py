@@ -61,48 +61,59 @@ def test_no_cartesian_product_anywhere(plans):
 
 
 def test_flagship_plan_shape(plans):
-    # r6 narrow scalar pipeline: NO join anywhere (the vocabulary
-    # rides in the encode closure; per-turn segment sums ride in the
-    # member structs, so the old representative-vector join-back is
-    # gone) and EXACTLY ONE Python stage (the MapInArrow encoder —
-    # the matrix-scatter assembler was replaced by JVM integer
-    # aggregation).  Formatted explain repeats each node in the
-    # detail section, so count unique node ids, not substring hits.
+    # every window-engine row is one salted pass that encodes, selects
+    # and finishes inside ONE Python stage (FlatMapGroupsInArrow), with
+    # NO join anywhere (the vocabulary rides in the pass's closure, the
+    # representatives' cells never leave it).  Formatted explain
+    # repeats each node in the detail section, so count unique node
+    # ids, not substring hits.
     import re
 
-    p = plans["transcript_window_features"]
-    for join in ("SortMergeJoin", "BroadcastHashJoin", "ShuffledHashJoin"):
-        assert join not in p, f"flagship regrew a {join}"
-    n_py = len(
-        set(
-            re.findall(
-                r"\((\d+)\) (?:ArrowEvalPython|MapInPandas"
-                r"|FlatMapGroupsInPandas|MapInArrow|PythonMapInArrow)",
-                p,
+    for name in ("transcript_window_features", "transcript_wf_merge", "or_combine"):
+        p = plans[name]
+        for join in ("SortMergeJoin", "BroadcastHashJoin", "ShuffledHashJoin"):
+            assert join not in p, f"{name} regrew a {join}"
+        n_py = len(
+            set(
+                re.findall(
+                    r"\((\d+)\) (?:ArrowEvalPython|MapInPandas"
+                    r"|FlatMapGroupsInPandas|FlatMapGroupsInArrow"
+                    r"|MapInArrow|PythonMapInArrow)",
+                    p,
+                )
             )
         )
-    )
-    assert n_py <= 1, f"flagship has {n_py} Python stages"
-    assert "CartesianProduct" not in p
+        assert n_py == 1, f"{name} has {n_py} Python stages"
+        assert "CartesianProduct" not in p, name
 
 
 def test_flagship_single_conv_exchange(plans):
-    # the audited plan property from VERDICT r2/r3, tightened in r6:
-    # one hashpartition exchange on conv_id feeds the lag window, and
-    # one re-established conv_id exchange after the Python eval node
-    # (which cannot advertise partitioning) feeds window
-    # materialization, dedupe, top-k and top-n — every later
-    # groupBy/window reuses it, no re-shuffle per stage
+    # three exchanges: hashpartitioning(conv_id) feeds the lag window
+    # and the salting's per-conversation aggregates (one sort serves
+    # both), hashpartitioning(_grp, salt) feeds the Arrow pass, and the
+    # scalar finisher's groupBy(conv_id, ts_sec) re-shuffles the member
+    # rows (a Python node cannot advertise partitioning)
     import re
 
-    # main chain: conv_id exchange before the lag window + the
-    # re-established conv_id exchange after MapInArrow.  The cached
-    # scan-spread subplan (single-row-group inputs are spread across
-    # the cores before caching; no-op on real-scale inputs) prints its
-    # own exchange up to twice more in the formatted detail.
     p = plans["transcript_window_features"]
     n_exch = len(set(re.findall(r"\((\d+)\) Exchange", p)))
-    assert n_exch <= 4, f"flagship re-shuffles: {n_exch} exchanges"
+    assert n_exch == 3, f"flagship re-shuffles: {n_exch} exchanges"
+
+
+def test_flagship_builder_leaves_no_cache(spark, tmp_path):
+    """Building the flagship row and reading it leaves the CacheManager
+    as it found it.  The builder reads an events copy that no other
+    test reads, so no earlier cached plan can absorb a new entry."""
+    import shutil
+
+    src = f"{SF_DIR}/events.parquet"
+    copy = shutil.copytree if os.path.isdir(src) else shutil.copy
+    copy(src, tmp_path / "events.parquet")
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    n_cached = cache.numCachedEntries()
+    rows = E.queries()["transcript_window_features"](spark, str(tmp_path))
+    assert rows.count() > 0
+    assert cache.numCachedEntries() == n_cached
 
 
 def test_flagship_no_object_hash_aggregate(plans):
@@ -113,7 +124,7 @@ def test_flagship_no_object_hash_aggregate(plans):
 
 
 def test_wf_merge_scalar_path_has_no_feature_join(plans):
-    # salted selector + scalar finisher: no wide vector, so no
+    # member rows + scalar finisher: no wide vector, so no
     # representative-feature join-back and no assembly UDF
     import re
 

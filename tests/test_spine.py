@@ -11,14 +11,48 @@ from pyspark.sql import types as T
 
 from oracle import pandas_oracle as O
 from sqlfeatureextraction_spark.config import DEFAULT_GRANULARITIES, FeatureConfig
-from sqlfeatureextraction_spark.operators.pit_window import window_features_builtin
+from sqlfeatureextraction_spark.operators import asof_merge
+from sqlfeatureextraction_spark.operators.pit_window import TURN_SUMS
 from sqlfeatureextraction_spark.operators.vectorize import (
+    _cell_builder,
+    sparse_rows,
     with_turn_features,
-    with_turn_scalars,
 )
 from sqlfeatureextraction_spark.vocab import Vocabulary, fit_vocabulary
 
 CFG = FeatureConfig()
+
+
+def _engine_turn_vectors(df, vocab, cfg):
+    """The window engine's own encoding of every turn: its input
+    projection (``asof_merge._inputs``) and per-group encode step
+    (``asof_merge._encode``), emitting the sparse ``struct<idx, val>``
+    transport its passes scatter from, with vec_hash."""
+    import pyarrow as pa
+
+    _, cells = _cell_builder(vocab, cfg)
+
+    def encode(batches):
+        table, (r, c, v) = asof_merge._encode(batches, cells)
+        yield pa.RecordBatch.from_arrays(
+            [table[k].combine_chunks() for k in ("conv_id", "turn_idx", "vec_hash")]
+            + [sparse_rows(r, c, v, table.num_rows)],
+            names=["conv_id", "turn_idx", "vec_hash", "features"],
+        )
+
+    return asof_merge._inputs(df).mapInArrow(
+        encode,
+        "conv_id string, turn_idx int, vec_hash bigint,"
+        " features struct<idx:array<int>, val:array<float>>",
+    )
+
+
+def _encoded(df, vocab, cfg, sparse: bool):
+    """Per-turn vectors from ``with_turn_features`` (dense) or from the
+    window engine's encode step (sparse)."""
+    if sparse:
+        return _engine_turn_vectors(df, vocab, cfg)
+    return with_turn_features(df, vocab, cfg)[0]
 
 
 def test_vocab_fit_matches_oracle(transcripts_df, transcripts_pdf):
@@ -105,12 +139,15 @@ def _assert_vectors_equal(got: pd.DataFrame, exp: pd.DataFrame):
 def test_turn_encoders_match_oracle(
     transcripts_df, transcripts_pdf, sparse, binary_bow, grans
 ):
-    """Every encoder format and config equals the oracle turn vector,
-    exactly.  Non-ascending granularities make the lag bits a non-prefix
-    pattern; counts make duplicate bow cells visible."""
+    """Both encodings of the one cell builder — ``with_turn_features``'
+    dense array and the window engine's sparse transport — equal the
+    oracle turn vector exactly, in every config.  Non-ascending
+    granularities make the lag bits a non-prefix pattern; counts make
+    duplicate bow cells visible."""
     cfg = FeatureConfig(binary_bow=binary_bow, granularities_s=grans)
     v = fit_vocabulary(transcripts_df)
-    vec_df, layout = with_turn_features(transcripts_df, v, cfg, sparse=sparse)
+    layout = v.layout(n_grans=len(grans))
+    vec_df = _encoded(transcripts_df, v, cfg, sparse)
     exp = O.turn_vectors(
         transcripts_pdf,
         *O.fit_vocab(transcripts_pdf),
@@ -122,12 +159,13 @@ def test_turn_encoders_match_oracle(
 
 @pytest.mark.parametrize("sparse", [False, True], ids=["dense", "sparse"])
 def test_turn_encoders_share_vec_hash_on_edge_inputs(spark, sparse):
-    """Edge rows through both encoders: NULL role, NULL tool, "" tool,
+    """Edge rows through both encodings: NULL role, NULL tool, "" tool,
     empty and NULL text, out-of-vocabulary-only text, a timestamp tie
     (lag 0) and first turns (NULL lag).  Every vector equals the
-    oracle's, the scalar encoder's per-segment sums equal the oracle
-    vector's, and both encoders emit the same vec_hash (one
-    fingerprint) for every row."""
+    oracle's, both encodings emit the same vec_hash (one fingerprint)
+    for every row, and every member row of ``select_members_salted``
+    carries the per-segment sums of its representative turn's oracle
+    vector."""
     t0 = datetime(2024, 3, 4, 9, 15)
     rows = [
         # conv, turn, role, text, tool, duration_ms, ts
@@ -158,26 +196,39 @@ def test_turn_encoders_share_vec_hash_on_edge_inputs(spark, sparse):
         roles={"assistant": 0, "user": 1},
         tools={"": 0, "search": 1},
     )
-    for cfg in (FeatureConfig(), FeatureConfig(binary_bow=False)):
+    # the second config's k·n = 6 member slots reach every turn
+    covered = set()
+    for cfg in (
+        FeatureConfig(),
+        FeatureConfig(binary_bow=False, top_k_entities=3, top_n_members=2),
+    ):
+        layout = vocab.layout(n_grans=len(cfg.granularities_s))
         exp = O.turn_vectors(
             pdf, vocab.tokens, vocab.roles, vocab.tools,
             binary_bow=cfg.binary_bow,
         )
         assert exp["lag_sec"].isna().sum() == 2
         assert (exp["lag_sec"] == 0).sum() == 1
-        vec_df, layout = with_turn_features(df, vocab, cfg, sparse=sparse)
-        got = _dense_turn_vectors(vec_df, layout.width)
+        got = _dense_turn_vectors(_encoded(df, vocab, cfg, sparse), layout.width)
         _assert_vectors_equal(got, exp)
+        other = _dense_turn_vectors(
+            _encoded(df, vocab, cfg, not sparse), layout.width
+        )
+        assert (other["vec_hash"] == got["vec_hash"]).all()
 
-        sc, _ = with_turn_scalars(df, vocab, cfg)
-        sc = sc.toPandas().sort_values(["conv_id", "turn_idx"])
-        sc = sc.reset_index(drop=True)
-        assert (sc["vec_hash"] == got["vec_hash"]).all()
-        exp = exp.sort_values(["conv_id", "turn_idx"]).reset_index(drop=True)
-        exp_mat = np.vstack(exp["vector"].to_numpy())
-        for s in layout.segments:
-            seg_sum = exp_mat[:, s.offset : s.offset + s.width].sum(axis=1)
-            assert (sc[f"s_{s.name}"].to_numpy() == seg_sum).all(), s.name
+        members = asof_merge.select_members_salted(df, vocab, cfg).toPandas()
+        sums = {
+            (r.conv_id, r.turn_idx): [
+                r.vector[s.offset : s.offset + s.width].sum()
+                for s in layout.segments
+            ]
+            for r in exp.itertuples()
+        }
+        for m in members.itertuples():
+            want = sums[(m.conv_id, m.rep_turn_idx)]
+            assert [getattr(m, s) for s in TURN_SUMS] == want, m
+            covered.add((m.conv_id, m.rep_turn_idx))
+    assert covered == set(sums)
     # no two edge rows encode the same vector, so no two hashes collide
     assert got["vec_hash"].nunique() == len(got)
 
@@ -202,8 +253,8 @@ def test_layout_widths_pinned(transcripts_df):
 
 def test_window_features_match_oracle(transcripts_df, transcripts_pdf):
     v = fit_vocabulary(transcripts_df)
-    vec_df, layout = with_turn_features(transcripts_df, v, CFG)
-    wf = window_features_builtin(vec_df, v, CFG, layout)
+    layout = v.layout(n_grans=len(CFG.granularities_s))
+    wf = asof_merge.window_features_merge(transcripts_df, v, CFG, layout)
     got = (
         wf.toPandas()
         .sort_values(["conv_id", "ts"])
@@ -231,14 +282,18 @@ def test_zero_leakage_window_features(transcripts_df, transcripts_pdf):
     must be identical when all rows with ts' > ts are removed
     (north-rule zero-leakage invariant)."""
     v = fit_vocabulary(transcripts_df)
-    vec_df, layout = with_turn_features(transcripts_df, v, CFG)
-    full = window_features_builtin(vec_df, v, CFG, layout).toPandas()
+    layout = v.layout(n_grans=len(CFG.granularities_s))
 
+    def window_rows(df):
+        return (
+            asof_merge.window_features_merge(df, v, CFG, layout)
+            .select("conv_id", "ts", "window_features")
+            .toPandas()
+        )
+
+    full = window_rows(transcripts_df)
     cutoff = transcripts_pdf["ts"].quantile(0.5)
-    trunc_pdf = transcripts_pdf[transcripts_pdf["ts"] <= cutoff]
-    trunc_df = transcripts_df.where(f"ts <= timestamp'{cutoff}'")
-    vec_t, _ = with_turn_features(trunc_df, v, CFG)
-    trunc = window_features_builtin(vec_t, v, CFG, layout).toPandas()
+    trunc = window_rows(transcripts_df.where(f"ts <= timestamp'{cutoff}'"))
 
     merged = full.merge(
         trunc, on=["conv_id", "ts"], suffixes=("_full", "_trunc")
